@@ -107,10 +107,6 @@ object Bench {
     // a persisted index built before serving, not per-query work.)
     def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean) = {
       graft.queries.TextOps.invalidatePairCache()
-      // drop the previous query's curation pin (t35/t38 run through the
-      // legacy curate()) so no query measures alongside — or leaves
-      // behind — another query's cached signals frame
-      graft.pipelines.Curation.release(spark)
       val t0 = System.nanoTime()
       // toRdd executes the physical plan with all output columns; a bare
       // count() would let Catalyst prune the final projections and

@@ -26,11 +26,11 @@ import graft.etl.Warehouse
   * graft.queries.TextOps.t34EmbedDedupClusters(spark, dataDir)  // transitive semantic dedup
   * graft.queries.QualityOps.qualityFlagsOf(docsDf)      // keep/drop signals
   * graft.queries.QualityOps.contaminationOf(docsDf)     // eval-set overlap
-  * graft.pipelines.Curation.curate(spark, docsDf, useClusters = true)
+  * graft.pipelines.Curation.curateHandle(docsDf, useClusters = true)  // close() once both outputs are read
   * // multi-signal dedup: embedding pairs join the text pipeline's drop decision
   * val semantic = graft.pipelines.Curation.embeddingDocPairs(
   *   graft.queries.TextOps.t15CosineNearDup(spark, dataDir), vecToDocDf)
-  * graft.pipelines.Curation.curate(spark, docsDf, extraPairs = Some(semantic))
+  * graft.pipelines.Curation.curateHandle(docsDf, extraPairs = Some(semantic))
   * graft.streaming.Sessionize.sessionsBatch(eventsDf)
   * }}}
   */
@@ -51,7 +51,7 @@ object Graft {
       .config("spark.sql.adaptive.enabled", "true")
       // reliable checkpoints (dedup clustering with a checkpoint dir set)
       // are only reclaimed when the cleaner tracks them; without this a
-      // long-lived driver looping curate(useClusters=true) leaks ~2
+      // long-lived driver looping curateHandle(useClusters=true) leaks ~2
       // table-sized checkpoint copies per propagation iteration per batch
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .getOrCreate()

@@ -34,12 +34,6 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // post-query hook: the curation-audit queries (t35/t38) go through
-      // the legacy curate(), whose signals frame stays pinned on the
-      // session until the NEXT curate()/release() — without this, the
-      // last audit's cache would hold executor storage for the rest of
-      // the run. No-op for every other query.
-      graft.pipelines.Curation.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

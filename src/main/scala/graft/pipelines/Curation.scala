@@ -24,32 +24,10 @@ object Curation {
                         maxBandBucket: Int = 1000,
                         maxLmNllMicro: Long = 2000000L)
 
-  // the signals frame each session currently has pinned via the LEGACY
-  // curate(): a per-batch driver calling curate() in a loop holds at most
-  // ONE cached frame (the previous batch's pin is released on the next
-  // call), and release() reclaims the last one. Materialize both outputs
-  // before the next curate()/release() — after that the cached plan
-  // recomputes. Concurrent pipelines on one session should use
-  // [[curateHandle]], which has no global state at all.
-  private val pinned = scala.collection.concurrent.TrieMap.empty[SparkSession, DataFrame]
-
-  /** Unpersist the signals frame cached by the last [[curate]] call.
-    * Also sweeps entries for stopped sessions so per-job-session drivers
-    * that never call release don't accumulate dead references. curate()
-    * is not thread-safe per session (a concurrent call releases the
-    * other's cache); serialize batches per session, or use
-    * [[curateHandle]] for per-call ownership.
-    */
-  def release(spark: SparkSession): Unit = {
-    pinned.remove(spark).foreach(_.unpersist(false))
-    pinned.keys.filter(_.sparkContext.isStopped).foreach(pinned.remove)
-  }
-
   /** Per-call ownership of the run's cached signals frame: `close()` (or
     * try-with-resources) unpersists it once both outputs are
     * materialized. Two concurrent handles on one session each own their
-    * pin — nothing global to race on, unlike the legacy [[curate]]/
-    * [[release]] pair.
+    * pin — there is no global state to race on.
     */
   final class CurationHandle private[pipelines] (
       val curated: DataFrame, val audit: DataFrame,
@@ -98,7 +76,7 @@ object Curation {
     * slice, and the audit is a single aggregate over the tags. The signals
     * frame is cached because three branches reference it (the main flow
     * plus both sides of the near-dup self-join); the corpus is still read
-    * from parquet exactly once. CurationSpec asserts the whole curate →
+    * from parquet exactly once. CurationSpec asserts the whole curateHandle →
     * collect(curated) + collect(audit) sequence runs in ≤ 2 Spark jobs —
     * the round-1 version ran 4 eager count() actions, i.e. ~4 corpus
     * scans per audit row at 100 TB.
@@ -121,20 +99,6 @@ object Curation {
     * naming a quality-dropped doc never pulls a surviving doc down with
     * it. Under `useClusters` the extra edges join the same connected
     * components, so mixed text/embedding chains collapse transitively.
-    */
-  def curate(spark: SparkSession, docs: DataFrame,
-             t: Thresholds = Thresholds(),
-             useClusters: Boolean = false,
-             extraPairs: Option[DataFrame] = None,
-             lmSignal: Option[DataFrame] = None): (DataFrame, DataFrame) = {
-    release(spark) // previous batch's pin, if any
-    val run = curateHandle(docs, t, useClusters, extraPairs, lmSignal)
-    pinned.put(spark, run.signals)
-    (run.curated, run.audit)
-  }
-
-  /** The pipeline with per-call cache ownership — see [[CurationHandle]].
-    * Same outputs as [[curate]]; the caller releases the pin.
     */
   def curateHandle(docs: DataFrame,
                    t: Thresholds = Thresholds(),
@@ -248,13 +212,13 @@ object Curation {
     count(when(col("stage") === "kept", 1)).as("curated_docs"))
 
   /** The multi-signal wiring: map embedding-space near-dup pairs (t15's
-    * (vec_a, vec_b) output) onto document ids, ready for [[curate]]'s
+    * (vec_a, vec_b) output) onto document ids, ready for [[curateHandle]]'s
     * `extraPairs` —
     *
     * {{{
     * val pairs  = TextOps.t15CosineNearDup(spark, dir)     // or t15CosineNearDupOf(embFrame)
     * val extras = Curation.embeddingDocPairs(pairs, vecToDoc) // vecToDoc: (vec_id, doc_id)
-    * Curation.curate(spark, docs, extraPairs = Some(extras))  // paraphrases dedup too
+    * Curation.curateHandle(docs, extraPairs = Some(extras))  // paraphrases dedup too
     * }}}
     *
     * t34 clusters feed the same way — pair each non-canonical member with
@@ -262,7 +226,7 @@ object Curation {
     * .as("vec_a"), col("vec_id").as("vec_b"))`. Pairs whose vec ids have
     * no mapping row drop out (inner joins): an unmapped vector names no
     * document to dedup. Orientation normalization and survivor gating
-    * happen inside curate. Both joins are equi on vec id — the pair side
+    * happen inside curateHandle. Both joins are equi on vec id — the pair side
     * is the dup-involved sliver, so at scale this broadcasts or shuffles
     * the small side, never the corpus.
     */
@@ -278,17 +242,24 @@ object Curation {
   /** The pipeline's audit row as a registered, ORACLE-CHECKED query: the
     * flagship composition (quality → exact dedup → near-dup) at default
     * [[Thresholds]] over the corpus's `documents` table, driver-verified
-    * per round instead of only spec-checked. Uses the legacy [[curate]]
-    * (one pin per session, released on the next call) so repeated Verify/
-    * Bench invocations never accumulate pinned frames.
+    * per round instead of only spec-checked. The audit row is returned
+    * as a local frame ([[auditRowOf]]), so no pin outlives the call.
     */
   def t35CurationAudit(s: SparkSession, dir: String): DataFrame =
-    curate(s, graft.core.Tables.documents(s, dir))._2
+    auditRowOf(s, curateHandle(graft.core.Tables.documents(s, dir)))
+
+  /** Collects `run`'s one-row audit while its signals pin is held, closes
+    * the handle, and returns the row as a local frame — the registered
+    * audit queries own their pin for exactly the call.
+    */
+  private def auditRowOf(s: SparkSession, run: CurationHandle): DataFrame =
+    try s.createDataFrame(java.util.Arrays.asList(run.audit.collect(): _*), run.audit.schema)
+    finally run.close()
 
   /** The staging CTE block shared verbatim by t35/t41's oracles —
     * per-doc quality signals, the min-per-hash exact stage, and the
     * survivor-restricted shingle feed for the near-dup chain. Mirrors
-    * [[withSignals]] + the exact stage of [[curate]] one-to-one.
+    * [[withSignals]] + the exact stage of [[curateHandle]] one-to-one.
     */
   private[pipelines] def stagingSqlCtes(t: Thresholds, extraPairSql: String = "",
                                         preDropsCtes: String = ""): String = {
@@ -363,8 +334,7 @@ object Curation {
     * `embeddings`). A paraphrase chain the text LSH can't see drops in
     * the same audited decision as the text near-dups, and mixed
     * text/embedding chains collapse transitively. Shares the per-(corpus,
-    * dial) cosine pair cache with t15/t34, and the legacy [[curate]] pin
-    * protocol with t35 (released by the Verify/Bench post-query hook).
+    * dial) cosine pair cache with t15/t34, and t35's local audit row.
     */
   def t38CurationMultiSignal(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{TextOps => T}
@@ -374,7 +344,7 @@ object Curation {
     val vecToDoc = graft.core.Tables.embeddings(s, dir)
       .select(col("vec_id"), col("vec_id").as("doc_id"))
     val extras = embeddingDocPairs(vecPairs.select(col("vec_a"), col("vec_b")), vecToDoc)
-    curate(s, docs, useClusters = true, extraPairs = Some(extras))._2
+    auditRowOf(s, curateHandle(docs, useClusters = true, extraPairs = Some(extras)))
   }
 
   /** DuckDB replay of the multi-signal clustered pipeline: t35's staging

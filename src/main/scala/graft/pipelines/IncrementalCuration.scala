@@ -141,26 +141,6 @@ object IncrementalCuration {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
     else df.localCheckpoint()
 
-  /** Dev-only stage-timing sink ([[graft.tools.CurProfile]]): when set,
-    * each EAGER materialization boundary inside [[ingestImpl]] reports
-    * (stage, seconds) — the ingest's cuts and appends are its natural
-    * stage edges, so the decomposition times the production plan itself
-    * rather than a profiler's re-implementation of it (the drift the
-    * round-15 verdict warned against). None in production — the wrap is
-    * then the bare body, no timing, no plan change.
-    */
-  @volatile private[graft] var profileSink: Option[(String, Double) => Unit] = None
-  private def prof[A](name: String)(body: => A): A = profileSink match {
-    case None => body
-    case Some(sink) =>
-      val t0 = System.nanoTime()
-      val r = body
-      // the concurrent appends report from pool threads — serialize the
-      // sink call so a plain collection sink needs no locking of its own
-      sink.synchronized(sink(name, (System.nanoTime() - t0) / 1e9))
-      r
-  }
-
   /** Concurrent dispatch width for [[ingestImpl]]'s three index advances
     * (`SPARK_GRAFT_APPEND_PAR`, specs override via the
     * `graft.append.par` system property). Default 3 — one thread per
@@ -297,7 +277,7 @@ object IncrementalCuration {
     * settled data the exact stage reads — one column-pruned pass),
     * band-index probe for the near-dup stage, then append the batch's
     * exact survivors to both artifacts. Returns (curatedBatch, auditRow)
-    * with the same columns and stage semantics as [[Curation.curate]].
+    * with the same columns and stage semantics as [[Curation.curateHandle]].
     */
   def ingest(wh: Warehouse, batchDocs: DataFrame,
              t: Curation.Thresholds = Curation.Thresholds(),
@@ -447,18 +427,15 @@ object IncrementalCuration {
       // the batch coding is shared by probe and append (the batch's
       // dominant per-vector compute, materialized once)
       val preCoded = e.codedBatch
-      val coded = prof("emb-code")(cut(preCoded))
+      val coded = cut(preCoded)
       // the index probe runs its eager work (pruned-index cut, slice-plan
-      // stats, per-slice materializations) INSIDE this call — the timer
-      // must wrap the call itself, not just the downstream cut: the first
-      // t42 decomposition wrapped only normPairs and 75 % of the ingest
-      // wall went unattributed (the probe hid in construction)
-      val vPairs = prof("emb-probe")(e.incrementPairs(wh, coded))
+      // stats, per-slice materializations) INSIDE this call
+      val vPairs = e.incrementPairs(wh, coded)
       val preNorm = e.docPairsOf(vPairs.select(col("vec_a"), col("vec_b")))
         .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
           greatest(col("doc_a"), col("doc_b")).as("doc_b"))
         .filter(col("doc_a") =!= col("doc_b"))
-      val norm = prof("emb-pairs-norm")(cut(preNorm))
+      val norm = cut(preNorm)
       // (coded, norm, early-releasable): everything but `norm` is done
       // the moment the appends have run — vPairs/preNorm's trees hold
       // the probe's corpus-scale internals (pruned-index + slice cuts),
@@ -511,9 +488,9 @@ object IncrementalCuration {
     val settledHits = broadcast(settled
       .join(broadcast(batchSig.select(col("content_hash")).distinct()),
         Seq("content_hash"), "left_semi"))
-    val staged = prof("signals-exact")(cutT(batchSig
+    val staged = cutT(batchSig
       .join(settledHits.withColumnRenamed("keep_id", "settled_keep"),
-        Seq("content_hash"), "left")))
+        Seq("content_hash"), "left"))
 
     // exact stage against state: a settled hash wins outright (unless it
     // is OUR OWN entry — the replay case); otherwise the batch's minimum
@@ -534,20 +511,13 @@ object IncrementalCuration {
     // index append below — shingle + minhash is the batch's dominant
     // per-doc compute, and running it per consumer doubled it.
     val surv = staged2.filter(col("exact_ok"))
-    val bandedSurv = prof("minhash-band")(
-      cutT(BandIndex.bandedOf(surv.select(col("doc_id"), col("text")))))
+    val bandedSurv = cutT(BandIndex.bandedOf(surv.select(col("doc_id"), col("text"))))
     val pairs = BandIndex.incrementPairsOf(
       BandIndex.banded(wh), bandedSurv, t.maxBandBucket)
       .filter(col("est_jaccard") >= t.nearDupJaccard)
     // evaluated once (inside the drop-set cut); tracking it lets the
     // final sweep release the probe's internal probed-slice pin
     tracked += pairs
-    // profiling mode ONLY: materialize the band-index probe standalone so
-    // the drop-set stage (which re-evaluates it inside its cut) can be
-    // split into probe vs gating/cluster terms — an extra pass that never
-    // runs in production (profileSink is None there)
-    if (profileSink.isDefined)
-      prof("split:band-probe")(pairs.queryExecution.toRdd.count())
     (staged2, surv, bandedSurv, pairs)
     }
     // the embedding signal, index-probed: batch vectors code themselves
@@ -598,23 +568,22 @@ object IncrementalCuration {
     // THIS boundary — at the round-17 3M-vector off-fit advance those
     // were two of the ~74 GB of pinned localCheckpoint blocks that
     // ENOSPC'd the cluster stage (BENCH_R17_OFFFIT.json).
-    val appendTasks: Seq[(String, () => Unit)] = Seq(
-      "split:append-hash" -> (() => graft.queries.Frames.writeNonEmpty(
+    val appendTasks: Seq[() => Unit] = Seq(
+      () => graft.queries.Frames.writeNonEmpty(
         staged2.filter(col("exact_ok") && col("settled_keep").isNull)
           .select(col("content_hash"), col("doc_id").as("keep_id")))(
-        wh.appendLive(HashTable, _))),
-      "split:append-band" -> (() => BandIndex.appendBatchBanded(wh, bandedSurv)),
-      "split:append-emb" -> (() =>
-        emb.zip(codedBatch).foreach { case (e, c) => e.appendCoded(wh, c) }))
-    prof("appends")(wh.withWriterScope("ingest-appends") {
-      if (AppendPar <= 1) appendTasks.foreach { case (n, f) => prof(n)(f()) }
+        wh.appendLive(HashTable, _)),
+      () => BandIndex.appendBatchBanded(wh, bandedSurv),
+      () => emb.zip(codedBatch).foreach { case (e, c) => e.appendCoded(wh, c) })
+    wh.withWriterScope("ingest-appends") {
+      if (AppendPar <= 1) appendTasks.foreach(_())
       else {
         import scala.concurrent.{Await, ExecutionContext, Future}
         val pool = java.util.concurrent.Executors.newFixedThreadPool(
           math.min(AppendPar, appendTasks.size))
         implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
         try Await.result(
-          Future.sequence(appendTasks.map { case (n, f) => Future(prof(n)(f())) }),
+          Future.sequence(appendTasks.map(f => Future(f()))),
           scala.concurrent.duration.Duration.Inf)
         finally {
           // drain FULLY before the writer scope closes: Await rethrows on
@@ -626,7 +595,7 @@ object IncrementalCuration {
           pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
         }
       }
-    })
+    }
     // staged release #1 (the emb-pairs-norm boundary): the appends were
     // the batch coding's last consumer, and the probe's corpus-scale
     // internals (pruned-index cut, slice cuts) have no consumer at all
@@ -672,9 +641,8 @@ object IncrementalCuration {
     // is small.
     // the band-index probe (`pairs`) and the gating joins are lazy and
     // materialize INSIDE this cut — the drop-set stage prices them plus
-    // (clustered) the contracted increment and the state rewrite;
-    // CurProfile splits the band probe out with a standalone count
-    val toDrop = prof("drop-set")(cutT({
+    // (clustered) the contracted increment and the state rewrite
+    val toDrop = cutT({
       if (clustered) {
         // a no-op increment (fully-replayed batch) returns None and the
         // corpus-scale state rewrite is skipped; the Some tree is tracked
@@ -696,7 +664,7 @@ object IncrementalCuration {
       // clustered branch the left side is the corpus-scale state read —
       // scan + map-side probe, no state shuffle
       .join(broadcast(surv.select(col("doc_id"))), Seq("doc_id"), "left_semi")
-      .withColumn("near_dup", lit(true))))
+      .withColumn("near_dup", lit(true)))
     // staged release #2 (the drop-set boundary): the drop set is
     // materialized and batch-survivor-bounded; its inputs — the emb
     // pair cut (`norm`), the band probe's internal pinned slice
@@ -726,8 +694,8 @@ object IncrementalCuration {
       count(when(col("stage") === "kept", 1)).as("curated_docs"))
     // audit-only callers skip the curated materialization entirely — one
     // fewer batch-sized job + pin per lifecycle invocation
-    val curatedOut = if (wantCurated) Some(prof("tag-curated")(cut(curated))) else None
-    val auditOut = prof("tag-audit")(cut(audit))
+    val curatedOut = if (wantCurated) Some(cut(curated)) else None
+    val auditOut = cut(audit)
 
     // outputs are materialized and the appends have run — every consumer
     // of the intermediate cuts is done; the final sweep releases whatever

@@ -146,7 +146,7 @@ object Lsh {
     * the budget affords 2× the round-12 mask count for HALF the total
     * probe volume — and the extra masks are what keep recall on genuine
     * duplicates above the 0.85 bar as codes widen. Measured on
-    * clustered geometry (PairRecallProbe, cos ≥ 0.8 band): the budget's
+    * clustered geometry (SCALE.md round 13, cos ≥ 0.8 band): the budget's
     * dials (12, 4) / (15, 3) recall 0.98 / 0.88, where the 512-budget
     * dials (12, 3) / (15, 2) recall 0.94 / 0.68 — the second decade
     * under 512 fails the bar, and one radius step is worth more recall
@@ -1484,7 +1484,7 @@ object PqModel {
     */
   val RerankDepth = 50
 
-  /** The rerank-depth SCALING LAW, measured (tools/RecallProbe, 20k
+  /** The rerank-depth SCALING LAW, measured (SCALE.md round 11, 20k
     * clustered vectors): recall is governed by depth ÷ probed-candidate
     * count, not by depth alone. At n=2k the default 50 is 5% of the
     * ~1k probed candidates and recall\@5 sits within 0.04 of the coarse

@@ -211,8 +211,8 @@ object BandEmbIndex extends PersistedIndex {
     // of a dedicated count-to-materialize job followed by a stats job —
     // two full passes over the coded rows where one suffices (measured
     // 0.13 s + 0.12 s of t54's 1.22 s sf0.1 wall as separate jobs,
-    // T54Profile; at the 3M-vector off-fit seed each pass scans 27M
-    // coded rows). Guide §1.2: don't compute things twice.
+    // OPTIMIZATION_r18.md §5; at the 3M-vector off-fit seed each pass
+    // scans 27M coded rows). Guide §1.2: don't compute things twice.
     val bc = Frames.lazyCut(codedOf(embSrc, tables, bits))
     pairsImpl(None, bc, bits, radius, maxBucket, BucketPrune.MaxInline,
       TextOps.DialProbeBroadcastMaxBytes, ParFromSession)

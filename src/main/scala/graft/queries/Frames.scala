@@ -56,7 +56,7 @@ object Frames {
     * ZERO fresh rows, and the partitioned write machinery (repartition
     * exchange + commit protocol) is pure fixed cost to append nothing —
     * measured 1.69 s of t46's 2.84 s replay pass at sf0.1 against a
-    * 1.15 s probe (AnnIncProfile, OPTIMIZATION_r18.md). The frame is cut
+    * 1.15 s probe (OPTIMIZATION_r18.md). The frame is cut
     * lazily, so the emptiness probe IS the materializing pass (one job),
     * the write reads the materialized blocks instead of re-running the
     * anti-join (the real-append path gets cheaper too, not just replay),

@@ -2360,17 +2360,22 @@ object TextOps {
     val nPairs = pairs.count()
     // budget telemetry: the contracted-graph edge count IS the term that
     // decides local-vs-distributed, so surface it when it matters —
-    // always past half the budget (a deployment approaching the collect
-    // bound should see it coming), and on demand (SPARK_GRAFT_CC_LOG)
-    // for scale measurement batteries
-    if (nPairs > localMax / 2 || sys.env.contains("SPARK_GRAFT_CC_LOG"))
+    // past half the budget (a deployment approaching the collect bound
+    // should see it coming)
+    if (nPairs > localMax / 2)
       System.err.println(s"[graft.cc] contracted pairs=$nPairs localMax=$localMax " +
         s"path=${if (nPairs <= localMax) "driver-union-find" else "distributed-loop"}")
-    if (nPairs <= localMax)
-      return localComponents(participating, pairs)
+    // the driver union-find collects everything it reads, so the pair
+    // cut has no consumer past it — release it instead of leaving it
+    // pinned for the caller's lifetime
+    if (nPairs <= localMax) {
+      val labels = localComponents(participating, pairs)
+      Frames.release(pairs)
+      return labels
+    }
 
     // Shuffle partitions must track the GRAPH, not the core count — the
-    // capacity-model deployment rule CcProbe measured by failing first
+    // capacity-model deployment rule measured by failing first
     // (BENCH_R16_CC.json: at 400M edges, partitions=cpus=32 put ~25M
     // mirrored rows in every per-task aggregation map and died
     // AGGREGATE_OUT_OF_MEMORY on a 48 GB heap; 200 still died, 400

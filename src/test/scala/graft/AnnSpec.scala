@@ -997,7 +997,7 @@ class AnnSpec extends SparkTestBase {
 
   test("batched PQ serving: 10^4 queries == broadcast reference, no corpus broadcast, coded scan pruned") {
     // the compressed twin of the test above — the shape the round-12
-    // sf10sub corpus-scale run measures (tools/BatchServe, SCALE.md):
+    // sf10sub corpus-scale run measures (BENCH_R13_BATCHSERVE.json, SCALE.md):
     // past the cap the ADC probe must shuffle the query-derived sides,
     // never broadcast the coded lists, and still prune to probed cells
     import graft.queries.PqModel

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.Using
+
 import org.apache.spark.sql.functions._
 
 import graft.functions.{NativeHashes => NH, NativeText => NT, TextFunctions => TF}
@@ -18,19 +20,20 @@ class CurationSpec extends SparkTestBase {
       (5L, "completely different content about spark engines and columnar execution at scale"),
       (6L, Seq.fill(25)("buy now click").mkString(" "))) // looping text: rep_ratio ≈ 0.96
       .toDF("doc_id", "text")
-    val (curated, audit) = Curation.curate(spark, docs)
-    val kept = curated.select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(kept === Set(1L, 5L))
-    val a = audit.collect().head
-    assert(a.getAs[Long]("input_docs") === 6)
-    assert(a.getAs[Long]("dropped_quality") === 2)
-    assert(a.getAs[Long]("dropped_exact_dup") === 1)
-    assert(a.getAs[Long]("dropped_near_dup") === 1)
-    assert(a.getAs[Long]("curated_docs") === 2)
+    Using.resource(Curation.curateHandle(docs)) { run =>
+      val kept = run.curated.select("doc_id").collect().map(_.getLong(0)).toSet
+      assert(kept === Set(1L, 5L))
+      val a = run.audit.collect().head
+      assert(a.getAs[Long]("input_docs") === 6)
+      assert(a.getAs[Long]("dropped_quality") === 2)
+      assert(a.getAs[Long]("dropped_exact_dup") === 1)
+      assert(a.getAs[Long]("dropped_near_dup") === 1)
+      assert(a.getAs[Long]("curated_docs") === 2)
+    }
   }
 
   test("curate() is fully lazy: zero jobs until the caller acts") {
-    // the round-1 pipeline ran 4 eager count() actions inside curate(),
+    // the round-1 pipeline ran 4 eager count() actions inside curation,
     // i.e. ~4 corpus scans per audit row at 100 TB. The audit must derive
     // from the same lazy lineage: building (curated, audit) runs NOTHING,
     // and the caller pays exactly its own actions (AQE then splits those
@@ -39,14 +42,15 @@ class CurationSpec extends SparkTestBase {
     val docs = spark.read.parquet(s"${sf()}/documents.parquet")
     val tracker = spark.sparkContext.statusTracker
     val before = tracker.getJobIdsForGroup(null).length
-    val (curated, audit) = Curation.curate(spark, docs)
-    assert(tracker.getJobIdsForGroup(null).length === before,
-      "curate() must not run eager actions")
-    assert(curated.collect().nonEmpty)
-    assert(audit.collect().length === 1)
+    Using.resource(Curation.curateHandle(docs)) { run =>
+      assert(tracker.getJobIdsForGroup(null).length === before,
+        "curateHandle() must not run eager actions")
+      assert(run.curated.collect().nonEmpty)
+      assert(run.audit.collect().length === 1)
+    }
   }
 
-  /** The LSH candidate structure for three docs, replaying curate()'s
+  /** The LSH candidate structure for three docs, replaying curateHandle()'s
     * stage-3 constants (16-hash sigs, 4×4 bands) — used to SELECT a
     * deterministic fixture below, not to re-test the stage itself.
     */
@@ -89,13 +93,14 @@ class CurationSpec extends SparkTestBase {
     val (ta, tb, tc) = found.get
     val docs = Seq((1L, ta), (2L, tb), (3L, tc)).toDF("doc_id", "text")
 
-    val (curPair, auditPair) = Curation.curate(spark, docs)
-    assert(curPair.select("doc_id").collect().map(_.getLong(0)).toSet === Set(1L, 2L))
-    assert(auditPair.collect().head.getAs[Long]("dropped_near_dup") === 1)
-
-    val (curClust, auditClust) = Curation.curate(spark, docs, useClusters = true)
-    assert(curClust.select("doc_id").collect().map(_.getLong(0)).toSet === Set(1L))
-    assert(auditClust.collect().head.getAs[Long]("dropped_near_dup") === 2)
+    Using.resource(Curation.curateHandle(docs)) { run =>
+      assert(run.curated.select("doc_id").collect().map(_.getLong(0)).toSet === Set(1L, 2L))
+      assert(run.audit.collect().head.getAs[Long]("dropped_near_dup") === 1)
+    }
+    Using.resource(Curation.curateHandle(docs, useClusters = true)) { run =>
+      assert(run.curated.select("doc_id").collect().map(_.getLong(0)).toSet === Set(1L))
+      assert(run.audit.collect().head.getAs[Long]("dropped_near_dup") === 2)
+    }
   }
 
   test("useClusters agrees with pairwise on the simple-pair fixture") {
@@ -104,11 +109,12 @@ class CurationSpec extends SparkTestBase {
       (1L, base), (2L, base), (3L, base + " tonight"),
       (5L, "completely different content about spark engines and columnar execution at scale"))
       .toDF("doc_id", "text")
-    val (curated, audit) = Curation.curate(spark, docs, useClusters = true)
-    assert(curated.select("doc_id").collect().map(_.getLong(0)).toSet === Set(1L, 5L))
-    val a = audit.collect().head
-    assert(a.getAs[Long]("dropped_exact_dup") === 1)
-    assert(a.getAs[Long]("dropped_near_dup") === 1)
+    Using.resource(Curation.curateHandle(docs, useClusters = true)) { run =>
+      assert(run.curated.select("doc_id").collect().map(_.getLong(0)).toSet === Set(1L, 5L))
+      val a = run.audit.collect().head
+      assert(a.getAs[Long]("dropped_exact_dup") === 1)
+      assert(a.getAs[Long]("dropped_near_dup") === 1)
+    }
   }
 
   /** A boilerplate family: n docs sharing a 30-token template plus one
@@ -160,19 +166,19 @@ class CurationSpec extends SparkTestBase {
       (5L, "completely different content about spark engines and columnar execution at scale"))
     val docs = (normal ++ family).toDF("doc_id", "text")
 
-    val uncapped = Curation.curate(spark, docs,
-      Curation.Thresholds(maxBandBucket = 1000))._2.collect().head
+    val uncapped = Using.resource(Curation.curateHandle(docs,
+      Curation.Thresholds(maxBandBucket = 1000)))(_.audit.collect().head)
     assert(uncapped.getAs[Long]("dropped_near_dup") >= n - 5,
       "uncapped: the boilerplate family should near-dedup almost entirely")
 
-    val (curated, audit) = Curation.curate(spark, docs,
-      Curation.Thresholds(maxBandBucket = 20))
-    val kept = curated.select("doc_id").collect().map(_.getLong(0)).toSet
-    val a = audit.collect().head
-    assert(kept === Set(1L, 5L) ++ family.map(_._1),
-      "capped: family fully kept (buckets oversized), normal fixture dedups unchanged")
-    assert(a.getAs[Long]("dropped_near_dup") === 1)   // only doc 3
-    assert(a.getAs[Long]("dropped_exact_dup") === 1)  // only doc 2
+    Using.resource(Curation.curateHandle(docs, Curation.Thresholds(maxBandBucket = 20))) { run =>
+      val kept = run.curated.select("doc_id").collect().map(_.getLong(0)).toSet
+      val a = run.audit.collect().head
+      assert(kept === Set(1L, 5L) ++ family.map(_._1),
+        "capped: family fully kept (buckets oversized), normal fixture dedups unchanged")
+      assert(a.getAs[Long]("dropped_near_dup") === 1)   // only doc 3
+      assert(a.getAs[Long]("dropped_exact_dup") === 1)  // only doc 2
+    }
   }
 
   test("extraPairs: another signal's pairs join the drop decision, survivors-only") {
@@ -194,14 +200,15 @@ class CurationSpec extends SparkTestBase {
     val extras = Seq((5L, 1L), (4L, 5L)).toDF("doc_a", "doc_b")
 
     for (clusters <- Seq(false, true)) {
-      val (curated, audit) = Curation.curate(spark, docs, extraPairs = Some(extras),
-        useClusters = clusters)
-      val kept = curated.select("doc_id").collect().map(_.getLong(0)).toSet
-      assert(kept === Set(1L), s"useClusters=$clusters")
-      val aa = audit.collect().head
-      assert(aa.getAs[Long]("dropped_quality") === 2, s"useClusters=$clusters")
-      assert(aa.getAs[Long]("dropped_exact_dup") === 1, s"useClusters=$clusters")
-      assert(aa.getAs[Long]("dropped_near_dup") === 2, s"useClusters=$clusters") // 3 (text) + 5 (extra)
+      Using.resource(Curation.curateHandle(docs, extraPairs = Some(extras),
+        useClusters = clusters)) { run =>
+        val kept = run.curated.select("doc_id").collect().map(_.getLong(0)).toSet
+        assert(kept === Set(1L), s"useClusters=$clusters")
+        val aa = run.audit.collect().head
+        assert(aa.getAs[Long]("dropped_quality") === 2, s"useClusters=$clusters")
+        assert(aa.getAs[Long]("dropped_exact_dup") === 1, s"useClusters=$clusters")
+        assert(aa.getAs[Long]("dropped_near_dup") === 2, s"useClusters=$clusters") // 3 (text) + 5 (extra)
+      }
     }
   }
 
@@ -209,7 +216,7 @@ class CurationSpec extends SparkTestBase {
     // docs 1 and 2 are PARAPHRASES: same meaning, zero shared 3-shingles,
     // so the text near-dup stage can never pair them (pinned below). Their
     // embeddings are near-identical, so the REAL t15 pipeline pairs their
-    // vectors; embeddingDocPairs maps vec ids to doc ids and curate drops
+    // vectors; embeddingDocPairs maps vec ids to doc ids and curation drops
     // the larger paraphrase — the full embedding→curation contract.
     import graft.queries.{Lsh, TextOps}
     val docs = Seq(
@@ -225,22 +232,24 @@ class CurationSpec extends SparkTestBase {
     val vecToDoc = Seq((101L, 1L), (102L, 2L), (103L, 3L)).toDF("vec_id", "doc_id")
 
     // text-only curation keeps both paraphrases — the gap the extra signal closes
-    val (textOnly, _) = Curation.curate(spark, docs)
-    assert(textOnly.select("doc_id").collect().map(_.getLong(0)).toSet === Set(1L, 2L, 3L))
+    val textOnly = Using.resource(Curation.curateHandle(docs))(
+      _.curated.select("doc_id").collect().map(_.getLong(0)).toSet)
+    assert(textOnly === Set(1L, 2L, 3L))
 
     val pairs = TextOps.t15CosineNearDupOf(emb) // the library's real embedding pass
     val extras = Curation.embeddingDocPairs(pairs, vecToDoc)
     assert(extras.collect().map(r => (r.getLong(0), r.getLong(1))).toSet === Set((1L, 2L)),
       "t15 should pair exactly the paraphrase vectors, mapped to their doc ids")
-    val (curated, audit) = Curation.curate(spark, docs, extraPairs = Some(extras))
-    assert(curated.select("doc_id").collect().map(_.getLong(0)).toSet === Set(1L, 3L))
-    assert(audit.collect().head.getAs[Long]("dropped_near_dup") === 1)
+    Using.resource(Curation.curateHandle(docs, extraPairs = Some(extras))) { run =>
+      assert(run.curated.select("doc_id").collect().map(_.getLong(0)).toSet === Set(1L, 3L))
+      assert(run.audit.collect().head.getAs[Long]("dropped_near_dup") === 1)
+    }
   }
 
   test("curateHandle: interleaved runs each own their pin; close releases it") {
-    // the legacy curate() pins one signals frame per SESSION, so a second
-    // call mid-flight releases the first call's cache; handles own their
-    // pin per CALL — two interleaved sequences (open A, open B,
+    // a pin keyed by SESSION would let a second call mid-flight release
+    // the first call's cache; handles own their pin per CALL — two
+    // interleaved sequences (open A, open B,
     // materialize A, materialize B) must both complete with correct
     // results and live caches
     val base = "the quick brown fox jumps over the lazy dog and keeps running far away"
@@ -252,7 +261,7 @@ class CurationSpec extends SparkTestBase {
       (10L, base + " again"), (11L, base + " again"), (12L, "too short"))
       .toDF("doc_id", "text")
     val hA = Curation.curateHandle(docsA)
-    val hB = Curation.curateHandle(docsB) // legacy semantics would unpin hA here
+    val hB = Curation.curateHandle(docsB) // a per-session pin would unpin hA here
     // BOTH pins are live after the interleaved opens
     assert(hA.signals.storageLevel.useMemory && hB.signals.storageLevel.useMemory)
     try {
@@ -267,14 +276,40 @@ class CurationSpec extends SparkTestBase {
     assert(!hA.signals.storageLevel.useMemory && !hB.signals.storageLevel.useMemory)
   }
 
+  test("t35/t38 audit queries hold no pin past the call; each row equals curateHandle's audit") {
+    import graft.queries.{TextOps => T}
+    val dir = sf()
+    // t38's cosine pair cache is a deliberate per-corpus pin shared with
+    // t15/t34 — warm it first so only the curation's own pin is measured
+    val vecPairs = T.cosineCandidatePairs(spark, dir, T.DialBits, T.DialPairRadius, T.DialEmbCap)
+    vecPairs.count()
+    val docs = graft.core.Tables.documents(spark, dir)
+    val vecToDoc = graft.core.Tables.embeddings(spark, dir)
+      .select(col("vec_id"), col("vec_id").as("doc_id"))
+    val extras = Curation.embeddingDocPairs(vecPairs.select(col("vec_a"), col("vec_b")), vecToDoc)
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val cases = Seq(
+      ("t35", Curation.t35CurationAudit _, () => Curation.curateHandle(docs)),
+      ("t38", Curation.t38CurationMultiSignal _,
+        () => Curation.curateHandle(docs, useClusters = true, extraPairs = Some(extras))))
+    for ((name, query, handle) <- cases) {
+      val before = persisted
+      val row = query(spark, dir).collect()
+      assert((persisted -- before).isEmpty, s"$name left a persisted RDD behind")
+      val expected = Using.resource(handle())(_.audit.collect())
+      assert(row.toSeq === expected.toSeq, name)
+    }
+  }
+
   test("curation over the corpus conserves counts in the audit") {
     val docs = spark.read.parquet(s"${sf()}/documents.parquet")
-    val (curated, audit) = Curation.curate(spark, docs)
-    val a = audit.collect().head
-    assert(a.getAs[Long]("input_docs") ===
-      a.getAs[Long]("dropped_quality") + a.getAs[Long]("dropped_exact_dup") +
-        a.getAs[Long]("dropped_near_dup") + a.getAs[Long]("curated_docs"))
-    assert(curated.count() === a.getAs[Long]("curated_docs"))
-    assert(curated.columns.contains("n_tokens")) // metadata survives
+    Using.resource(Curation.curateHandle(docs)) { run =>
+      val a = run.audit.collect().head
+      assert(a.getAs[Long]("input_docs") ===
+        a.getAs[Long]("dropped_quality") + a.getAs[Long]("dropped_exact_dup") +
+          a.getAs[Long]("dropped_near_dup") + a.getAs[Long]("curated_docs"))
+      assert(run.curated.count() === a.getAs[Long]("curated_docs"))
+      assert(run.curated.columns.contains("n_tokens")) // metadata survives
+    }
   }
 }

@@ -47,7 +47,7 @@ class DedupClusterSpec extends SparkTestBase {
 
   test("ccShufflePartitionsFor tracks the graph, not the core count (round-16 next #5)") {
     import graft.queries.TextOps
-    // the rule CcProbe measured by failing first (BENCH_R16_CC.json):
+    // the rule measured by failing first (BENCH_R16_CC.json):
     // ~1M pairs (2M mirrored rows) per task — 400M edges need 400 tasks
     // on any core count; 32 died AGGREGATE_OUT_OF_MEMORY, 400 completed
     assert(TextOps.ccShufflePartitionsFor(400000000L, 32) === 400)

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.Using
+
 import org.apache.spark.sql.functions._
 
 import graft.pipelines.Curation
@@ -59,17 +61,17 @@ class NgramLmSpec extends SparkTestBase {
     // maxRepRatio lifted: the repeated-phrase fixture deliberately trips
     // the looping-text rule, and this test isolates the LM gate
     val t = Curation.Thresholds(minTokens = 1, maxRepRatio = 1.0, maxLmNllMicro = mid)
-    val (curated, audit) = Curation.curate(spark, docs, t, lmSignal = Some(scored))
-    val kept = curated.select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(kept === Set(1L, 3L),
-      "gate must drop only the doc the LM scored past the threshold")
-    assert(audit.collect().head.getAs[Long]("dropped_quality") === 1)
-    Curation.release(spark)
+    Using.resource(Curation.curateHandle(docs, t, lmSignal = Some(scored))) { run =>
+      val kept = run.curated.select("doc_id").collect().map(_.getLong(0)).toSet
+      assert(kept === Set(1L, 3L),
+        "gate must drop only the doc the LM scored past the threshold")
+      assert(run.audit.collect().head.getAs[Long]("dropped_quality") === 1)
+    }
     // without the signal the same thresholds keep everything — the gate
     // is opt-in, not a behavior change to existing callers
-    val (all, _) = Curation.curate(spark, docs, t)
-    assert(all.select("doc_id").collect().map(_.getLong(0)).toSet === Set(1L, 2L, 3L))
-    Curation.release(spark)
+    val all = Using.resource(Curation.curateHandle(docs, t))(
+      _.curated.select("doc_id").collect().map(_.getLong(0)).toSet)
+    assert(all === Set(1L, 2L, 3L))
   }
 
   test("serving fallback: unseen text scores through continuation then floor, no nulls") {

@@ -21,8 +21,9 @@ import graft.queries.{IvfModel, TextOps}
   *    (OptimizeSkewedJoin cannot split a shuffled-hash BUILD side — the
   *    skewed regime is exactly where the three-way gate's merge branch
   *    earns its place).
-  * The corpus-scale wall ratio (skewed vs uniform) is measured by
-  * `tools/BatchServe skewed` on sf10sub — SCALE.md round-13.
+  * The corpus-scale wall ratio (skewed vs uniform) on sf10sub is recorded
+  * in BENCH_R13_BATCHSERVE.json / BENCH_R14_BATCHSERVE.json — SCALE.md
+  * rounds 13-14.
   */
 class SkewServeSpec extends SparkTestBase {
 

@@ -15,7 +15,8 @@ import graft.pipelines.{ClusterState, Curation, IncrementalCuration}
   * from-scratch rebuild over the whole corpus; (d) state stays
   * O(corpus) and the warehouse's version count stays bounded by the
   * vacuum retention. The sf1.0-scale wall-clock table lives in SCALE.md
-  * (tools/SoakRun); this spec is the semantic contract.
+  * (BENCH_R14_SOAK.json, BENCH_R15_SOAK.json); this spec is the semantic
+  * contract.
   */
 class SoakSpec extends SparkTestBase {
 

@@ -13,20 +13,13 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-# GRAFT_CLASSES lets a measurement battery run from a frozen snapshot of
-# the classes dir, immune to concurrent sbt recompiles.
 # SPARK_DRIVER_MAXRESULT must cover the probe-broadcast budget when a
-# battery raises SPARK_GRAFT_PROBE_BC_MB past ~1 GB: the per-slice
+# run raises SPARK_GRAFT_PROBE_BC_MB past ~1 GB: the per-slice
 # broadcast collects through the driver and is bounded by this cap.
-# SPARK_GRAFT_JAVA_OPTS: extra -D/-X flags for a battery (e.g.
-# -Dspark.cleaner.periodicGC.interval=90s — the round-17 sf300sub seed
-# filled the disk with 56 GB of CLEANABLE shuffle/block litter because a
-# 48 GB driver heap never GC'd in a 5-minute run, so the context cleaner
-# never fired; a forced periodic GC bounds scratch to ~interval of churn).
-exec java $ADD_OPENS ${SPARK_GRAFT_JAVA_OPTS:-} \
+exec java $ADD_OPENS \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
   -Dspark.driver.maxResultSize="${SPARK_DRIVER_MAXRESULT:-1g}" \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -cp "${GRAFT_CLASSES:-target/scala-2.13/classes}:/opt/spark/jars/*" \
+  -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
   "$@"
