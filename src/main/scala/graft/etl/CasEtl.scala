@@ -33,10 +33,9 @@ object CasEtl {
     * ids from overlapping pages usually carry identical content, but an
     * edited resubmission landing in the same fetch with a TIED timestamp
     * must still pick the same winner across runs and partitionings —
-    * break ties by full-row content hash. Shared verbatim by the batch
-    * sync and the streaming ingest so the two paths cannot drift.
+    * break ties by full-row content hash.
     */
-  private[graft] def dedupEarliest(parsed: DataFrame): DataFrame = {
+  private def dedupEarliest(parsed: DataFrame): DataFrame = {
     val contentTiebreak = xxhash64(struct(parsed.columns.map(col): _*))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("zenput_submission_id")
@@ -49,20 +48,17 @@ object CasEtl {
     * etl_sync.py:280-293), then the reference's no-resolvable-location
     * drop (etl_sync.py:211-213, 293-295).
     */
-  private[graft] def locateFresh(wh: Warehouse, fresh: DataFrame, tipo: String): DataFrame = {
+  private def locateFresh(wh: Warehouse, fresh: DataFrame, tipo: String): DataFrame = {
     val located = if (tipo == "seguridad")
       PeriodAssign.inferLocation(fresh, wh.supervisiones("operativas"), wh.sucursales)
     else fresh
     located.filter(col("zenput_location_id").isNotNull)
   }
 
-  /** The master-row construction (T6 score extraction → J7 period interval
-    * join → J6 sucursal lookup → master schema) shared by the batch sync
-    * and the streaming ingest's foreachBatch — one implementation, so a
-    * streamed row is column-for-column what the batch path would have
-    * loaded, period assignment included.
+  /** The master-row construction: T6 score extraction → J7 period
+    * interval join → J6 sucursal lookup → master schema.
     */
-  private[graft] def masterFrom(wh: Warehouse, withLoc: DataFrame, tipo: String): DataFrame = {
+  private def masterFrom(wh: Warehouse, withLoc: DataFrame, tipo: String): DataFrame = {
     val scored = withLoc.withColumn("calificacion_general",
       SubmissionParse.generalScore(col("answers")))
     val assigned = PeriodAssign.assignPeriod(scored, wh.periodos)
@@ -119,7 +115,7 @@ object CasEtl {
     val existing = wh.supervisiones(tipo)
 
     // J8 — dedup against target (etl_sync.py:215-217): only new
-    // submissions, after the shared in-batch earliest-wins dedup.
+    // submissions, after the in-batch earliest-wins dedup.
     val fresh = dedupEarliest(parsedInc)
       .join(existing.select(col("zenput_submission_id")),
         Seq("zenput_submission_id"), "left_anti")
@@ -140,7 +136,7 @@ object CasEtl {
       case None    => parsedIncRaw.count()
     }
 
-    // T6 + J7 + J6 (masterFrom — shared with the streaming ingest)
+    // T6 + J7 + J6 (masterFrom)
     val master = wh.stage(masterFrom(wh, withLoc, tipo))
 
     val nuevos = master.count()

@@ -27,8 +27,7 @@ object Warehouse {
 
   /** Lease freshness window: a lease file older than this is presumed
     * abandoned (crashed writer) and is stolen with a log line. Generous
-    * relative to any maintenance op at test scale; long production
-    * compactions renew via [[Warehouse.renewWriterLease]].
+    * relative to any maintenance op at test scale.
     */
   private[etl] val LeaseTtlMs: Long = 15 * 60 * 1000L
 }
@@ -69,8 +68,7 @@ case class Warehouse(spark: SparkSession, dir: String) {
     * [[Warehouse.OwnerId]] per JVM — compact's internal rewrite,
     * vacuumAll's per-table vacuums). A lease older than
     * [[Warehouse.LeaseTtlMs]] is presumed abandoned by a crashed writer
-    * and stolen with a log line; long operations renew via
-    * [[renewWriterLease]]. Expiry reads the lease file's MTIME, not
+    * and stolen with a log line. Expiry reads the lease file's MTIME, not
     * embedded clocks, so skewed writers disagree by FS granularity, not
     * wall-clock drift.
     */
@@ -124,14 +122,6 @@ case class Warehouse(spark: SparkSession, dir: String) {
       if (leaseInfo().exists(_._1 == Warehouse.OwnerId)) fs.delete(leasePath, false)
     } catch { case _: java.io.IOException => () }
 
-  /** Refresh a held lease's mtime — call from inside a long-running
-    * maintenance op so it is not presumed dead and stolen mid-flight.
-    */
-  def renewWriterLease(): Unit =
-    if (leaseInfo().exists(_._1 == Warehouse.OwnerId))
-      try fs.setTimes(leasePath, System.currentTimeMillis(), -1)
-      catch { case _: java.io.IOException => () }
-
   private def withWriterLease[T](op: String)(body: => T): T = {
     val acquired = acquireWriterLease(op)
     try body finally if (acquired) releaseWriterLease()
@@ -150,17 +140,14 @@ case class Warehouse(spark: SparkSession, dir: String) {
   private[graft] def withWriterScope[T](op: String)(body: => T): T =
     withWriterLease(op)(body)
 
-  /** History generations mirror the data-version scheme: each write lands a
-    * NEW `name.__history.NNNNNN` file (tmp + rename-to-fresh-name — never a
-    * delete in the commit path), readers resolve the newest suffix, and
-    * older generations are swept best-effort AFTER the new one is live. A
-    * crash at any moment leaves at least one intact generation, so the
-    * "absent history ⇒ seed from raw version dirs" upgrade path can no
-    * longer be triggered by a mid-commit crash (which would let stray dirs
-    * from crashed writes into the committed set). The bare `name.__history`
-    * file is the pre-generation layout, read when no suffixed file exists.
-    */
-  private def legacyHistoryPath(name: String) = new Path(dir, s"$name.__history")
+  // History generations mirror the data-version scheme: each write lands a
+  // NEW `name.__history.NNNNNN` file (tmp + rename-to-fresh-name — never a
+  // delete in the commit path), readers resolve the newest suffix, and
+  // older generations are swept best-effort AFTER the new one is live. A
+  // crash at any moment leaves at least one intact generation, so the
+  // "absent history ⇒ seed from raw version dirs" upgrade path can no
+  // longer be triggered by a mid-commit crash (which would let stray dirs
+  // from crashed writes into the committed set).
 
   /** Every numeric history file with its length. A ZERO-LENGTH entry is a
     * CLAIM (create-exclusive placeholder from [[appendHistory]]) whose
@@ -200,11 +187,9 @@ case class Warehouse(spark: SparkSession, dir: String) {
       txt.linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
     }
     historyFiles(name).lastOption.map(_._2) match {
-      case None =>
-        // no generation files: absent legacy file genuinely means "never
-        // written" — the seed-from-version-dirs upgrade path is correct
-        try readFile(legacyHistoryPath(name))
-        catch { case _: java.io.FileNotFoundException => Nil }
+      // no generation files genuinely means "never written" — the
+      // seed-from-version-dirs upgrade path is correct
+      case None => Nil
       case Some(gen) =>
         try readFile(gen)
         catch {
@@ -335,7 +320,6 @@ case class Warehouse(spark: SparkSession, dir: String) {
       }
       // only after the new generation is live: sweep superseded ones
       existing.foreach { case (_, p) => fs.delete(p, false) }
-      if (fs.exists(legacyHistoryPath(name))) fs.delete(legacyHistoryPath(name), false)
     } catch { case _: java.io.IOException => () }
     Some(entries)
   }
@@ -362,7 +346,10 @@ case class Warehouse(spark: SparkSession, dir: String) {
 
   /** The directory currently holding `name`'s data: committed pointer
     * first; else crash recovery (newest version with a `_SUCCESS` marker);
-    * else the flat append-layout directory.
+    * else the flat append-layout directory `dir/name` — where every
+    * append-only CAS table (`supervisiones_*`, `supervision_areas`,
+    * `seguridad_kpis`, `sync_log`) lives, since the daily path never
+    * rewrites them.
     */
   private def resolve(name: String): Path =
     readPointer(name)
@@ -376,7 +363,7 @@ case class Warehouse(spark: SparkSession, dir: String) {
       // every committed rewrite lands a _SUCCESS marker in the version
       // dir — one existence probe answers "is there a committed write
       // here" without listing anything. The per-entry probe below is the
-      // fallback for legacy flat/append dirs (no marker), where on an
+      // fallback for flat append-layout dirs (no marker), where on an
       // object store it costs up to one LIST per col=value subdirectory.
       fs.exists(new Path(p, "_SUCCESS")) ||
         fs.listStatus(p).exists { st =>
@@ -397,24 +384,6 @@ case class Warehouse(spark: SparkSession, dir: String) {
     withWriterLease(s"append:$name") {
       df.write.mode("append").parquet(resolve(name).toString)
     }
-
-  /** Hive-style partitioned append — the 100TB layout for fact tables:
-    * partition masters by periodo_id (or shipdate month) so every
-    * periodo-filtered serving query prunes to one directory, and dynamic
-    * partition pruning handles the dim-join case. PartitioningSpec proves
-    * the scan's PartitionFilters kick in. Partitioned tables are
-    * append-only, so they stay on the flat layout.
-    */
-  def appendPartitioned(name: String, df: DataFrame, cols: String*): Unit =
-    withWriterLease(s"appendPartitioned:$name") {
-      df.write.mode("append").partitionBy(cols: _*).parquet(path(name))
-    }
-
-  /** Read a partitioned table (partition columns come back from the
-    * directory layout, so no explicit schema).
-    */
-  def readPartitioned(name: String): DataFrame =
-    spark.read.parquet(path(name))
 
   /** Append into the directory `name` currently RESOLVES to — for a
     * versioned table, its live version dir — the grow-in-place path for
@@ -480,7 +449,7 @@ case class Warehouse(spark: SparkSession, dir: String) {
     */
   def rewrite(name: String, df: DataFrame, partitionBy: Seq[String] = Nil): Unit = withWriterLease(s"rewrite:$name") {
     // what readers resolved BEFORE this rewrite (pointer, crash-recovered
-    // version, or the legacy flat dir) — the one directory GC must keep
+    // version, or the flat append dir) — the one directory GC must keep
     val prevLive = resolve(name)
     val next = listVersions(name).lastOption.map(_._1).getOrElse(0L) + 1
     val vname = versionName(name, next)
@@ -497,10 +466,7 @@ case class Warehouse(spark: SparkSession, dir: String) {
     // still splits via maxRecordsPerFile rather than stalling a reader
     // on one huge file. Probe-index tables are value-partitioned fine-
     // grained (hundreds to thousands of dirs), so task parallelism
-    // survives the shuffle; high-volume fact appends, where per-task
-    // parallelism INSIDE one partition value matters more than file
-    // count, go through [[appendPartitioned]], which deliberately keeps
-    // the parallel layout.
+    // survives the shuffle.
     val shaped =
       if (partitionBy.nonEmpty) df.repartition(partitionBy.map(df.col): _*) else df
     shaped.write.mode("overwrite")
@@ -554,7 +520,7 @@ case class Warehouse(spark: SparkSession, dir: String) {
   val MaxRecordsPerFile = 5000000L
 
   /** Reclaim all superseded storage for `name` (older versions and the
-    * legacy flat directory). Call when no reader holds a plan resolved
+    * flat append directory). Call when no reader holds a plan resolved
     * before the last rewrite — e.g. between runs. Keeps whatever
     * [[resolve]] currently returns — in the crash window with no pointer,
     * that is the newest complete version, never nothing.
@@ -584,7 +550,6 @@ case class Warehouse(spark: SparkSession, dir: String) {
       // table's in-flight staged increment.
       val pointerTmp = new Path(dir, s"$name.__current.tmp")
       if (fs.exists(pointerTmp)) fs.delete(pointerTmp, false)
-      if (fs.exists(legacyHistoryPath(name))) fs.delete(legacyHistoryPath(name), false)
       if (live.startsWith(s"$name.__v")) appendHistory(name, live, None)
     } catch { case _: java.io.IOException => () }
   }
@@ -619,7 +584,7 @@ case class Warehouse(spark: SparkSession, dir: String) {
         val keep = (committedNames.filterNot(_ == live).takeRight(retainLast) :+ live).toSet
         listVersions(name).foreach { case (_, p) =>
           if (!keep.contains(p.getName)) fs.delete(p, true) }
-        // the legacy flat dir is a generation like any other: reclaim it
+        // the flat append dir is a generation like any other: reclaim it
         // only when neither live nor the retention window still names it
         val flat = new Path(dir, name)
         if (!keep.contains(name) && fs.exists(flat) && fs.getFileStatus(flat).isDirectory)

@@ -28,15 +28,6 @@ object TextFunctions {
   def stopwordCount(toks: Column, stopwords: Seq[String]): Column =
     size(filter(toks, t => t.isInCollection(stopwords)))
 
-  /** Ratio of non [a-z0-9 space] characters to total length (punctuation
-    * density — a standard quality-score feature).
-    */
-  def punctRatio(text: Column): Column = {
-    val len = length(text)
-    when(len === 0, 0.0)
-      .otherwise(length(regexp_replace(lower(text), "[a-z0-9 ]", "")).cast("double") / len)
-  }
-
   /** Order-sensitive rolling polynomial fingerprint of the token sequence,
     * mod 1e9+7. Tokens are pre-reduced mod p so the fold never overflows
     * Long (ANSI mode would raise on overflow).
@@ -64,9 +55,6 @@ object TextFunctions {
     */
   def minhashParamsFor(num: Int): IndexedSeq[(Long, Long)] =
     minhashParams.take(num)
-
-  /** The MinHash family's modulus — public for the oracle-SQL generators. */
-  def minhashP: Long = MinhashP
 
   /** Base hashes for MinHash: each shingle hashed ONCE (xxhash64, reduced
     * mod p). Materialize this as its own column so the per-permutation

@@ -225,49 +225,6 @@ object ClusterState {
       .count()
   }
 
-  /** Structured-Streaming front end over [[ingestBatch]]: maintain the
-    * persisted cluster state from a STREAM of documents — each
-    * micro-batch bands itself, probes the band index, advances the
-    * state and appends its bands, exactly the batch lifecycle.
-    * foreachBatch delivers at-least-once; the lifecycle is replay-safe
-    * at every crash point (idempotent advance + (doc_id, band)-granular
-    * append), so a redelivered micro-batch is a no-op and the pipeline
-    * is EFFECTIVELY exactly-once — the same posture as
-    * [[graft.streaming.StreamingIngest]], applied to dedup state.
-    * Spec drives it with MemoryStream across multiple batches and pins
-    * streamed == full-recluster clusters. `checkpoint`: durable
-    * checkpointLocation for the offsets — without it a NON-REPLAYABLE
-    * source may skip data on restart (delivered-but-uncommitted rows
-    * are safe either way via the idempotent lifecycle); production
-    * sources pass a path.
-    */
-  def maintainFromStream(wh: Warehouse, docs: DataFrame,
-                         checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val w0 = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        ingestBatch(wh, batch.toDF())
-      }
-    checkpoint.fold(w0)(p => w0.option("checkpointLocation", p)).start()
-  }
-
-  /** [[maintainFromStream]] for the BANDED embedding signal: foreachBatch
-    * over [[ingestBandedEmbeddingBatch]] — at-least-once delivery × the
-    * replay-safe banded lifecycle = effectively exactly-once, the same
-    * posture as the text-side stream.
-    */
-  def maintainBandedFromStream(wh: Warehouse, emb: DataFrame,
-                               tables: Int, bits: Int, radius: Int = 1,
-                               maxBucket: Int = TextOps.EmbBucketCap,
-                               checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val w0 = emb.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        ingestBandedEmbeddingBatch(wh, batch.toDF(), tables, bits, radius, maxBucket)
-      }
-    checkpoint.fold(w0)(p => w0.option("checkpointLocation", p)).start()
-  }
-
   /** [[seedCorpus]]/[[ingestBatch]] for the EMBEDDING signal: same
     * state table, the [[EmbIndex]] as the pair feed. A deployment
     * maintaining BOTH signals uses two warehouses (or lets Curation

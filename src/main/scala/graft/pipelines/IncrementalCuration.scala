@@ -36,8 +36,7 @@ import graft.queries.{BandEmbIndex, BandIndex, EmbIndex, TextOps}
   * same tags (its own settled hash entries read as "I am the survivor",
   * not "I am a duplicate"), the hash append skips hashes already settled,
   * and the band append repairs at (doc_id, band) granularity — so
-  * at-least-once orchestration (or [[ClusterState.maintainFromStream]]'s
-  * foreachBatch shape) is effectively exactly-once here too.
+  * at-least-once orchestration is effectively exactly-once here too.
   */
 object IncrementalCuration {
 
@@ -716,34 +715,6 @@ object IncrementalCuration {
                           emb: Option[EmbeddingSignal] = None,
                           clustered: Boolean = false): DataFrame =
     ingestImpl(wh, batchDocs, t, emb, clustered, wantCurated = false)._2
-
-  /** Structured-Streaming front end over [[ingest]] —
-    * [[ClusterState.maintainFromStream]]'s shape for the curation
-    * lifecycle: each micro-batch runs quality → settled-hash exact dedup
-    * → index-probed near-dup against the persisted state, then appends
-    * its exact survivors to both artifacts. foreachBatch delivers
-    * at-least-once; ingest is replay-safe at every crash point, so a
-    * redelivered micro-batch re-derives the same tags and appends
-    * nothing — effectively exactly-once curation state. Per-batch
-    * outputs (already materialized) land through `sink`; `embOf` derives
-    * a batch's optional embedding signal (e.g. a join against a vector
-    * source) for multi-signal streaming curation. Exact parity with the
-    * one-shot pipeline needs append-only ids ACROSS micro-batches, the
-    * same contract as [[ingest]] (spec-pinned over two batches).
-    */
-  def curateFromStream(wh: Warehouse, docs: DataFrame,
-                       t: Curation.Thresholds = Curation.Thresholds(),
-                       sink: (DataFrame, DataFrame) => Unit = (_, _) => (),
-                       embOf: DataFrame => Option[EmbeddingSignal] = _ => None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val b = batch.toDF()
-        val (cur, aud) = ingest(wh, b, t, embOf(b))
-        sink(cur, aud)
-      }
-      .start()
 
   // ---------------------------------------------------------------- t41
   /** The incremental lifecycle as a registered, ORACLE-CHECKED query:

@@ -347,8 +347,6 @@ object Lsh {
         s"THEN CAST(${1L << i} AS BIGINT) ELSE 0 END)"
     }.mkString("(", " + ", ")")
 
-  def masksSql: String = masks.mkString("[", ", ", "]::BIGINT[]")
-
   def masksSqlWithin(radius: Int, bits: Int = Bits): String =
     masksWithin(radius, bits).mkString("[", ", ", "]::BIGINT[]")
 }
@@ -901,45 +899,9 @@ object IvfModel {
     }
   }
 
-  /** The ONE foreachBatch maintenance wrapper behind the three
-    * maintain*FromStream fronts — at-least-once delivery collapses to
-    * exactly-once through the pruned append's anti-join.
-    *
-    * `checkpoint`: optional checkpointLocation for the streaming query.
-    * WITHOUT it, source offsets live only in memory — rows already
-    * delivered-but-uncommitted are safe on restart (the anti-join), but
-    * a NON-REPLAYABLE source may silently skip data the restarted query
-    * never re-reads. A production deployment over Kafka/files passes a
-    * durable path here; the in-test MemoryStream runs don't need one.
-    */
-  private[graft] def maintainByAppend(emb: DataFrame,
-                                      checkpoint: Option[String] = None)(
-      append: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val w0 = emb.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        append(batch.toDF())
-      }
-    checkpoint.fold(w0)(p => w0.option("checkpointLocation", p)).start()
-  }
-
   /** A warehouse-scoped list table (vec_id, emb, cluster). */
   def listsOf(wh: Warehouse): DataFrame =
     wh.read(ListsTable, ListsSchema).select(col("vec_id"), col("emb"), col("cluster"))
-
-  /** Structured-Streaming maintenance of a warehouse-scoped list table —
-    * the [[graft.pipelines.ClusterState.maintainFromStream]] shape for
-    * the ANN artifact: each micro-batch of (vec_id, emb) assigns itself
-    * against the SAME persisted quantizer and appends into its cluster
-    * partitions. foreachBatch delivers at-least-once;
-    * [[appendListsFrame]]'s anti-join makes a redelivered micro-batch a
-    * no-op, so the maintained lists are effectively exactly-once — and
-    * identical to a batch re-materialization over the union (spec-pinned
-    * across micro-batches).
-    */
-  def maintainListsFromStream(wh: Warehouse, emb: DataFrame, cents: DataFrame,
-                              checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
-    maintainByAppend(emb, checkpoint)(appendListsFrame(wh, _, cents))
 
   /** Coalesce the inverted-list table's append litter ([[appendLists]]
     * leaves ≥ 1 file per touched cluster partition per batch) — rows and
@@ -1058,10 +1020,9 @@ object IvfModel {
 
   /** Warehouse-scoped attributed lists over an EXPLICIT
     * (vec_id, emb, label) frame — the filtered-search index follows the
-    * same three lifecycle postures as the float and PQ lists: fit
-    * ([[ensureAttrLists]]), batch growth ([[appendAttrListsFrame]]),
-    * streamed growth ([[maintainAttrListsFromStream]]). Attributes ride
-    * through [[assignClusters]] untouched.
+    * same two lifecycle postures as the float and PQ lists: fit
+    * ([[ensureAttrLists]]) and batch growth ([[appendAttrListsFrame]]).
+    * Attributes ride through [[assignClusters]] untouched.
     */
   def seedAttrListsFrame(wh: Warehouse, embAttr: DataFrame, cents: DataFrame): Unit =
     wh.rewrite(AttrListsTable,
@@ -1084,15 +1045,6 @@ object IvfModel {
   def attrListsOf(wh: Warehouse): DataFrame =
     wh.read(AttrListsTable, AttrListsSchema)
       .select(col("vec_id"), col("emb"), col("label"), col("cluster"))
-
-  /** [[maintainListsFromStream]] for the attributed lists: micro-batches
-    * of (vec_id, emb, label) assign themselves against the SAME
-    * persisted quantizer and append; at-least-once delivery collapses
-    * to exactly-once via [[appendAttrListsFrame]]'s anti-join.
-    */
-  def maintainAttrListsFromStream(wh: Warehouse, embAttr: DataFrame, cents: DataFrame,
-                                  checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
-    maintainByAppend(embAttr, checkpoint)(appendAttrListsFrame(wh, _, cents))
 
   // ------------------------------------------- composite attributed lists
   /** COMPOSITE attributed lists — the multi-predicate generalization of
@@ -1705,25 +1657,6 @@ object PqModel {
   /** A warehouse-scoped PQ list table (vec_id, codes, cluster). */
   def pqListsOf(wh: graft.etl.Warehouse): DataFrame =
     wh.read(PqListsTable, PqListsSchema).select(col("vec_id"), col("codes"), col("cluster"))
-
-  /** Structured-Streaming maintenance of a warehouse-scoped PQ list
-    * table — [[IvfModel.maintainListsFromStream]] for the COMPRESSED
-    * artifact: each micro-batch of (vec_id, emb) coarse-assigns and
-    * PQ-codes ONLY itself against the SAME persisted quantizer +
-    * codebook generations and appends into its cluster partitions.
-    * foreachBatch delivers at-least-once; [[appendPqListsFrame]]'s
-    * anti-join makes a redelivered micro-batch a no-op, so the
-    * maintained coded lists are effectively exactly-once — and
-    * row-identical to a batch re-materialization over the union
-    * (spec-pinned across micro-batches, AnnSpec). This closes the
-    * lifecycle matrix for the compressed artifact: fit ([[ensure]]),
-    * batch growth ([[appendPqListsFrame]]), streamed growth (here) —
-    * the same three postures the uncompressed lists support.
-    */
-  def maintainPqListsFromStream(wh: graft.etl.Warehouse, emb: DataFrame,
-                                cents: DataFrame, cbArr: DataFrame,
-                                checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
-    IvfModel.maintainByAppend(emb, checkpoint)(appendPqListsFrame(wh, _, cents, cbArr))
 
   /** The persisted codebook (sub, code, cvec). */
   def codebook(s: SparkSession, dir: String): DataFrame =

@@ -1068,13 +1068,6 @@ object QualityOps {
         expr("CAST(nll_sum_micro DIV n_ngrams AS BIGINT)").as("nll_avg_micro"))
       .orderBy(col("doc_id"))
 
-  /** Convenience for API users: e^(avg micro-nats / 1e6) — NOT part of
-    * the oracle-checked frame (exp is a libm call; the hash-checked
-    * columns stay integer).
-    */
-  def withPerplexity(scored: DataFrame): DataFrame =
-    scored.withColumn("ppl", exp(col("nll_avg_micro") / 1e6))
-
   def t53NgramLm(s: SparkSession, dir: String): DataFrame = {
     val wh = ensureNgramLm(s, dir)
     lmScoreWith(documents(s, dir),

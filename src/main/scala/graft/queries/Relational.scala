@@ -703,9 +703,7 @@ object Relational {
       |ORDER BY event_type""".stripMargin
 
   // ---------------------------------------------------------------- q27
-  /** F4-analog + date_trunc time bucketing over the events stream table
-    * (batch view of the streaming aggregation in graft.streaming).
-    */
+  /** F4-analog + date_trunc time bucketing over the events table. */
   def q27HourlyEvents(s: SparkSession, dir: String): DataFrame =
     eventsTs(s, dir)
       .groupBy(date_format(date_trunc("hour", col("ts")), "yyyy-MM-dd HH:00:00").as("hour_ts"))

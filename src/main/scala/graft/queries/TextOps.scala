@@ -698,8 +698,6 @@ object TextOps {
     sys.env.get(name)
       .map(r => clampDialMax(name, parseDial(name, r, min), Int.MaxValue).toInt)
       .getOrElse(default)
-  private[graft] def envLong(name: String, min: Long, default: => Long): Long =
-    sys.env.get(name).map(parseDial(name, _, min)).getOrElse(default)
   private[graft] def envLongCapped(name: String, min: Long, max: Long,
                                    default: => Long): Long =
     sys.env.get(name).map(r => clampDialMax(name, parseDial(name, r, min), max))

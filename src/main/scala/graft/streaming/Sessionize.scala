@@ -1,25 +1,17 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Gap-based sessionization over the events stream — the canonical
-  * stateful-streaming operator a training-data pipeline needs (the
-  * reference itself is batch-only, SURVEY.md §2.9; this is the idiomatic
-  * Structured Streaming upgrade of its checkpoint-incremental cadence).
-  *
-  * Two formulations with identical semantics (asserted in SessionizeSpec):
-  *   - batch: lag/cumulative-sum window sessionization (SQL-expressible);
-  *   - streaming: flatMapGroupsWithState with event-time timeout.
+/** Gap-based sessionization over the events table (q28): a
+  * lag/cumulative-sum window formulation that `oracleSql` states in the
+  * same form for DuckDB.
   */
 object Sessionize {
 
   val GapMinutes = 30
   private val GapMicros = GapMinutes * 60L * 1000000L
-
-  // ------------------------------------------------------------- batch
 
   /** Window formulation: session starts where the gap from the previous
     * event of the same user exceeds GapMinutes; session_no is the running
@@ -44,71 +36,6 @@ object Sessionize {
         // decimal sum: exact and order-independent, so the rounded penny
         // matches the oracle regardless of accumulation order
         round(sum(col("value").cast("decimal(26,4)")), 2).cast("double").as("total_value"))
-  }
-
-  // --------------------------------------------------------- streaming
-
-  case class Event(user_id: Long, ts: java.sql.Timestamp, value: Double)
-  case class Session(user_id: Long, session_start: java.sql.Timestamp,
-                     session_end: java.sql.Timestamp, n_events: Long, total_value: Double)
-  case class OpenSession(startMicros: Long, lastMicros: Long, n: Long, total: Double)
-
-  private def micros(t: java.sql.Timestamp): Long = t.getTime * 1000L + (t.getNanos / 1000) % 1000
-  private def fromMicros(us: Long): java.sql.Timestamp = {
-    val t = new java.sql.Timestamp(us / 1000)
-    t.setNanos(((us % 1000000) * 1000).toInt)
-    t
-  }
-
-  private def close(userId: Long, s: OpenSession): Session =
-    Session(userId, fromMicros(s.startMicros), fromMicros(s.lastMicros), s.n, math.round(s.total * 100.0) / 100.0)
-
-  /** One group invocation: merge sorted in-batch events into the open
-    * session, emitting every session closed by a gap; event-time timeout
-    * (watermark past last event + gap) flushes the final open session.
-    * State is one OpenSession per user — O(users) memory, independent of
-    * stream length.
-    */
-  def updateUser(userId: Long, events: Iterator[Event],
-                 state: GroupState[OpenSession]): Iterator[Session] = {
-    if (events.isEmpty && state.hasTimedOut) {
-      val out = state.getOption.map(close(userId, _))
-      state.remove()
-      return out.iterator
-    }
-    val sorted = events.toSeq.sortBy(e => micros(e.ts))
-    var open = state.getOption
-    val closed = Seq.newBuilder[Session]
-    sorted.foreach { e =>
-      val t = micros(e.ts)
-      open match {
-        case Some(s) if t - s.lastMicros > GapMicros =>
-          closed += close(userId, s)
-          open = Some(OpenSession(t, t, 1, e.value))
-        case Some(s) =>
-          open = Some(s.copy(lastMicros = math.max(s.lastMicros, t), n = s.n + 1, total = s.total + e.value))
-        case None =>
-          open = Some(OpenSession(t, t, 1, e.value))
-      }
-    }
-    open.foreach { s =>
-      state.update(s)
-      // timeout must be strictly beyond the current watermark (Spark
-      // rejects a timestamp at/below it when late batches arrive)
-      state.setTimeoutTimestamp(math.max(
-        s.lastMicros / 1000 + GapMinutes * 60L * 1000,
-        state.getCurrentWatermarkMs() + 1))
-    }
-    closed.result().iterator
-  }
-
-  def sessionsStreaming(events: Dataset[Event]): Dataset[Session] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(updateUser)
   }
 
   /** Batch view over the testdata events table for the query registry. */

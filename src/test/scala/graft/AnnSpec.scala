@@ -549,7 +549,6 @@ class AnnSpec extends SparkTestBase {
   }
 
   test("streamed list maintenance == batch re-materialization (micro-batches, replay-safe)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     val wh = graft.etl.Warehouse(spark,
       java.nio.file.Files.createTempDirectory("graft_ivf_stream_").toString)
@@ -560,19 +559,14 @@ class AnnSpec extends SparkTestBase {
     val centFrame = all.filter(col("vec_id") < 4)
       .select(col("vec_id").cast("int").as("cid"), col("emb").as("cvec"))
     IvfModel.seedListsFrame(wh, all.filter(col("vec_id") < 100), centFrame)
-    // the rest arrives as two micro-batches; the second REPLAYS rows of
-    // the first (at-least-once delivery) — the anti-join must drop them
+    // the rest arrives as two micro-batches, each one local frame through
+    // the append; the second REPLAYS rows of the first (at-least-once
+    // delivery) — the anti-join must drop them
     val rows = all.filter(col("vec_id") >= 100).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1)))
     val (b1, b2) = rows.splitAt(rows.length / 2)
-    implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[(Long, Seq[Double])]
-    val q = IvfModel.maintainListsFromStream(wh,
-      ms.toDF().toDF("vec_id", "emb"), centFrame)
-    try {
-      ms.addData(b1.toSeq: _*); q.processAllAvailable()
-      ms.addData((b2 ++ b1.take(5)).toSeq: _*); q.processAllAvailable()
-    } finally q.stop()
+    for (b <- Seq(b1, b2 ++ b1.take(5)))
+      IvfModel.appendListsFrame(wh, b.toSeq.toDF("vec_id", "emb"), centFrame)
     def asn(df: org.apache.spark.sql.DataFrame) = df.select("vec_id", "cluster")
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     assert(asn(IvfModel.listsOf(wh)) === asn(IvfModel.assignClusters(all, centFrame)),
@@ -581,7 +575,6 @@ class AnnSpec extends SparkTestBase {
   }
 
   test("streamed PQ list maintenance == batch re-materialization (micro-batches, replay-safe)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     import graft.queries.PqModel
     PqModel.ensure(spark, sf())
@@ -592,19 +585,14 @@ class AnnSpec extends SparkTestBase {
     val cents = IvfModel.centroids(spark, sf())
     val cb = PqModel.codebookArr(spark, sf())
     PqModel.seedPqListsFrame(wh, all.filter(col("vec_id") < 100), cents, cb)
-    // the rest arrives as two micro-batches; the second REPLAYS rows of
-    // the first (at-least-once delivery) — the anti-join must drop them
+    // the rest arrives as two micro-batches, each one local frame through
+    // the append; the second REPLAYS rows of the first (at-least-once
+    // delivery) — the anti-join must drop them
     val rows = all.filter(col("vec_id") >= 100).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1)))
     val (b1, b2) = rows.splitAt(rows.length / 2)
-    implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[(Long, Seq[Double])]
-    val q = PqModel.maintainPqListsFromStream(wh,
-      ms.toDF().toDF("vec_id", "emb"), cents, cb)
-    try {
-      ms.addData(b1.toSeq: _*); q.processAllAvailable()
-      ms.addData((b2 ++ b1.take(5)).toSeq: _*); q.processAllAvailable()
-    } finally q.stop()
+    for (b <- Seq(b1, b2 ++ b1.take(5)))
+      PqModel.appendPqListsFrame(wh, b.toSeq.toDF("vec_id", "emb"), cents, cb)
     def coded(df: org.apache.spark.sql.DataFrame) = df
       .select(col("vec_id"), col("codes"), col("cluster"))
       .collect().map(r => (r.getLong(0), r.getSeq[Int](1), r.getInt(2))).toSet
@@ -774,7 +762,6 @@ class AnnSpec extends SparkTestBase {
   }
 
   test("streamed attributed-list maintenance == the globally-ensured attr lists, replay-safe") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     IvfModel.ensureAttrLists(spark, sf())
     val wh = graft.etl.Warehouse(spark,
@@ -784,19 +771,14 @@ class AnnSpec extends SparkTestBase {
         col("label"))
     val cents = IvfModel.centroids(spark, sf())
     IvfModel.seedAttrListsFrame(wh, all.filter(col("vec_id") < 100), cents)
-    // the rest arrives as two micro-batches; the second REPLAYS rows of
-    // the first (at-least-once delivery) — the anti-join must drop them
+    // the rest arrives as two micro-batches, each one local frame through
+    // the append; the second REPLAYS rows of the first (at-least-once
+    // delivery) — the anti-join must drop them
     val rows = all.filter(col("vec_id") >= 100).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1), r.getInt(2)))
     val (b1, b2) = rows.splitAt(rows.length / 2)
-    implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[(Long, Seq[Double], Int)]
-    val q = IvfModel.maintainAttrListsFromStream(wh,
-      ms.toDF().toDF("vec_id", "emb", "label"), cents)
-    try {
-      ms.addData(b1.toSeq: _*); q.processAllAvailable()
-      ms.addData((b2 ++ b1.take(5)).toSeq: _*); q.processAllAvailable()
-    } finally q.stop()
+    for (b <- Seq(b1, b2 ++ b1.take(5)))
+      IvfModel.appendAttrListsFrame(wh, b.toSeq.toDF("vec_id", "emb", "label"), cents)
     def attr(df: org.apache.spark.sql.DataFrame) = df
       .select(col("vec_id"), col("label"), col("cluster"))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet

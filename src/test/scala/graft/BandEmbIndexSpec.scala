@@ -306,20 +306,15 @@ class BandEmbIndexSpec extends SparkTestBase {
   }
 
   test("streamed banded maintenance == full banded recluster (micro-batches)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val wh = tmpWh()
     ClusterState.seedBandedEmbeddings(wh, partA, tT, tB, tR)
+    // part B as TWO micro-batches, each one local frame through the
+    // banded ingest
     val bRows = partB.select("vec_id", "embedding").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
     val (b1, b2) = bRows.splitAt(bRows.length / 2)
-    implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[(Long, Array[Float])]
-    val q = ClusterState.maintainBandedFromStream(wh,
-      ms.toDF().toDF("vec_id", "embedding"), tT, tB, tR)
-    try {
-      ms.addData(b1: _*); q.processAllAvailable()
-      ms.addData(b2: _*); q.processAllAvailable()
-    } finally q.stop()
+    for (b <- Seq(b1, b2))
+      ClusterState.ingestBandedEmbeddingBatch(wh, b.toDF("vec_id", "embedding"), tT, tB, tR)
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq
     assert(rows(ClusterState.clusters(wh)) ===
       rows(TextOps.dedupClustersOf(

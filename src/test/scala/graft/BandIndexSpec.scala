@@ -235,20 +235,14 @@ class BandIndexSpec extends SparkTestBase {
   }
 
   test("streamed cluster maintenance == full recluster (micro-batches through ingestBatch)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val wh = tmpWh()
     ClusterState.seedCorpus(wh, partA)
-    // part B arrives as TWO micro-batches of (doc_id, text)
+    // part B arrives as TWO micro-batches of (doc_id, text), each one
+    // local frame through ingestBatch
     val bRows = partB.select("doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq
     val (b1, b2) = bRows.splitAt(bRows.length / 2)
-    implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[(Long, String)]
-    val q = ClusterState.maintainFromStream(wh, ms.toDF().toDF("doc_id", "text"))
-    try {
-      ms.addData(b1: _*); q.processAllAvailable()
-      ms.addData(b2: _*); q.processAllAvailable()
-    } finally q.stop()
+    for (b <- Seq(b1, b2)) ClusterState.ingestBatch(wh, b.toDF("doc_id", "text"))
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq
     assert(rows(ClusterState.clusters(wh)) ===
       rows(TextOps.dedupClustersOf(

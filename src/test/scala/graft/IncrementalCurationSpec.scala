@@ -151,27 +151,21 @@ class IncrementalCurationSpec extends SparkTestBase {
   }
 
   test("streamed curation == full pipeline: two micro-batches through curateFromStream") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
     val wh = tmpWh()
     IncrementalCuration.seed(wh, partA)
-    // append-only ids across micro-batches — the ingest parity contract
+    // append-only ids across micro-batches — the ingest parity contract;
+    // each former micro-batch is one local frame through ingest
     val b1 = docsAll.filter(col("doc_id") >= 250 && col("doc_id") < 375)
       .select("doc_id", "text").collect().map(r => (r.getLong(0), r.getString(1)))
     val b2 = docsAll.filter(col("doc_id") >= 375)
       .select("doc_id", "text").collect().map(r => (r.getLong(0), r.getString(1)))
     val keptStreamed = scala.collection.mutable.Set.empty[Long]
     var droppedNearDup = 0L
-    val ms = MemoryStream[(Long, String)]
-    val q = IncrementalCuration.curateFromStream(wh, ms.toDF().toDF("doc_id", "text"),
-      sink = (cur, aud) => {
-        keptStreamed ++= cur.select("doc_id").collect().map(_.getLong(0))
-        droppedNearDup += aud.collect().head.getAs[Long]("dropped_near_dup")
-      })
-    try {
-      ms.addData(b1: _*); q.processAllAvailable()
-      ms.addData(b2: _*); q.processAllAvailable()
-    } finally q.stop()
+    for (b <- Seq(b1, b2)) {
+      val (cur, aud) = IncrementalCuration.ingest(wh, b.toSeq.toDF("doc_id", "text"))
+      keptStreamed ++= cur.select("doc_id").collect().map(_.getLong(0))
+      droppedNearDup += aud.collect().head.getAs[Long]("dropped_near_dup")
+    }
     val run = Curation.curateHandle(docsAll)
     try {
       val fullTags = run.tagged.select("doc_id", "stage").collect()

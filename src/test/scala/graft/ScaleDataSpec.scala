@@ -78,7 +78,12 @@ class ScaleDataSpec extends SparkTestBase {
     // pre-fix cycle was 2*dim = 128: copy 128 duplicated copy 0's
     // vectors exactly. Sample the three levels and the old collision.
     val copies = Seq(0, 1, 64, 128, 129, 640, 999)
-    val scaled = ScaleData.scaleTable(spark, "embeddings", dir, 1000)
+    // the sampled copies of the factor-1000 table, built directly: the
+    // full scaleTable union is 1000 branches for 7 of them (its union is
+    // pinned by the scaleTable test below)
+    val base = spark.read.parquet(s"$dir/embeddings.parquet")
+    val scaled = copies.map(ScaleData.tableCopy(base, "embeddings", 1000, dim, _))
+      .reduce(_ unionByName _)
       .filter(floor(col("vec_id") / ScaleData.Stride).isin(copies.map(_.toLong): _*))
       .select((col("vec_id") / ScaleData.Stride).cast("long").as("copy"),
         col("vec_id") % ScaleData.Stride, col("embedding"))

@@ -1,13 +1,16 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.streaming.Sessionize
-import graft.streaming.Sessionize.{Event, Session}
+
+object SessionizeSpec {
+  case class Event(user_id: Long, ts: java.sql.Timestamp, value: Double)
+}
 
 class SessionizeSpec extends SparkTestBase {
   import spark.implicits._
+  import SessionizeSpec.Event
 
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
@@ -26,35 +29,6 @@ class SessionizeSpec extends SparkTestBase {
       .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("session_no"),
         r.getAs[Long]("n_events"), r.getAs[Double]("total_value")))
     assert(got.toSeq === Seq((1L, 1L, 2L, 3.0), (1L, 2L, 1L, 4.0), (2L, 1L, 2L, 24.0)))
-  }
-
-  test("streaming flatMapGroupsWithState matches batch sessionization") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Event]
-    val query = Sessionize.sessionsStreaming(input.toDS())
-      .writeStream.format("memory").queryName("sessions_out")
-      .outputMode("append").start()
-    try {
-      input.addData(fixture: _*)
-      query.processAllAvailable()
-      // watermark-advancing sentinel: far-future event for an unused user
-      // flushes every open session via event-time timeout
-      input.addData(Event(999L, ts("2026-01-02 00:00:00"), 0.0))
-      query.processAllAvailable()
-      input.addData(Event(998L, ts("2026-01-03 00:00:00"), 0.0))
-      query.processAllAvailable()
-
-      val streamed = spark.table("sessions_out").as[Session].collect()
-        .filter(_.user_id < 900)
-        .map(s => (s.user_id, s.session_start, s.session_end, s.n_events, s.total_value))
-        .toSet
-      val batch = Sessionize.sessionsBatch(fixture.toDF()).collect()
-        .map(r => (r.getAs[Long]("user_id"), r.getAs[java.sql.Timestamp]("session_start"),
-          r.getAs[java.sql.Timestamp]("session_end"), r.getAs[Long]("n_events"),
-          r.getAs[Double]("total_value")))
-        .toSet
-      assert(streamed === batch)
-    } finally query.stop()
   }
 
   test("batch sessionization over testdata events conserves event count") {

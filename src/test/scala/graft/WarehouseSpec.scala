@@ -223,6 +223,28 @@ class WarehouseSpec extends SparkTestBase {
     assert(names(wh) === Set("new2"))
   }
 
+  test("a stray bare t.__history file is inert: live and previous versions survive GC") {
+    val wh = fresh()
+    wh.rewrite("t", Seq((1L, "old1")).toDF("id", "name")) // v1
+    val pre1 = wh.read("t", schema)
+    wh.rewrite("t", Seq((1L, "old2")).toDF("id", "name")) // v2, pointer -> v2
+    val pre2 = wh.read("t", schema)
+    val fs = new Path(wh.dir).getFileSystem(spark.sessionState.newHadoopConf())
+    // no history generations, only a bare `t.__history` naming a version
+    // that never existed: the table seeds its committed set from the
+    // version dirs, and the bare file is never read
+    Option(fs.globStatus(new Path(wh.dir, "t.__history.*")))
+      .foreach(_.foreach(st => fs.delete(st.getPath, false)))
+    val out = fs.create(new Path(wh.dir, "t.__history"), true)
+    try out.write("t.__v000099\n".getBytes("UTF-8")) finally out.close()
+    wh.rewrite("t", Seq((1L, "new")).toDF("id", "name")) // v3
+    for (v <- Seq("t.__v000001", "t.__v000002", "t.__v000003"))
+      assert(fs.exists(new Path(wh.dir, v)), s"$v was reclaimed")
+    assert(pre1.collect().map(_.getString(1)).toSet === Set("old1"))
+    assert(pre2.collect().map(_.getString(1)).toSet === Set("old2"))
+    assert(names(wh) === Set("new"))
+  }
+
   test("history resolves the newest generation; stale generations and tmp strays are inert") {
     val wh = fresh()
     wh.rewrite("t", Seq((1L, "gen1")).toDF("id", "name")) // v1 committed, history gen written
