@@ -1,21 +1,32 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
+
+import graft.queries.Frames
 
 /** The incremental sync pipeline (reference etl_sync.py run_sync /
   * sync_operativas / sync_seguridad, rows 205-440), set-at-a-time:
   *
   *   raw JSON → parse (F11) → incremental filter vs checkpoint (S3)
   *     → anti-join existing master (J8 dedup)
-  *     → [seguridad] location fallback join (J9)
-  *     → drop no-location rows → score extraction (T6)
-  *     → period interval join (J7) → sucursal lookup join (J6)
-  *     → append master (S4)
+  *     → [seguridad] location fallback join (J9) → drop no-location rows
+  *     → ONE eager lineage cut of this located increment; when it is
+  *       empty (a replay, a day with nothing new) skip straight to S6
   *   answers explode (T7) → catalog join (T4/T5) → anti-join existing
   *     detail (S5, the ON CONFLICT DO NOTHING analog) → append detail
+  *   score extraction (T6) → period interval join (J7)
+  *     → sucursal lookup join (J6) → append master (S4)
   *   checkpoint + audit rewrite (S6) → status report (A13/O5)
   *     → period transition check (T8)
+  *
+  * The cut is the one pass over the parse lineage; below it no lineage
+  * re-reads a table it appends to, except the detail anti-join, which
+  * reads its target inside its own write job. Row counts ride the cut
+  * and the appends as Observations. Detail lands BEFORE master, so a
+  * crash between the two appends heals on the re-run: the unlanded
+  * masters are derived again, and the detail anti-join drops the rows
+  * that already landed.
   *
   * Surrogate ids are xxhash64 of the natural key instead of the
   * reference's serial RETURNING id (etl_sync.py:236-245) — deterministic
@@ -78,6 +89,25 @@ object CasEtl {
         (if (tipo == "operativas") col("lon") else lit(null).cast("double")).as("lon_entrega"))
   }
 
+  /** `df` with its row count observed by whatever action runs it. */
+  private def rowCount(df: DataFrame, obs: Observation): DataFrame =
+    df.observe(obs, count(lit(1)).as("n"))
+
+  /** An observed row count. AQE's empty-relation propagation drops the
+    * metrics node of an input it proved empty, so no metric reads as 0.
+    * Never fall back to a count: after an append it would re-run the
+    * anti-join against the sync's own output.
+    */
+  private def observed(obs: Observation): Long =
+    obs.get.get("n").fold(0L)(_.asInstanceOf[Long])
+
+  /** Append `df` to `name`; the rows written, counted by the write itself. */
+  private def appendCounted(wh: Warehouse, name: String, df: DataFrame): Long = {
+    val obs = Observation()
+    wh.append(name, rowCount(df, obs))
+    observed(obs)
+  }
+
   /** One incremental sync for one supervision type. `rawJson` plays the
     * Zenput REST page stream (S2 — pagination is driver-side either way).
     *
@@ -99,65 +129,59 @@ object CasEtl {
     val parsed0 = SubmissionParse.parse(rawJson)
 
     // S3 — incremental extract: only submissions after the checkpoint
+    // (a control table of one row per tipo: its max is taken on the driver)
     val ckpt = wh.checkpoints
       .filter(col("formulario") === s"supervisiones_$tipo")
-      .select(max(col("ultima_fecha"))).first().getTimestamp(0)
-    val parsedIncRaw = Option(ckpt) match {
+      .select(col("ultima_fecha")).collect()
+      .flatMap(r => Option(r.getTimestamp(0))).maxByOption(_.getTime)
+    val parsedInc = ckpt match {
       case Some(ts) => parsed0.filter(try_to_timestamp(col("date_submitted")) > lit(ts))
       case None     => parsed0
     }
-    // the fetched count rides the staging write as an Observation instead
-    // of its own count() action — a dedicated count re-parses the whole
-    // raw JSON increment, i.e. one extra full pass per sync at scale
-    val fetchedObs = org.apache.spark.sql.Observation()
-    val parsedInc = parsedIncRaw.observe(fetchedObs, count(lit(1)).as("fetched"))
-
     val existing = wh.supervisiones(tipo)
 
     // J8 — dedup against target (etl_sync.py:215-217): only new
-    // submissions, after the in-batch earliest-wins dedup.
-    val fresh = dedupEarliest(parsedInc)
+    // submissions, after the in-batch earliest-wins dedup. Every count
+    // below rides an action that runs anyway (the cut, an append) as an
+    // Observation: a dedicated count() would be one more pass over the
+    // raw increment.
+    val fetchedObs = Observation()
+    val fresh = dedupEarliest(rowCount(parsedInc, fetchedObs))
       .join(existing.select(col("zenput_submission_id")),
         Seq("zenput_submission_id"), "left_anti")
 
-    // J9 + no-location drop (locateFresh). Staged: everything below
-    // re-reads this lineage after the master append, and the J8 anti-join
-    // against the target must not see its own output. This write is also
-    // the one action that traverses the parse lineage — it materializes
-    // the fetched-count observation above.
-    val withLoc = wh.stage(locateFresh(wh, fresh, tipo))
-    // AQE's runtime empty-relation propagation can eliminate the
-    // CollectMetrics node when the increment turns out empty (e.g. an
-    // idempotent re-run) — the observation then completes WITHOUT the
-    // metric. Fall back to the explicit count only in that rare case; the
-    // loaded-rows path always rides the staging write.
-    val fetched = fetchedObs.get.get("fetched") match {
-      case Some(n) => n.asInstanceOf[Long]
-      case None    => parsedIncRaw.count()
-    }
-
-    // T6 + J7 + J6 (masterFrom)
-    val master = wh.stage(masterFrom(wh, withLoc, tipo))
-
-    val nuevos = master.count()
-    wh.append(s"supervisiones_$tipo", master)
-
-    // T4/T5 + T7 + S5 — detail rows for the NEW masters only
-    val catalog = wh.catalogo(tipo)
-    val extractedAll =
-      if (tipo == "operativas") SubmissionParse.extractAreas(withLoc, catalog)
-      else SubmissionParse.extractKpis(withLoc, catalog)
-    val detail = extractedAll
-      .join(broadcast(catalog.select(col("id").as("area_id"), col("codigo"))), Seq("codigo"))
-      .select(
-        surrogateId(col("zenput_submission_id")).as("supervision_id"),
-        col("area_id"), col("porcentaje"))
-    val detailTable = if (tipo == "operativas") "supervision_areas" else "seguridad_kpis"
-    // ON CONFLICT DO NOTHING analog: anti-join the (supervision, area) key
-    val detailFresh = wh.stage(detail.join(wh.detalle(tipo),
-      Seq("supervision_id", "area_id"), "left_anti"))
-    val nDetail = detailFresh.count()
-    wh.append(detailTable, detailFresh)
+    // J9 + no-location drop (locateFresh), then ONE eager lineage cut: it
+    // is the only pass over the parse lineage and the J8 anti-join, and
+    // nothing below it re-reads the master it appends to
+    val locatedObs = Observation()
+    val located = Frames.cut(rowCount(locateFresh(wh, fresh, tipo), locatedObs))
+    val (nuevos, nDetail) = try {
+      // a replay, or a day with nothing new: write nothing to the data tables
+      if (observed(locatedObs) == 0) (0L, 0L)
+      else {
+        // T4/T5 + T7 + S5 — detail rows for the NEW masters only, appended
+        // BEFORE the master: a crash between the two appends leaves the
+        // masters unlanded, so the re-run derives them (and their detail)
+        // again, and this anti-join drops the detail rows that landed
+        val catalog = wh.catalogo(tipo)
+        val extracted =
+          if (tipo == "operativas") SubmissionParse.extractAreas(located, catalog)
+          else SubmissionParse.extractKpis(located, catalog)
+        val detail = extracted
+          .join(broadcast(catalog.select(col("id").as("area_id"), col("codigo"))), Seq("codigo"))
+          .select(
+            surrogateId(col("zenput_submission_id")).as("supervision_id"),
+            col("area_id"), col("porcentaje"))
+        // ON CONFLICT DO NOTHING analog: anti-join the (supervision, area)
+        // key — it reads its target inside its own write job
+        val nDetail = appendCounted(wh,
+          if (tipo == "operativas") "supervision_areas" else "seguridad_kpis",
+          detail.join(wh.detalle(tipo), Seq("supervision_id", "area_id"), "left_anti"))
+        // T6 + J7 + J6 (masterFrom)
+        (appendCounted(wh, s"supervisiones_$tipo", masterFrom(wh, located, tipo)), nDetail)
+      }
+    } finally Frames.release(located)
+    val fetched = observed(fetchedObs)
 
     // S6 — checkpoint + audit (rewrite: these are tiny control tables)
     val spark = wh.spark
@@ -258,33 +282,44 @@ object CasEtl {
   /** T8 — period transition state machine (etl_sync.py:504-566): when the
     * active period has supervised every active sucursal, deactivate it and
     * activate the next period by fecha_inicio. Driver-side control flow
-    * around broadcast-sized frames — exactly as in the reference, where
-    * this is a pair of UPDATEs on a dozen-row table.
+    * — exactly as in the reference, where this is a pair of UPDATEs on a
+    * dozen-row table: periodos is collected once, the active and next
+    * periods are picked on the driver, and the coverage check is one query.
     */
   def periodTransition(wh: Warehouse): Option[String] = {
     val periodos = wh.periodos
-    val activos = periodos.filter(col("activo") === true).collect()
-    if (activos.isEmpty) return None
-    val activo = activos.head
+    val rows = periodos.collect().toSeq
+    def inicio(r: Row) = Option(r.getAs[java.sql.Date]("fecha_inicio"))
+    for {
+      activo <- rows.find(_.getAs[Any]("activo") == true)
+      if fullyCovered(wh, activo.getAs[Int]("id"))
+      desde <- inicio(activo)
+      // the next period by fecha_inicio, ties broken by id
+      siguiente <- rows.filter(r => inicio(r).exists(_.after(desde)))
+        .minByOption(r => (inicio(r).get.getTime, r.getAs[Int]("id")))
+    } yield {
+      wh.rewrite("periodos_cas", periodos.withColumn("activo",
+        when(col("id") === activo.getAs[Int]("id"), false)
+          .when(col("id") === siguiente.getAs[Int]("id"), true)
+          .otherwise(col("activo"))))
+      Option(siguiente.getAs[String]("codigo")).getOrElse(siguiente.getAs[String]("nombre"))
+    }
+  }
 
-    val supervisadas = wh.supervisiones("operativas")
-      .filter(col("periodo_id") === activo.getAs[Int]("id"))
-      .agg(countDistinct(col("sucursal_id"))).first().getLong(0)
-    val total = wh.sucursales.filter(col("activo") === true).count()
-    if (total == 0 || supervisadas < total) return None
-
-    val siguiente = periodos
-      .filter(col("fecha_inicio") > lit(activo.getAs[java.sql.Date]("fecha_inicio")))
-      .orderBy(col("fecha_inicio").asc)
-      .limit(1).collect()
-    if (siguiente.isEmpty) return None
-    val nextId = siguiente.head.getAs[Int]("id")
-
-    wh.rewrite("periodos_cas", periodos.withColumn("activo",
-      when(col("id") === activo.getAs[Int]("id"), false)
-        .when(col("id") === nextId, true)
-        .otherwise(col("activo"))))
-    Some(Option(siguiente.head.getAs[String]("codigo"))
-      .getOrElse(siguiente.head.getAs[String]("nombre")))
+  /** Has period `periodoId` supervised every active sucursal? The distinct
+    * supervised sucursales and the active-sucursal count come from one
+    * query: the dimension rows carry a null sucursal_id, which
+    * countDistinct skips.
+    */
+  private def fullyCovered(wh: Warehouse, periodoId: Int): Boolean = {
+    val c = wh.supervisiones("operativas")
+      .filter(col("periodo_id") === periodoId)
+      .select(col("sucursal_id"), lit(false).as("dim"))
+      .unionByName(wh.sucursales.filter(col("activo") === true)
+        .select(lit(null).cast("int").as("sucursal_id"), lit(true).as("dim")))
+      .agg(countDistinct(col("sucursal_id")), count(when(col("dim"), 1)))
+      .first()
+    val (supervisadas, total) = (c.getLong(0), c.getLong(1))
+    total > 0 && supervisadas >= total
   }
 }

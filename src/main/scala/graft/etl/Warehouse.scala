@@ -545,9 +545,6 @@ case class Warehouse(spark: SparkSession, dir: String) {
         .getOrElse(Array.empty).foreach(st => fs.delete(st.getPath, false))
       // ...and the fixed-name pointer tmp a rewrite crashed between
       // create and rename would leave (one file per table at most).
-      // _staging/ dirs are deliberately NOT swept here: they are
-      // warehouse-wide, so a per-table vacuum could delete another
-      // table's in-flight staged increment.
       val pointerTmp = new Path(dir, s"$name.__current.tmp")
       if (fs.exists(pointerTmp)) fs.delete(pointerTmp, false)
       if (live.startsWith(s"$name.__v")) appendHistory(name, live, None)
@@ -613,16 +610,6 @@ case class Warehouse(spark: SparkSession, dir: String) {
       if (i > 0 && n.drop(i + 4).forall(_.isDigit)) Some(n.take(i)) else None
     })
     (fromPointers ++ fromVersions).distinct.foreach(vacuum(_, retainLast))
-  }
-
-  /** Materialize a computed increment before appending it to tables its
-    * own lineage reads (anti-joins against the target): parquet round-trip
-    * through a staging dir breaks the lazy re-read-after-write hazard.
-    */
-  def stage(df: DataFrame): DataFrame = {
-    val p = path("_staging/" + java.util.UUID.randomUUID().toString.take(8))
-    df.write.mode("overwrite").parquet(p)
-    spark.read.parquet(p)
   }
 
   def supervisiones(tipo: String): DataFrame =

@@ -116,6 +116,52 @@ class CasEtlSpec extends SparkTestBase {
     assert(wh.detalle("operativas").count() === 3)
   }
 
+  test("a sync that fails between its appends heals on the re-run (blocked detail or master)") {
+    val clean = freshWarehouse()
+    CasEtl.sync(clean, opsRaw.toDF("json"), "operativas")
+    def counts(wh: Warehouse) =
+      (wh.supervisiones("operativas").count(), wh.detalle("operativas").count())
+    val want = counts(clean)
+    for (table <- Seq("supervision_areas", "supervisiones_operativas")) {
+      val wh = freshWarehouse()
+      // a plain file where the table's append dir belongs: its append throws
+      val blocker = new java.io.File(wh.dir, table)
+      assert(blocker.createNewFile())
+      intercept[Exception](CasEtl.sync(wh, opsRaw.toDF("json"), "operativas"))
+      assert(blocker.delete())
+      CasEtl.sync(wh, opsRaw.toDF("json"), "operativas")
+      assert(counts(wh) === want, s"after a failed append to $table")
+    }
+  }
+
+  test("a zero-row sync writes nothing to the data tables; sync leaves no persisted RDD") {
+    val wh = freshWarehouse()
+    val raws = Seq("operativas" -> opsRaw, "seguridad" -> segRaw)
+    def dataFiles: Set[String] =
+      Seq("supervisiones_operativas", "supervisiones_seguridad", "supervision_areas", "seguridad_kpis")
+        .map(t => new java.io.File(wh.dir, t).toPath).filter(Files.exists(_))
+        .flatMap { d =>
+          val walk = Files.walk(d)
+          try walk.toArray.map(_.toString).toSeq finally walk.close()
+        }.toSet
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val pinned = persisted
+    // partial syncs leave the checkpoint alone, so the first two replays
+    // fetch everything and reach the J8 anti-join; the checkpoint the
+    // second one writes filters everything out of the third
+    for ((tipo, raw) <- raws) CasEtl.sync(wh, raw.toDF("json"), tipo, complete = false)
+    val loaded = dataFiles
+    for ((complete, fetchesAll) <- Seq((false, true), (true, true), (true, false));
+         (tipo, raw) <- raws) {
+      val r = CasEtl.sync(wh, raw.toDF("json"), tipo, complete)
+      assert(r.fetched === (if (fetchesAll) raw.size else 0) && r.nuevos === 0 && r.detalles === 0, r)
+    }
+    assert(dataFiles === loaded)
+    assert(!Files.exists(new java.io.File(wh.dir, "_staging").toPath))
+    assert((persisted -- pinned).isEmpty, "sync left a persisted RDD behind")
+    assert(wh.syncLog.count() === 8)
+  }
+
   test("J8 anti-join dedups independently of the checkpoint") {
     val wh = freshWarehouse()
     // pre-seed the master with s1 but no checkpoint
@@ -191,6 +237,21 @@ class CasEtlSpec extends SparkTestBase {
     assert(activos.toSeq === Seq("P2"))
     // completed-but-no-successor: running again does nothing
     assert(CasEtl.periodTransition(wh) === None)
+  }
+
+  test("T8 breaks a fecha_inicio tie for the next period by id") {
+    val wh = freshWarehouse()
+    // P3 ties P2's fecha_inicio and comes first in scan order
+    val p3 = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(3, "P3", "Febrero bis", java.sql.Date.valueOf("2026-02-01"),
+        java.sql.Date.valueOf("2026-02-28"), false)), 1), CasSchema.periodos)
+    wh.rewrite("periodos_cas", p3.unionByName(wh.periodos).coalesce(1))
+    val covered = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(41L, "sa", 1, 1, "Ana", java.sql.Timestamp.valueOf("2026-01-15 10:00:00"), 90.0, null, null),
+      Row(42L, "sb", 2, 1, "Dan", java.sql.Timestamp.valueOf("2026-01-20 10:00:00"), 88.0, null, null))),
+      CasSchema.supervisiones)
+    wh.append("supervisiones_operativas", covered)
+    assert(CasEtl.periodTransition(wh) === Some("P2"))
   }
 
   test("status report unions the four table counts") {
