@@ -122,9 +122,13 @@ object CasEtl {
     * timestamp ties at the failure boundary, neither of which a
     * max-landed-date checkpoint could guarantee. Deliberate divergence,
     * same spirit as the surrogate ids.
+    *
+    * The whole sync holds ONE writer lease: its up to four writes
+    * (detail, master, checkpoint, `sync_log`) re-enter it instead of each
+    * taking and dropping their own, and a failure releases it.
     */
   def sync(wh: Warehouse, rawJson: DataFrame, tipo: String,
-           complete: Boolean = true): SyncResult = {
+           complete: Boolean = true): SyncResult = wh.withWriterScope(s"sync:$tipo") {
     require(tipo == "operativas" || tipo == "seguridad")
     val parsed0 = SubmissionParse.parse(rawJson)
 

@@ -30,6 +30,53 @@ object Warehouse {
     * relative to any maintenance op at test scale.
     */
   private[etl] val LeaseTtlMs: Long = 15 * 60 * 1000L
+
+  /** Committed versions a pointer file lists (its reader window). */
+  private val PointerWindow = 16
+
+  private def pointerPath(dir: Path, name: String) = new Path(dir, s"$name.__current")
+
+  /** `name`'s version directories, by PARSED numeric suffix (name order
+    * diverges from it once the counter outgrows the %06d padding).
+    */
+  private def listVersions(fs: FileSystem, dir: Path, name: String): Seq[(Long, Path)] = {
+    val stats = try fs.globStatus(new Path(dir, s"$name.__v*"))
+                catch { case _: java.io.IOException => null }
+    Option(stats).map(_.toSeq).getOrElse(Nil).flatMap { st =>
+      st.getPath.getName.stripPrefix(s"$name.__v").toLongOption.map(_ -> st.getPath)
+    }.sortBy(_._1)
+  }
+
+  /** The committed versions `name`'s pointer lists, oldest→newest, the
+    * live one last; Nil when there is no pointer. A one-line pointer
+    * (the format before the pointer carried the window) reads as a
+    * one-entry window.
+    */
+  private def pointerWindow(fs: FileSystem, dir: Path, name: String): Seq[String] =
+    try {
+      val in = fs.open(pointerPath(dir, name))
+      try new String(in.readAllBytes(), "UTF-8").linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
+      finally in.close()
+    } catch { case _: java.io.FileNotFoundException => Nil }
+
+  private def resolveFrom(fs: FileSystem, dir: Path, name: String, window: Seq[String],
+                          versions: => Seq[(Long, Path)]): Path =
+    window.lastOption.map(new Path(dir, _)).filter(fs.exists)
+      .orElse(versions.reverse.collectFirst {
+        case (_, p) if fs.exists(new Path(p, "_SUCCESS")) => p
+      })
+      .getOrElse(new Path(dir, name))
+
+  /** The directory currently holding `name`'s data in the warehouse at
+    * `dir`: the pointer's live entry; else crash recovery (newest version
+    * with a `_SUCCESS` marker); else the flat append-layout directory
+    * `dir/name` — where every append-only CAS table (`supervisiones_*`,
+    * `supervision_areas`, `seguridad_kpis`, `sync_log`) lives, since the
+    * daily path never rewrites them. Takes the FileSystem so the DuckDB
+    * oracle, which has no Spark session, resolves through the same code.
+    */
+  def resolve(fs: FileSystem, dir: Path, name: String): Path =
+    resolveFrom(fs, dir, name, pointerWindow(fs, dir, name), listVersions(fs, dir, name))
 }
 
 /** Parquet-backed warehouse with empty-safe reads: a table that has never
@@ -38,12 +85,16 @@ object Warehouse {
   * pre-existing Postgres tables, README.md:74-84).
   *
   * Rewritten tables are VERSIONED: each `rewrite` lands a fresh
-  * `name.__vNNNNNN` directory and then flips a one-line pointer file
-  * (`name.__current`). The pointer rename is the only commit step, so a
+  * `name.__vNNNNNN` directory and then replaces the pointer file
+  * `name.__current`, the table's one commit record. The pointer lists
+  * the committed versions oldest→newest (at most 16); its last line is
+  * the live version, and the lines before it are the reader window
+  * retention GC keeps. The pointer rename is the only commit step, so a
   * crash at any moment leaves either the old pointer (old data intact) or
   * no pointer — recovered by picking the newest version directory that
-  * carries Spark's `_SUCCESS` marker. At no point is the table absent,
-  * which the old delete-then-rename scheme could not guarantee. All path
+  * carries Spark's `_SUCCESS` marker, with every version directory then
+  * counted as committed. At no point is the table absent. Concurrent
+  * commits to one table are ruled out by the writer lease. All path
   * operations go through Hadoop's FileSystem API, so the same code runs
   * against HDFS/S3A/ABFS, not just the local disk used in tests.
   */
@@ -52,9 +103,9 @@ case class Warehouse(spark: SparkSession, dir: String) {
   private def path(name: String) = s"$dir/$name"
 
   private def hconf = spark.sessionState.newHadoopConf()
-  private def fs: FileSystem = new Path(dir).getFileSystem(hconf)
+  private def root = new Path(dir)
+  private def fs: FileSystem = root.getFileSystem(hconf)
 
-  private def pointerPath(name: String) = new Path(dir, s"$name.__current")
   private def versionName(name: String, v: Long) = f"$name.__v$v%06d"
 
   // ------------------------------------------------------- writer lease
@@ -140,223 +191,21 @@ case class Warehouse(spark: SparkSession, dir: String) {
   private[graft] def withWriterScope[T](op: String)(body: => T): T =
     withWriterLease(op)(body)
 
-  // History generations mirror the data-version scheme: each write lands a
-  // NEW `name.__history.NNNNNN` file (tmp + rename-to-fresh-name — never a
-  // delete in the commit path), readers resolve the newest suffix, and
-  // older generations are swept best-effort AFTER the new one is live. A
-  // crash at any moment leaves at least one intact generation, so the
-  // "absent history ⇒ seed from raw version dirs" upgrade path can no
-  // longer be triggered by a mid-commit crash (which would let stray dirs
-  // from crashed writes into the committed set).
+  private def resolve(name: String): Path = Warehouse.resolve(fs, root, name)
 
-  /** Every numeric history file with its length. A ZERO-LENGTH entry is a
-    * CLAIM (create-exclusive placeholder from [[appendHistory]]) whose
-    * writer crashed before renaming its entry list over it, or is still
-    * inside that window — never a generation. Numbering must count claims
-    * (so a stale one cannot stall seq assignment forever) but resolution
-    * must skip them: an empty newest "generation" would read as an empty
-    * entry list, sending appendHistory down the seed-from-version-dirs
-    * path — re-admitting stray dirs, the exact hazard generations close.
+  /** `name`'s version directories, its committed window (oldest→newest)
+    * and the directory readers resolve now, from one pointer read.
+    * Without a pointer (a crash between its delete and its rename) every
+    * version directory counts as committed: any of them may be what a
+    * reader resolved.
     */
-  private def rawHistoryFiles(name: String): Seq[(Long, Path, Long)] = {
-    val stats = try fs.globStatus(new Path(dir, s"$name.__history.*"))
-                catch { case _: java.io.FileNotFoundException => null }
-    Option(stats).map(_.toSeq).getOrElse(Nil).flatMap { st =>
-      st.getPath.getName.stripPrefix(s"$name.__history.").toLongOption
-        .map(seq => (seq, st.getPath, st.getLen))
-    }.sortBy(_._1)
+  private def committedState(name: String): (Seq[(Long, Path)], Seq[String], Path) = {
+    val f = fs
+    val versions = Warehouse.listVersions(f, root, name)
+    val pointer = Warehouse.pointerWindow(f, root, name)
+    val live = Warehouse.resolveFrom(f, root, name, pointer, versions)
+    (versions, if (pointer.nonEmpty) pointer else versions.map(_._2.getName), live)
   }
-
-  /** Committed (non-claim) history generations, oldest→newest. */
-  private def historyFiles(name: String): Seq[(Long, Path)] =
-    rawHistoryFiles(name).collect { case (seq, p, len) if len > 0 => (seq, p) }
-
-  /** The last committed pointer targets, oldest→newest — the only
-    * directories a reader can ever have resolved through the pointer.
-    * Retention windows count THESE, not raw version dirs: a stray from a
-    * crashed uncommitted write must not occupy a reader-window slot.
-    * An absent file reads Nil; any OTHER read failure propagates — the
-    * GC caller treats it as "window unknown, skip reclamation", never as
-    * an empty window (which would delete still-referenced versions).
-    */
-  private def history(name: String): Seq[String] = {
-    def readFile(target: Path): Seq[String] = {
-      val in = fs.open(target)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      txt.linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
-    }
-    historyFiles(name).lastOption.map(_._2) match {
-      // no generation files genuinely means "never written" — the
-      // seed-from-version-dirs upgrade path is correct
-      case None => Nil
-      case Some(gen) =>
-        try readFile(gen)
-        catch {
-          case _: java.io.FileNotFoundException =>
-            // a concurrent commit swept this generation between resolving
-            // and opening it. That is NOT "absent history" (seeding from
-            // raw version dirs here would admit stray dirs — the hazard
-            // generations exist to close): re-resolve once, and if the
-            // newest generation vanishes again treat the read as transient
-            // so appendHistory returns None and this rewrite skips GC.
-            historyFiles(name).lastOption.map(_._2) match {
-              case Some(gen2) =>
-                try readFile(gen2)
-                catch {
-                  case e: java.io.FileNotFoundException => throw new java.io.IOException(
-                    s"history generation for $name vanished twice mid-read (concurrent sweeps)", e)
-                }
-              case None => throw new java.io.IOException(
-                s"history generations for $name vanished mid-read (concurrent sweep)")
-            }
-        }
-    }
-  }
-
-  /** History plus the new entry, SEEDED for the upgrade path: a table
-    * whose version dirs predate the history file (it reads ABSENT, not
-    * failed) treats every existing version as committed — they were
-    * written by the pre-history scheme, so any of them may be
-    * reader-visible. A TRANSIENT read failure is different: the committed
-    * set is unknown, and fabricating it from raw version dirs would let a
-    * stray occupy a window slot and be recorded as committed — so the
-    * caller gets None, skips GC for this rewrite, and leaves the history
-    * file untouched for the next rewrite to read (the missing vname entry
-    * is covered by the prevLive keep until then).
-    */
-  private def appendHistory(name: String, vname: String,
-                            prevLive: Option[String]): Option[Seq[String]] = {
-    val read =
-      try {
-        val h = history(name)
-        if (h.nonEmpty) h
-        else listVersions(name).map(_._2.getName).filterNot(_ == vname)
-      } catch { case _: java.io.IOException => return None }
-    // SELF-HEAL a lost append: the history write below is best-effort, so
-    // the file may lack the previous rewrite's entry. The pre-rewrite live
-    // target is committed BY DEFINITION (readers resolved through the
-    // pointer), so if it is version-named and absent, restore it — without
-    // this, a single swallowed write would silently narrow the committed
-    // window below RetainVersions two rewrites later. Consecutive lost
-    // writes degrade by at most one generation per loss (documented bound).
-    val prior = prevLive match {
-      case Some(pl) if pl.startsWith(s"$name.__v") && !read.contains(pl) => read :+ pl
-      case _ => read
-    }
-    val entries = (prior :+ vname).takeRight(16)
-    try {
-      val raw = rawHistoryFiles(name)
-      val existing = raw.collect { case (seq, p, len) if len > 0 => (seq, p) }
-      // seq counts CLAIMS too: a crashed writer's zero-length claim at
-      // max+1 would otherwise make every later writer recompute the same
-      // seq, lose the claim, and skip GC forever — numbering past it
-      // leaves the stale claim inert (invisible to readers, reclaimed by
-      // vacuum) while history advances
-      val seq = raw.lastOption.map(_._1).getOrElse(0L) + 1
-      // the fixed tmp name parses as suffix "tmp" → non-numeric → invisible
-      // to historyFiles, so a stray from a crash never resolves as a
-      // generation; rename targets a FRESH name, so no delete precedes it
-      // tmp is WRITER-UNIQUE: a fixed shared tmp name would let a
-      // concurrent writer overwrite our entry list between our write and
-      // our rename, landing ITS entries under OUR claimed generation.
-      // The random suffix parses as non-numeric → invisible to
-      // historyFiles, so a stray from a crash never resolves as a
-      // generation; rename targets a fresh name, so no delete precedes it.
-      val tmp = new Path(dir,
-        s"$name.__history.tmp${java.util.UUID.randomUUID().toString.take(8)}")
-      val out = fs.create(tmp, true)
-      try out.write((entries.mkString("\n") + "\n").getBytes("UTF-8")) finally out.close()
-      val target = new Path(dir, f"$name.__history.$seq%06d")
-      // Claim the seq with a create-exclusive BEFORE the rename:
-      // rename-returns-false-on-existing-destination is only an HDFS
-      // guarantee — Hadoop's local filesystem renames with POSIX
-      // semantics, silently OVERWRITING the destination, so two
-      // concurrent writers computing the same seq would clobber a
-      // generation there. The claim races in two shapes, BOTH of which
-      // must read as claim-lost: createNewFile returning false (it saw
-      // the other writer's file), and createNewFile THROWING
-      // FileAlreadyExistsException (Hadoop's createNewFile is
-      // exists-then-create, so the race loser's create(overwrite=false)
-      // throws instead of returning false — letting that IOException
-      // reach the blanket catch below would return Some and run GC, the
-      // exact outcome the claim exists to prevent). A lost claim means
-      // another writer owns this seq: OUR committed set was never durably
-      // recorded and a concurrent writer's view may diverge from it —
-      // skip GC this rewrite rather than sweep against a set no reader
-      // can resolve. Residual window: on HDFS-like stores
-      // create(overwrite=false) is an atomic namespace op, closing the
-      // race completely; Hadoop's LOCAL create is itself check-then-act,
-      // so two local writers landing inside that narrower window can
-      // still both claim — a dev/test-only scenario (multi-writer
-      // warehouses run on HDFS-like stores), bounded by the one-
-      // generation self-heal either way. A crash BETWEEN claim and rename
-      // leaves the zero-length claim at the real generation name — it is
-      // invisible to resolution (see rawHistoryFiles), numbering steps
-      // past it, and vacuum reclaims it, so it can never shadow the
-      // previous intact generation.
-      val claimed = try fs.createNewFile(target)
-                    catch { case _: java.io.IOException => false }
-      if (!claimed) { fs.delete(tmp, false); return None }
-      if (!fs.rename(tmp, target)) {
-        // POSIX rename overwrote the zero-length claim and returned true;
-        // an HDFS-semantics store instead refuses to rename onto our own
-        // claim — clear it and land the content. Delete ONLY what is
-        // verifiably a claim (zero-length): if the first false was
-        // transient and another writer's createNewFile landed at the
-        // target in between, an unconditional delete would destroy THEIR
-        // claim and let our second rename commit under a seq they believe
-        // they own — both writers would then proceed as committed for the
-        // same generation. Anything non-empty (or vanished-and-still-
-        // unrenameable) is the collision exit. Our own claim cannot be
-        // told apart from another writer's by content — both are empty —
-        // but deleting an empty claim is safe in either case: the loser's
-        // rename returns false and takes this same exit.
-        val claimLen = try Some(fs.getFileStatus(target).getLen)
-                       catch { case _: java.io.FileNotFoundException => None }
-        if (claimLen.exists(_ > 0)) { fs.delete(tmp, false); return None }
-        claimLen.foreach(_ => fs.delete(target, false))
-        if (!fs.rename(tmp, target)) { fs.delete(tmp, false); return None }
-      }
-      // only after the new generation is live: sweep superseded ones
-      existing.foreach { case (_, p) => fs.delete(p, false) }
-    } catch { case _: java.io.IOException => () }
-    Some(entries)
-  }
-
-  private def listVersions(name: String): Seq[(Long, Path)] = {
-    val glob = new Path(dir, s"$name.__v*")
-    val stats = try fs.globStatus(glob) catch { case _: java.io.IOException => null }
-    Option(stats).map(_.toSeq).getOrElse(Nil).flatMap { st =>
-      val base = st.getPath.getName
-      base.stripPrefix(s"$name.__v").toLongOption.map(_ -> st.getPath)
-    }.sortBy(_._1)
-  }
-
-  private def readPointer(name: String): Option[Path] = {
-    val p = pointerPath(name)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val target = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-      Some(new Path(dir, target)).filter(fs.exists)
-    }
-  }
-
-  /** The directory currently holding `name`'s data: committed pointer
-    * first; else crash recovery (newest version with a `_SUCCESS` marker);
-    * else the flat append-layout directory `dir/name` — where every
-    * append-only CAS table (`supervisiones_*`, `supervision_areas`,
-    * `seguridad_kpis`, `sync_log`) lives, since the daily path never
-    * rewrites them.
-    */
-  private def resolve(name: String): Path =
-    readPointer(name)
-      .orElse(listVersions(name).reverse.collectFirst {
-        case (_, p) if fs.exists(new Path(p, "_SUCCESS")) => p
-      })
-      .getOrElse(new Path(dir, name))
 
   private def hasParquet(p: Path): Boolean =
     fs.exists(p) && (
@@ -450,9 +299,9 @@ case class Warehouse(spark: SparkSession, dir: String) {
   def rewrite(name: String, df: DataFrame, partitionBy: Seq[String] = Nil): Unit = withWriterLease(s"rewrite:$name") {
     // what readers resolved BEFORE this rewrite (pointer, crash-recovered
     // version, or the flat append dir) — the one directory GC must keep
-    val prevLive = resolve(name)
-    val next = listVersions(name).lastOption.map(_._1).getOrElse(0L) + 1
-    val vname = versionName(name, next)
+    // besides the window
+    val (versions, committed, prevLive) = committedState(name)
+    val vname = versionName(name, versions.lastOption.map(_._1).getOrElse(0L) + 1)
     // partitionBy gives a versioned table the Hive layout (col=value dirs
     // inside the version dir) so partition-pruned reads work under the
     // same pointer-flip commit — the IVF inverted-list table's shape.
@@ -473,40 +322,37 @@ case class Warehouse(spark: SparkSession, dir: String) {
       .option("maxRecordsPerFile", MaxRecordsPerFile)
       .partitionBy(partitionBy: _*).parquet(path(vname))
 
-    // commit: tmp pointer + rename. Rename is atomic on local FS and HDFS;
-    // between delete and rename there is no pointer, and resolve() then
-    // picks this newest _SUCCESS-marked version — still consistent.
-    val ptr = pointerPath(name)
+    // commit: the new window into the tmp pointer, then rename. Rename
+    // is atomic on local FS and HDFS; between delete and rename there is
+    // no pointer, and resolve() then picks this newest _SUCCESS-marked
+    // version — still consistent.
+    val window = (committed :+ vname).takeRight(Warehouse.PointerWindow)
+    val ptr = Warehouse.pointerPath(root, name)
     val tmp = new Path(dir, s"$name.__current.tmp")
     val out = fs.create(tmp, true)
-    try out.write(vname.getBytes("UTF-8")) finally out.close()
-    if (fs.exists(ptr)) fs.delete(ptr, false)
+    try out.write(window.mkString("", "\n", "\n").getBytes("UTF-8")) finally out.close()
+    fs.delete(ptr, false)
     if (!fs.rename(tmp, ptr))
       throw new java.io.IOException(s"rewrite of $name failed to commit pointer")
-    val committedOpt = appendHistory(name, vname, Some(prevLive.getName))
 
     // best-effort GC keeps what pre-rewrite readers resolved (prevLive, by
     // identity — NOT by version number, which a stray uncommitted dir from
-    // a crashed write would shift), the new version, AND the newest
-    // RetainVersions COMMITTED generations (pointer-target history — a
-    // stray dir never occupies a reader-window slot, since no reader can
-    // have resolved it through the pointer): a DataFrame whose scan
-    // resolved TWO OR MORE rewrites ago may still be unevaluated, and a
-    // one-generation window would delete its files mid-flight — the very
-    // hazard versioning removes. Strays are swept here; multi-generation
-    // reclamation belongs solely to `vacuum`, which the caller invokes
-    // when no older readers can exist.
-    committedOpt.foreach { committed =>
-      val recent = committed.takeRight(RetainVersions)
-      val keep = (recent :+ vname :+ prevLive.getName).toSet
-      listVersions(name).foreach { case (_, p) =>
-        if (!keep.contains(p.getName)) fs.delete(p, true) }
-    }
+    // a crashed write would shift) AND the newest RetainVersions entries
+    // of the committed window (a stray dir never occupies a window slot,
+    // since no reader can have resolved it through the pointer): a
+    // DataFrame whose scan resolved TWO OR MORE rewrites ago may still be
+    // unevaluated, and a one-generation window would delete its files
+    // mid-flight — the very hazard versioning removes. Strays are swept
+    // here; multi-generation reclamation belongs solely to `vacuum`, which
+    // the caller invokes when no older readers can exist.
+    val keep = (window.takeRight(RetainVersions) :+ prevLive.getName).toSet
+    versions.foreach { case (_, p) => if (!keep.contains(p.getName)) fs.delete(p, true) }
   }
 
-  /** Version directories `rewrite` retains beyond the live one — bounds
-    * how far behind a still-unevaluated reader plan may lag before only
-    * `vacuum` (not a routine rewrite) could break it.
+  /** Committed versions `rewrite` retains, the live one included —
+    * bounds how far behind a still-unevaluated reader plan may lag
+    * (RetainVersions - 1 rewrites) before only `vacuum` (not a routine
+    * rewrite) could break it.
     */
   val RetainVersions = 3
 
@@ -523,32 +369,20 @@ case class Warehouse(spark: SparkSession, dir: String) {
     * flat append directory). Call when no reader holds a plan resolved
     * before the last rewrite — e.g. between runs. Keeps whatever
     * [[resolve]] currently returns — in the crash window with no pointer,
-    * that is the newest complete version, never nothing.
+    * that is the newest complete version, never nothing. The pointer is
+    * left as it is: the entries it lists before the live one may name
+    * reclaimed versions, which are older than every survivor, so they
+    * never take a retention slot from one.
     */
   def vacuum(name: String): Unit = withWriterLease(s"vacuum:$name") {
-    val live = resolve(name).getName
-    listVersions(name).foreach { case (_, p) =>
-      if (p.getName != live) fs.delete(p, true) }
+    val (versions, _, liveDir) = committedState(name)
+    val live = liveDir.getName
+    versions.foreach { case (_, p) => if (p.getName != live) fs.delete(p, true) }
     val flat = new Path(dir, name)
     if (live != name && fs.exists(flat)) fs.delete(flat, true)
-    // reset the retention history to the sole surviving generation, and
-    // reclaim tmp strays left by crashed writers (tmp names are
-    // writer-unique since round 6, so they no longer self-overwrite; a
-    // LIVE concurrent writer losing its tmp here just skips GC for that
-    // rewrite — vacuum is already documented as a quiescent operation)
-    try {
-      // rawHistoryFiles, not historyFiles: zero-length claims from crashed
-      // writers are invisible to resolution and must be reclaimed HERE —
-      // numbering steps past them, so nothing else ever removes them
-      rawHistoryFiles(name).foreach { case (_, p, _) => fs.delete(p, false) }
-      Option(fs.globStatus(new Path(dir, s"$name.__history.tmp*")))
-        .getOrElse(Array.empty).foreach(st => fs.delete(st.getPath, false))
-      // ...and the fixed-name pointer tmp a rewrite crashed between
-      // create and rename would leave (one file per table at most).
-      val pointerTmp = new Path(dir, s"$name.__current.tmp")
-      if (fs.exists(pointerTmp)) fs.delete(pointerTmp, false)
-      if (live.startsWith(s"$name.__v")) appendHistory(name, live, None)
-    } catch { case _: java.io.IOException => () }
+    // the fixed-name pointer tmp a rewrite crashed between create and
+    // rename would leave (one file per table at most)
+    fs.delete(new Path(dir, s"$name.__current.tmp"), false)
   }
 
   /** Bounded-retention reclamation — [[vacuum]] for tables that keep
@@ -558,35 +392,27 @@ case class Warehouse(spark: SparkSession, dir: String) {
     * moment that may never come). Keeps whatever [[resolve]] currently
     * returns (in the crash window with no pointer, that is the newest
     * complete version — a live target is NEVER deleted) plus the newest
-    * `retainLast` COMMITTED generations BESIDES live (live-exclusive, so
-    * the window is not silently one narrower when live is itself the
-    * newest committed generation — the usual case), so a
-    * still-unevaluated reader plan up to `retainLast` rewrites old keeps
-    * resolving. An unreadable
-    * history means the committed window is unknown: skip reclamation
-    * entirely rather than guess (deleting a still-referenced version is
-    * the one unrecoverable outcome). Like [[vacuum]], assumes no
-    * concurrent WRITER on this table (an uncommitted in-flight version
-    * dir reads as a stray and would be swept); readers are safe within
-    * the retention window. `retainLast <= 0` degrades to the full
-    * [[vacuum]].
+    * `retainLast` entries of the pointer's committed window BESIDES live
+    * (live-exclusive, so the window is not silently one narrower when
+    * live is itself the newest committed generation — the usual case),
+    * so a still-unevaluated reader plan up to `retainLast` rewrites old
+    * keeps resolving. Like [[vacuum]], assumes no concurrent WRITER on
+    * this table (an uncommitted in-flight version dir reads as a stray
+    * and would be swept); readers are safe within the retention window.
+    * `retainLast <= 0` degrades to the full [[vacuum]].
     */
   def vacuum(name: String, retainLast: Int): Unit = withWriterLease(s"vacuum:$name:$retainLast") {
     if (retainLast <= 0) vacuum(name) // re-enters the held lease
     else {
-      val live = resolve(name).getName
-      val committed =
-        try Some(history(name)) catch { case _: java.io.IOException => None }
-      committed.foreach { committedNames =>
-        val keep = (committedNames.filterNot(_ == live).takeRight(retainLast) :+ live).toSet
-        listVersions(name).foreach { case (_, p) =>
-          if (!keep.contains(p.getName)) fs.delete(p, true) }
-        // the flat append dir is a generation like any other: reclaim it
-        // only when neither live nor the retention window still names it
-        val flat = new Path(dir, name)
-        if (!keep.contains(name) && fs.exists(flat) && fs.getFileStatus(flat).isDirectory)
-          fs.delete(flat, true)
-      }
+      val (versions, committed, liveDir) = committedState(name)
+      val live = liveDir.getName
+      val keep = (committed.filterNot(_ == live).takeRight(retainLast) :+ live).toSet
+      versions.foreach { case (_, p) => if (!keep.contains(p.getName)) fs.delete(p, true) }
+      // the flat append dir is a generation like any other: reclaim it
+      // only when neither live nor the retention window still names it
+      val flat = new Path(dir, name)
+      if (!keep.contains(name) && fs.exists(flat) && fs.getFileStatus(flat).isDirectory)
+        fs.delete(flat, true)
     }
   }
 

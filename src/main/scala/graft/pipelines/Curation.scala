@@ -256,13 +256,13 @@ object Curation {
     try s.createDataFrame(java.util.Arrays.asList(run.audit.collect(): _*), run.audit.schema)
     finally run.close()
 
-  /** The staging CTE block shared verbatim by t35/t41's oracles —
-    * per-doc quality signals, the min-per-hash exact stage, and the
-    * survivor-restricted shingle feed for the near-dup chain. Mirrors
-    * [[withSignals]] + the exact stage of [[curateHandle]] one-to-one.
+  /** The staging CTEs every curation oracle starts from — per-doc
+    * quality signals, the quality rule, the min-per-hash exact stage and
+    * the survivor-restricted shingle feed with its signature and
+    * candidate-pair CTEs. Mirrors [[withSignals]] + the exact stage of
+    * [[curateHandle]] one-to-one.
     */
-  private[pipelines] def stagingSqlCtes(t: Thresholds, extraPairSql: String = "",
-                                        preDropsCtes: String = ""): String = {
+  private def stagedCtes(t: Thresholds): String = {
     val T = graft.queries.TextOps
     s"""${T.shingleCtes},
        |q AS (
@@ -289,7 +289,15 @@ object Curation {
        |  SELECT hs.doc_id, hs.hs FROM hs JOIN staged2 USING (doc_id)
        |  WHERE staged2.exact_ok),
        |${T.sigCteFrom("hs_surv")},
-       |${T.candPairCtes},$preDropsCtes
+       |${T.candPairCtes}""".stripMargin
+  }
+
+  /** The CTE block of t35/t41's oracles: [[stagedCtes]], then the
+    * pairwise near-dup drop set and the per-doc stage tags.
+    */
+  private[pipelines] def stagingSqlCtes(t: Thresholds, extraPairSql: String = "",
+                                        preDropsCtes: String = ""): String =
+    s"""${stagedCtes(t)},$preDropsCtes
        |drops AS (SELECT DISTINCT doc_b AS doc_id FROM (
        |  SELECT doc_a, doc_b FROM est
        |  WHERE est_jaccard >= ${t.nearDupJaccard}$extraPairSql)),
@@ -300,7 +308,6 @@ object Curation {
        |         WHEN d.doc_id IS NOT NULL THEN 'near_dup'
        |         ELSE 'kept' END AS stage
        |  FROM staged2 s LEFT JOIN drops d ON s.doc_id = d.doc_id)""".stripMargin
-  }
 
   /** The five audit counters over `tagged`, optionally restricted — the
     * shared tail of the curation oracles.
@@ -376,32 +383,7 @@ object Curation {
   private def t38CtesWith(candCtes: String, candName: String): String = {
     val t = Thresholds()
     val T = graft.queries.TextOps
-    s"""${T.shingleCtes},
-       |q AS (
-       |  SELECT d.doc_id,
-       |    len(t.toks) AS n_tokens,
-       |    CASE WHEN len(t.toks) > 0
-       |         THEN len(list_filter(t.toks, x -> x IN ('the', 'a'))) * 1.0 / len(t.toks)
-       |         ELSE 1.0 END AS stop_ratio,
-       |    CASE WHEN len(t.toks) >= 3
-       |         THEN 1.0 - coalesce(len(h.hs), 0) * 1.0 / (len(t.toks) - 2)
-       |         ELSE 0.0 END AS rep_ratio,
-       |    md5(d.text) AS content_hash
-       |  FROM documents d JOIN tk t USING (doc_id) LEFT JOIN hs h USING (doc_id)),
-       |staged AS (
-       |  SELECT doc_id, content_hash,
-       |    (n_tokens >= ${t.minTokens} AND stop_ratio <= ${t.maxStopwordRatio}
-       |      AND rep_ratio <= ${t.maxRepRatio}) AS q_ok
-       |  FROM q),
-       |staged2 AS (
-       |  SELECT *, (q_ok AND doc_id =
-       |    min(CASE WHEN q_ok THEN doc_id END) OVER (PARTITION BY content_hash)) AS exact_ok
-       |  FROM staged),
-       |hs_surv AS (
-       |  SELECT hs.doc_id, hs.hs FROM hs JOIN staged2 USING (doc_id)
-       |  WHERE staged2.exact_ok),
-       |${T.sigCteFrom("hs_surv")},
-       |${T.candPairCtes},
+    s"""${stagedCtes(t)},
        |$candCtes,
        |v2d AS (SELECT vec_id, vec_id AS doc_id FROM embeddings),
        |emb_pairs AS (

@@ -140,29 +140,6 @@ object IncrementalCuration {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
     else df.localCheckpoint()
 
-  /** Concurrent dispatch width for [[ingestImpl]]'s three index advances
-    * (`SPARK_GRAFT_APPEND_PAR`, specs override via the
-    * `graft.append.par` system property). Default 3 — one thread per
-    * advance; they are IO-bound parquet writes of independent tables, so
-    * overlap converts the round-16 stage table's 38.5 s of sequential
-    * append wall into max-of-three. 1 forces the sequential path.
-    */
-  private def AppendPar: Int =
-    sys.props.get("graft.append.par").map(_.trim.toInt)
-      .getOrElse(TextOps.envInt("SPARK_GRAFT_APPEND_PAR", 1, 3))
-
-  /** Overlapped dispatch of [[ingestImpl]]'s embedding branch
-    * (`SPARK_GRAFT_INGEST_OVERLAP`; specs override via the
-    * `graft.ingest.overlap` system property). Default 1 — the
-    * code → index-probe → pair-normalization chain reads only the
-    * embedding slice and the persisted index, so it runs BESIDE the
-    * independent text stages instead of after them; 0 forces the
-    * sequential dispatch. Results are dispatch-invariant (spec-pinned).
-    */
-  private def IngestOverlap: Boolean =
-    sys.props.get("graft.ingest.overlap").map(_.trim.toInt)
-      .getOrElse(TextOps.envInt("SPARK_GRAFT_INGEST_OVERLAP", 0, 1)) > 0
-
   /** Explicitly release the storage a [[cut]] pinned — the persisted
     * blocks behind the checkpointed frame's `LogicalRDD`. Within one
     * long-lived session (the bench JVM runs the lifecycle queries ~164
@@ -420,8 +397,7 @@ object IncrementalCuration {
     // same overlap lever as the concurrent appends below (round-16
     // next #4, extended to the pre-probe stages). Dispatch-invariant by
     // construction: the branch READS the index and shares no mutable
-    // state with the text stages; [[IngestOverlap]] = 0 forces the
-    // sequential order for A/B and stage-table work.
+    // state with the text stages.
     def runEmbBranch(e: EmbeddingSignal): (DataFrame, DataFrame, Seq[DataFrame]) = {
       // the batch coding is shared by probe and append (the batch's
       // dominant per-vector compute, materialized once)
@@ -442,34 +418,31 @@ object IncrementalCuration {
       // drop-set stage and must survive until it materializes
       (coded, norm, Seq(preCoded, coded, vPairs, preNorm))
     }
-    // overlapped mode backs the handle with a single-thread pool + job
-    // group so a main-path failure cancels the in-flight branch (same
-    // teardown ORDER as the probe slices: stop the pool first, then
-    // cancel current and future group jobs)
+    // the branch runs on a single-thread pool + job group so a main-path
+    // failure cancels it in flight (same teardown ORDER as the probe
+    // slices: stop the pool first, then cancel current and future group
+    // jobs)
     var embTeardown: Option[() => Unit] = None
     val embAwait: Option[() => (DataFrame, DataFrame, Seq[DataFrame])] = emb.map { e =>
-      if (!IngestOverlap) () => runEmbBranch(e)
-      else {
-        val sc = batchDocs.sparkSession.sparkContext
-        val group = s"graft-ingest-emb-${java.util.UUID.randomUUID()}"
-        val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
-        embTeardown = Some(() => {
-          pool.shutdownNow()
-          sc.cancelJobGroupAndFutureJobs(group)
-        })
-        val fut = pool.submit(new java.util.concurrent.Callable[(DataFrame, DataFrame, Seq[DataFrame])] {
-          def call(): (DataFrame, DataFrame, Seq[DataFrame]) = {
-            // job-group properties are thread-local: the branch tags its
-            // own jobs (interruptOnCancel reaches the tasks)
-            sc.setJobGroup(group, "ingest embedding branch", interruptOnCancel = true)
-            try runEmbBranch(e) finally sc.clearJobGroup()
-          }
-        })
-        () =>
-          try fut.get() catch {
-            case ee: java.util.concurrent.ExecutionException => throw ee.getCause
-          } finally { embTeardown = None; pool.shutdown() }
-      }
+      val sc = batchDocs.sparkSession.sparkContext
+      val group = s"graft-ingest-emb-${java.util.UUID.randomUUID()}"
+      val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+      embTeardown = Some(() => {
+        pool.shutdownNow()
+        sc.cancelJobGroupAndFutureJobs(group)
+      })
+      val fut = pool.submit(new java.util.concurrent.Callable[(DataFrame, DataFrame, Seq[DataFrame])] {
+        def call(): (DataFrame, DataFrame, Seq[DataFrame]) = {
+          // job-group properties are thread-local: the branch tags its
+          // own jobs (interruptOnCancel reaches the tasks)
+          sc.setJobGroup(group, "ingest embedding branch", interruptOnCancel = true)
+          try runEmbBranch(e) finally sc.clearJobGroup()
+        }
+      })
+      () =>
+        try fut.get() catch {
+          case ee: java.util.concurrent.ExecutionException => throw ee.getCause
+        } finally { embTeardown = None; pool.shutdown() }
     }
     def guarded[A](body: => A): A =
       try body catch { case th: Throwable => embTeardown.foreach(_.apply()); throw th }
@@ -547,11 +520,9 @@ object IncrementalCuration {
     // mattered for crash-safety: every append is individually
     // replay-idempotent (settled-hash guard, band/emb anti-joins), so a
     // crash after any SUBSET of them replays to the same state
-    // regardless of which subset landed — the same contract the
-    // sequential ordering relied on (spec-pinned: concurrent == sequential
-    // final state). The warehouse writer lease is held ONCE around the
-    // block: per-append acquisition from fresh threads would race the
-    // create-exclusive against this same process.
+    // regardless of which subset landed. The warehouse writer lease is
+    // held ONCE around the block: per-append acquisition from fresh
+    // threads would race the create-exclusive against this same process.
     //
     // Round 18: the advances run BEFORE the drop-set stage, not after
     // the outputs (guide §5 — release what is done; round-17 VERDICT
@@ -575,24 +546,20 @@ object IncrementalCuration {
       () => BandIndex.appendBatchBanded(wh, bandedSurv),
       () => emb.zip(codedBatch).foreach { case (e, c) => e.appendCoded(wh, c) })
     wh.withWriterScope("ingest-appends") {
-      if (AppendPar <= 1) appendTasks.foreach(_())
-      else {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(AppendPar, appendTasks.size))
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        try Await.result(
-          Future.sequence(appendTasks.map(f => Future(f()))),
-          scala.concurrent.duration.Duration.Inf)
-        finally {
-          // drain FULLY before the writer scope closes: Await rethrows on
-          // the FIRST failure, but a sibling append may still be writing —
-          // releasing the lease (and the cuts below) under it would let
-          // another process GC versions mid-write. In-flight appends are
-          // idempotent, so letting them land is the safe teardown.
-          pool.shutdown()
-          pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
-        }
+      import scala.concurrent.{Await, ExecutionContext, Future}
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(appendTasks.size)
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      try Await.result(
+        Future.sequence(appendTasks.map(f => Future(f()))),
+        scala.concurrent.duration.Duration.Inf)
+      finally {
+        // drain FULLY before the writer scope closes: Await rethrows on
+        // the FIRST failure, but a sibling append may still be writing —
+        // releasing the lease (and the cuts below) under it would let
+        // another process GC versions mid-write. In-flight appends are
+        // idempotent, so letting them land is the safe teardown.
+        pool.shutdown()
+        pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
       }
     }
     // staged release #1 (the emb-pairs-norm boundary): the appends were

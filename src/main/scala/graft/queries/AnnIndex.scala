@@ -1339,9 +1339,8 @@ object IvfModel {
 
   /** The live centroid directory for the DuckDB oracle. Oracle SQL is
     * generated without a Spark session, and DuckDB is a local single-node
-    * tool, so this resolves the warehouse pointer with plain java.io —
-    * mirroring `Warehouse.resolve` (pointer file, else newest complete
-    * version) for the local-FS case.
+    * tool, so this resolves through [[Warehouse.resolve]] over the local
+    * FileSystem.
     */
   def oraclePath(dir: String): String = oraclePathFor(dir, TableName)
 
@@ -1350,24 +1349,8 @@ object IvfModel {
     * asset table) embed in their SQL.
     */
   def oraclePathFor(dir: String, table: String): String = {
-    val root = rootFor(dir)
-    def exists(f: java.io.File) = f.exists()
-    val fromPointer =
-      try {
-        val t = java.nio.file.Files
-          .readString(java.nio.file.Paths.get(root, s"$table.__current")).trim
-        Some(new java.io.File(root, t)).filter(exists)
-      } catch { case _: java.io.IOException => None }
-    fromPointer.orElse {
-      // sort by the PARSED numeric suffix, mirroring Warehouse.listVersions
-      // exactly — lexicographic name order diverges from it once the
-      // version counter outgrows the %06d zero-padding
-      Option(new java.io.File(root).listFiles()).getOrElse(Array.empty[java.io.File])
-        .filter(f => f.getName.startsWith(s"$table.__v") &&
-          new java.io.File(f, "_SUCCESS").exists())
-        .flatMap(f => f.getName.stripPrefix(s"$table.__v").toLongOption.map(_ -> f))
-        .sortBy(_._1).lastOption.map(_._2)
-    }.getOrElse(new java.io.File(root, table)).toString
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
+    Warehouse.resolve(fs, new org.apache.hadoop.fs.Path(rootFor(dir)), table).toUri.getPath
   }
 }
 

@@ -14,8 +14,8 @@ import graft.etl._
 class CasEtlSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def freshWarehouse(): Warehouse = {
-    val wh = Warehouse(spark, Files.createTempDirectory("graft_wh_").toString)
+  private def freshWarehouse(scheme: String = ""): Warehouse = {
+    val wh = Warehouse(spark, scheme + Files.createTempDirectory("graft_wh_").toString)
     val periodos = spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(
         Row(1, "P1", "Enero", java.sql.Date.valueOf("2026-01-01"), java.sql.Date.valueOf("2026-01-31"), true),
@@ -132,6 +132,18 @@ class CasEtlSpec extends SparkTestBase {
       CasEtl.sync(wh, opsRaw.toDF("json"), "operativas")
       assert(counts(wh) === want, s"after a failed append to $table")
     }
+  }
+
+  test("one sync takes the writer lease once: its four writes re-enter it") {
+    spark.sparkContext.hadoopConfiguration.set("fs.flaky.impl", classOf[FlakyFs].getName)
+    val wh = freshWarehouse("flaky://")
+    FlakyFs.reset()
+    try {
+      // detail append, master append, checkpoint rewrite, sync_log append
+      assert(CasEtl.sync(wh, opsRaw.toDF("json"), "operativas").nuevos === 2)
+      assert(FlakyFs.createsOf("__writer.lease") === 1)
+      assert(wh.syncLog.count() === 1)
+    } finally FlakyFs.reset()
   }
 
   test("a zero-row sync writes nothing to the data tables; sync leaves no persisted RDD") {

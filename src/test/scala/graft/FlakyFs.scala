@@ -2,73 +2,55 @@ package graft
 
 import java.net.URI
 
-import org.apache.hadoop.fs.{Path => HPath, FSDataInputStream, RawLocalFileSystem}
+import org.apache.hadoop.fs.{Path => HPath, FSDataOutputStream, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 
 /** Fault-injecting local FileSystem under the `flaky://` scheme, for
-  * exercising Warehouse's transient-failure paths deterministically: a
-  * test arms a bounded number of failures against a file-name predicate,
-  * and the next matching `open`/`rename` calls fail. Everything else
-  * delegates to the real local FS, so Spark parquet IO over `flaky://`
-  * behaves normally.
+  * exercising Warehouse's failure paths deterministically: a test arms a
+  * bounded number of failures against a file-name predicate, and the next
+  * matching `rename` calls fail. It also counts file creates by name.
+  * Everything else delegates to the real local FS, so Spark parquet IO
+  * over `flaky://` behaves normally.
   */
 class FlakyFs extends RawLocalFileSystem {
   override def getUri: URI = URI.create("flaky:///")
-
-  override def open(f: HPath, bufferSize: Int): FSDataInputStream = {
-    if (FlakyFs.consumeOpen(f.getName))
-      throw new java.io.FileNotFoundException(s"$f (injected)")
-    super.open(f, bufferSize)
-  }
 
   override def rename(src: HPath, dst: HPath): Boolean =
     if (FlakyFs.consumeRename(dst.getName)) false
     else super.rename(src, dst)
 
-  // a false models the create-exclusive losing the race: another writer's
-  // claim appeared between our seq listing and our createNewFile. The
-  // throwing variant models Hadoop's OTHER loser shape — createNewFile is
-  // exists-then-create, so the race loser's create(overwrite=false)
-  // throws FileAlreadyExistsException instead of returning false.
-  override def createNewFile(f: HPath): Boolean =
-    if (FlakyFs.consumeCreateThrow(f.getName))
-      throw new org.apache.hadoop.fs.FileAlreadyExistsException(s"$f (injected)")
-    else if (FlakyFs.consumeCreate(f.getName)) false
-    else super.createNewFile(f)
+  override def create(f: HPath, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+                      replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    FlakyFs.created(f.getName)
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+
+  override def create(f: HPath, overwrite: Boolean, bufferSize: Int, replication: Short,
+                      blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    FlakyFs.created(f.getName)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
 }
 
 object FlakyFs {
-  @volatile private var openFails: (String => Boolean, Int) = ((_: String) => false, 0)
   @volatile private var renameFails: (String => Boolean, Int) = ((_: String) => false, 0)
-  @volatile private var createFails: (String => Boolean, Int) = ((_: String) => false, 0)
-  @volatile private var createThrows: (String => Boolean, Int) = ((_: String) => false, 0)
+  private val creates = new java.util.concurrent.ConcurrentHashMap[String, Int]()
 
-  def failOpens(n: Int)(p: String => Boolean): Unit = synchronized { openFails = (p, n) }
   def failRenames(n: Int)(p: String => Boolean): Unit = synchronized { renameFails = (p, n) }
-  def failCreates(n: Int)(p: String => Boolean): Unit = synchronized { createFails = (p, n) }
-  def failCreateThrows(n: Int)(p: String => Boolean): Unit = synchronized { createThrows = (p, n) }
   def reset(): Unit = synchronized {
-    openFails = ((_: String) => false, 0)
     renameFails = ((_: String) => false, 0)
-    createFails = ((_: String) => false, 0)
-    createThrows = ((_: String) => false, 0)
+    creates.clear()
   }
-  def armed: Boolean =
-    openFails._2 > 0 || renameFails._2 > 0 || createFails._2 > 0 || createThrows._2 > 0
+  def armed: Boolean = renameFails._2 > 0
 
-  private[graft] def consumeOpen(name: String): Boolean = synchronized {
-    val (p, n) = openFails
-    if (n > 0 && p(name)) { openFails = (p, n - 1); true } else false
-  }
+  /** Files named `name` created since the last [[reset]]. */
+  def createsOf(name: String): Int = creates.getOrDefault(name, 0)
+
+  private[graft] def created(name: String): Unit = creates.merge(name, 1, (a: Int, b: Int) => a + b)
+
   private[graft] def consumeRename(name: String): Boolean = synchronized {
     val (p, n) = renameFails
     if (n > 0 && p(name)) { renameFails = (p, n - 1); true } else false
-  }
-  private[graft] def consumeCreate(name: String): Boolean = synchronized {
-    val (p, n) = createFails
-    if (n > 0 && p(name)) { createFails = (p, n - 1); true } else false
-  }
-  private[graft] def consumeCreateThrow(name: String): Boolean = synchronized {
-    val (p, n) = createThrows
-    if (n > 0 && p(name)) { createThrows = (p, n - 1); true } else false
   }
 }

@@ -264,68 +264,6 @@ class IncrementalCurationSpec extends SparkTestBase {
     assert(aud.collect().head.getAs[Long]("input_docs") === ids(partB).size.toLong)
     assert(cur.count() > 0)
   }
-  test("concurrent appends == sequential: identical state tables, audit and kept set (round-16 next #4)") {
-    import graft.pipelines.IncrementalCuration.EmbeddingSignal
-    import graft.queries.BandEmbIndex
-    // multi-signal ingest exercises all THREE advances (hash, band, emb);
-    // the dial flips the dispatch path only — the final warehouse state
-    // must be row-identical either way (the appends share no state and
-    // are individually idempotent, so order/overlap cannot matter)
-    val embAll = graft.core.Tables.embeddings(spark, sf())
-    val embA = embAll.filter(col("vec_id") < 250)
-    val embB = embAll.filter(col("vec_id") >= 250)
-    def runWith(par: String): (Set[Long], Seq[Any], Set[String], Set[String], Long) = {
-      sys.props("graft.append.par") = par
-      try {
-        val wh = tmpWh()
-        IncrementalCuration.seed(wh, partA, emb = Some(EmbeddingSignal(embA)))
-        val (cur, aud) = IncrementalCuration.ingest(wh, partB, emb = Some(EmbeddingSignal(embB)))
-        val hashRows = wh.read(IncrementalCuration.HashTable, IncrementalCuration.HashSchema)
-          .collect().map(_.toSeq.mkString("|")).toSet
-        val bandRows = BandIndex.banded(wh)
-          .collect().map(_.toSeq.mkString("|")).toSet
-        (ids(cur), aud.collect().head.toSeq, hashRows, bandRows,
-          BandEmbIndex.coded(wh).count())
-      } finally sys.props -= "graft.append.par"
-    }
-    val (kept1, aud1, hash1, band1, coded1) = runWith("1")
-    val (kept3, aud3, hash3, band3, coded3) = runWith("3")
-    assert(kept3 === kept1)
-    assert(aud3 === aud1)
-    assert(hash3 === hash1, "hash-table state diverged under concurrent appends")
-    assert(band3 === band1, "band-index state diverged under concurrent appends")
-    assert(coded3 === coded1, "emb-index row count diverged under concurrent appends")
-  }
-
-  test("overlapped embedding branch == sequential: identical audit, kept set and state (round-17 pre-probe overlap)") {
-    import graft.pipelines.IncrementalCuration.EmbeddingSignal
-    import graft.queries.BandEmbIndex
-    // the dial flips only WHEN the emb code+probe+norm chain runs
-    // (beside the text stages vs after them); the branch reads the
-    // embedding slice and the persisted index and shares no mutable
-    // state with the text stages, so every output must be row-identical
-    val embAll = graft.core.Tables.embeddings(spark, sf())
-    val embA = embAll.filter(col("vec_id") < 250)
-    val embB = embAll.filter(col("vec_id") >= 250)
-    def runWith(overlap: String): (Set[Long], Seq[Any], Set[String], Long) = {
-      sys.props("graft.ingest.overlap") = overlap
-      try {
-        val wh = tmpWh()
-        IncrementalCuration.seed(wh, partA, emb = Some(EmbeddingSignal(embA)))
-        val (cur, aud) = IncrementalCuration.ingest(wh, partB, emb = Some(EmbeddingSignal(embB)))
-        val hashRows = wh.read(IncrementalCuration.HashTable, IncrementalCuration.HashSchema)
-          .collect().map(_.toSeq.mkString("|")).toSet
-        (ids(cur), aud.collect().head.toSeq, hashRows, BandEmbIndex.coded(wh).count())
-      } finally sys.props -= "graft.ingest.overlap"
-    }
-    val (kept0, aud0, hash0, coded0) = runWith("0")
-    val (kept1, aud1, hash1, coded1) = runWith("1")
-    assert(kept1 === kept0)
-    assert(aud1 === aud0)
-    assert(hash1 === hash0, "hash-table state diverged under overlapped emb branch")
-    assert(coded1 === coded0, "emb-index state diverged under overlapped emb branch")
-  }
-
   test("multi-signal seed stamp carries the EmbIndex partition-layout token") {
     // a warehouse seeded before the pbucket fan-out lays emb_buckets out
     // under bucket= directories; a layout-blind stamp would accept it and

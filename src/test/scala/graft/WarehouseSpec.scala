@@ -245,70 +245,6 @@ class WarehouseSpec extends SparkTestBase {
     assert(names(wh) === Set("new"))
   }
 
-  test("history resolves the newest generation; stale generations and tmp strays are inert") {
-    val wh = fresh()
-    wh.rewrite("t", Seq((1L, "gen1")).toDF("id", "name")) // v1 committed, history gen written
-    val fs = new Path(wh.dir).getFileSystem(spark.sessionState.newHadoopConf())
-    def put(p: String, txt: String): Unit = {
-      val out = fs.create(new Path(wh.dir, p), true)
-      try out.write(txt.getBytes("UTF-8")) finally out.close()
-    }
-    // crash debris: a STALE older generation naming a dir that never was a
-    // pointer target, and an abandoned tmp — neither may affect resolution
-    put("t.__history.000000", "t.__v000099\n")
-    put("t.__history.tmp", "t.__v000098\n")
-    val pre = wh.read("t", schema)
-    wh.rewrite("t", Seq((1L, "gen2")).toDF("id", "name"))
-    assert(pre.collect().map(_.getString(1)).toSet === Set("gen1"))
-    assert(names(wh) === Set("gen2"))
-    // the commit swept superseded generations: exactly one numeric
-    // generation file remains, and it is the newest
-    val gens = fs.globStatus(new Path(wh.dir, "t.__history.*")).map(_.getPath.getName)
-      .filter(_.stripPrefix("t.__history.").forall(_.isDigit))
-    assert(gens.length === 1)
-    // vacuum reclaims abandoned tmp strays (writer-unique names no longer
-    // self-overwrite, so crash debris would otherwise linger forever)
-    assert(fs.exists(new Path(wh.dir, "t.__history.tmp")))
-    wh.vacuum("t")
-    assert(fs.globStatus(new Path(wh.dir, "t.__history.tmp*")).isEmpty)
-    assert(names(wh) === Set("gen2")) // the live table is untouched
-  }
-
-  test("a crashed claim (zero-length newest generation) neither shadows history nor stalls numbering") {
-    val wh = fresh()
-    wh.rewrite("t", Seq((1L, "gen1")).toDF("id", "name")) // v1, committed
-    val pre = wh.read("t", schema)                        // reader holds v1
-    val fs = new Path(wh.dir).getFileSystem(spark.sessionState.newHadoopConf())
-    // crash debris pair: an uncommitted version dir AND a zero-length
-    // claim at the next history seq (a writer died between createNewFile
-    // and renaming its entry list over it). Were the empty claim resolved
-    // as the newest generation, history would read as an EMPTY entry list
-    // and the next rewrite would seed the committed set from raw version
-    // dirs — admitting the stray into a reader-window slot and pushing v1
-    // out two rewrites later.
-    Seq((1L, "stray")).toDF("id", "name").write.parquet(s"${wh.dir}/t.__v000002")
-    val maxSeq = fs.globStatus(new Path(wh.dir, "t.__history.*")).map(_.getPath.getName)
-      .flatMap(_.stripPrefix("t.__history.").toLongOption).max
-    assert(fs.createNewFile(new Path(wh.dir, f"t.__history.${maxSeq + 1}%06d")))
-    wh.rewrite("t", Seq((1L, "gen2")).toDF("id", "name"))
-    wh.rewrite("t", Seq((1L, "gen3")).toDF("id", "name"))
-    assert(pre.collect().map(_.getString(1)).toSet === Set("gen1"),
-      "the empty claim shadowed the intact generation and the stray seed narrowed the window")
-    assert(names(wh) === Set("gen3"))
-    // numbering moved PAST the stale claim (a same-seq retry would lose
-    // the claim and skip GC on every future rewrite)
-    val committed = fs.globStatus(new Path(wh.dir, "t.__history.*"))
-      .flatMap(st => st.getPath.getName.stripPrefix("t.__history.").toLongOption
-        .map(_ -> st.getLen))
-    assert(committed.exists { case (seq, len) => seq > maxSeq + 1 && len > 0 })
-    // the stale claim itself is reclaimed by vacuum, not left forever
-    wh.vacuum("t")
-    val after = fs.globStatus(new Path(wh.dir, "t.__history.*"))
-      .filter(_.getPath.getName.stripPrefix("t.__history.").forall(_.isDigit))
-    assert(after.nonEmpty && after.forall(_.getLen > 0))
-    assert(names(wh) === Set("gen3"))
-  }
-
   test("a stray never shrinks the reader window (retention counts committed generations)") {
     val wh = fresh()
     wh.rewrite("t", Seq((1L, "gen1")).toDF("id", "name")) // v1, committed
@@ -323,129 +259,40 @@ class WarehouseSpec extends SparkTestBase {
     assert(names(wh) === Set("gen3"))
   }
 
-  // --- transient-failure paths, driven through the fault-injecting
-  // flaky:// FileSystem (FlakyFs): concurrent-sweep FNF races and
-  // generation-rename collisions must SKIP GC, never corrupt the window
-  private def flakyWh(): Warehouse = {
-    spark.sparkContext.hadoopConfiguration
-      .set("fs.flaky.impl", classOf[FlakyFs].getName)
-    FlakyFs.reset()
-    Warehouse(spark, "flaky://" + Files.createTempDirectory("graft_flaky_").toString)
-  }
-  private def isHistoryGen(n: String): Boolean =
-    n.startsWith("t.__history.") && n.stripPrefix("t.__history.").forall(_.isDigit)
-  private def versionDirs(wh: Warehouse): Int = {
+  test("the pointer is the one commit record: its window alone keeps a lagging reader alive") {
+    val wh = fresh()
     val fs = new Path(wh.dir).getFileSystem(spark.sessionState.newHadoopConf())
-    fs.globStatus(new Path(wh.dir, "t.__v*")).length
+    wh.rewrite("t", Seq((1L, "gen1")).toDF("id", "name"))
+    val pre = wh.read("t", schema) // resolves gen1 NOW
+    // the window holds RetainVersions committed versions, live included:
+    // gen1 stays the oldest of them through RetainVersions - 1 rewrites
+    (2 to wh.RetainVersions).foreach(i => wh.rewrite("t", Seq((1L, s"gen$i")).toDF("id", "name")))
+    assert(pre.collect().map(_.getString(1)).toSet === Set("gen1"))
+    assert(Option(fs.globStatus(new Path(wh.dir, "t.__history*"))).forall(_.isEmpty),
+      "a rewrite wrote a history file")
+    val pointer = new String(Files.readAllBytes(
+      java.nio.file.Paths.get(wh.dir, "t.__current")), "UTF-8").linesIterator.toSeq
+    assert(pointer === (1 to wh.RetainVersions).map(i => f"t.__v$i%06d"))
+    // one rewrite more slides gen1 out of the window, and GC reclaims it
+    wh.rewrite("t", Seq((1L, "next")).toDF("id", "name"))
+    assert(!fs.exists(new Path(wh.dir, "t.__v000001")))
+    assert(names(wh) === Set("next"))
   }
 
-  test("history generation swept mid-read (one FNF): retried, GC proceeds") {
-    val wh = flakyWh()
+  test("a refused pointer rename fails the rewrite; the table still reads a complete generation") {
+    spark.sparkContext.hadoopConfiguration.set("fs.flaky.impl", classOf[FlakyFs].getName)
+    FlakyFs.reset()
+    val wh = Warehouse(spark, "flaky://" + Files.createTempDirectory("graft_flaky_").toString)
     try {
-      (1 to 4).foreach(i => wh.rewrite("t", Seq((1L, s"v$i")).toDF("id", "name")))
-      assert(versionDirs(wh) === wh.RetainVersions)
-      FlakyFs.failOpens(1)(isHistoryGen) // the race hits once; retry lands
-      wh.rewrite("t", Seq((1L, "v5")).toDF("id", "name"))
-      assert(!FlakyFs.armed, "injected FNF was not consumed")
-      assert(versionDirs(wh) === wh.RetainVersions) // GC ran normally
-      assert(names(wh) === Set("v5"))
-    } finally FlakyFs.reset()
-  }
-
-  test("history generation vanishing twice is transient, not absent: GC skipped, then self-heals") {
-    val wh = flakyWh()
-    try {
-      (1 to 4).foreach(i => wh.rewrite("t", Seq((1L, s"v$i")).toDF("id", "name")))
-      assert(versionDirs(wh) === wh.RetainVersions)
-      // both the first read AND the retry hit FNF: the committed set is
-      // unknown — were this treated as "absent history", the seed from raw
-      // version dirs would fabricate a committed set and GC against it
-      FlakyFs.failOpens(2)(isHistoryGen)
-      wh.rewrite("t", Seq((1L, "v5")).toDF("id", "name"))
-      assert(!FlakyFs.armed, "injected FNFs were not consumed")
-      assert(versionDirs(wh) === wh.RetainVersions + 1) // GC skipped this rewrite
-      assert(names(wh) === Set("v5"))
-      // next rewrite reads the intact history, self-heals the lost entry
-      // (prevLive is committed by definition) and GC catches back up
-      wh.rewrite("t", Seq((1L, "v6")).toDF("id", "name"))
-      assert(versionDirs(wh) === wh.RetainVersions)
-      assert(names(wh) === Set("v6"))
-    } finally FlakyFs.reset()
-  }
-
-  test("history seq collision (claim lost to a concurrent writer): GC skipped, then self-heals") {
-    // The collision guard is the create-exclusive CLAIM, not rename-
-    // returns-false (POSIX local rename silently overwrites, so rename
-    // could never guard here). A writer whose claim appears BEFORE our
-    // seq listing never collides — we list past it and take the next seq
-    // — so the race is between the listing and the createNewFile, and
-    // the injected create-false models exactly that: the other writer
-    // claimed our computed seq first.
-    val wh = flakyWh()
-    try {
-      (1 to 4).foreach(i => wh.rewrite("t", Seq((1L, s"v$i")).toDF("id", "name")))
-      assert(versionDirs(wh) === wh.RetainVersions)
-      FlakyFs.failCreates(1)(isHistoryGen)
-      wh.rewrite("t", Seq((1L, "v5")).toDF("id", "name")) // must not throw
-      assert(!FlakyFs.armed, "injected create failure was not consumed")
-      assert(versionDirs(wh) === wh.RetainVersions + 1) // GC skipped this rewrite
-      assert(names(wh) === Set("v5"))
-      wh.rewrite("t", Seq((1L, "v6")).toDF("id", "name")) // self-heal + GC resumes
-      assert(versionDirs(wh) === wh.RetainVersions)
-      assert(names(wh) === Set("v6"))
-    } finally FlakyFs.reset()
-  }
-
-  test("claim lost via FileAlreadyExistsException (Hadoop's other loser shape): GC skipped") {
-    // createNewFile is exists-then-create, so the race loser can surface
-    // as a thrown FileAlreadyExistsException rather than false. Both
-    // shapes must read as claim-lost; the exception reaching the blanket
-    // IOException catch would return Some and run GC — the exact outcome
-    // the claim exists to prevent.
-    val wh = flakyWh()
-    try {
-      (1 to 4).foreach(i => wh.rewrite("t", Seq((1L, s"v$i")).toDF("id", "name")))
-      assert(versionDirs(wh) === wh.RetainVersions)
-      FlakyFs.failCreateThrows(1)(isHistoryGen)
-      wh.rewrite("t", Seq((1L, "v5")).toDF("id", "name")) // must not throw
-      assert(!FlakyFs.armed, "injected create exception was not consumed")
-      assert(versionDirs(wh) === wh.RetainVersions + 1) // GC skipped this rewrite
-      assert(names(wh) === Set("v5"))
-      wh.rewrite("t", Seq((1L, "v6")).toDF("id", "name")) // self-heal + GC resumes
-      assert(versionDirs(wh) === wh.RetainVersions)
-      assert(names(wh) === Set("v6"))
-    } finally FlakyFs.reset()
-  }
-
-  test("HDFS-semantics rename refusal onto our own claim: retried once, GC proceeds") {
-    // After a successful claim, an HDFS-like store refuses rename onto the
-    // existing (our own) target — the writer clears the claim and retries;
-    // the history lands and GC runs normally.
-    val wh = flakyWh()
-    try {
-      (1 to 4).foreach(i => wh.rewrite("t", Seq((1L, s"v$i")).toDF("id", "name")))
-      assert(versionDirs(wh) === wh.RetainVersions)
-      FlakyFs.failRenames(1)(isHistoryGen)
-      wh.rewrite("t", Seq((1L, "v5")).toDF("id", "name"))
+      (1 to 2).foreach(i => wh.rewrite("t", Seq((1L, s"v$i")).toDF("id", "name")))
+      FlakyFs.failRenames(1)(_ == "t.__current")
+      intercept[java.io.IOException](wh.rewrite("t", Seq((1L, "v3")).toDF("id", "name")))
       assert(!FlakyFs.armed, "injected rename failure was not consumed")
-      assert(versionDirs(wh) === wh.RetainVersions) // GC ran normally
-      assert(names(wh) === Set("v5"))
-    } finally FlakyFs.reset()
-  }
-
-  test("rename failing twice (claim cleared, target reappeared): GC skipped") {
-    val wh = flakyWh()
-    try {
-      (1 to 4).foreach(i => wh.rewrite("t", Seq((1L, s"v$i")).toDF("id", "name")))
-      assert(versionDirs(wh) === wh.RetainVersions)
-      FlakyFs.failRenames(2)(isHistoryGen)
-      wh.rewrite("t", Seq((1L, "v5")).toDF("id", "name")) // must not throw
-      assert(!FlakyFs.armed, "injected rename failures were not consumed")
-      assert(versionDirs(wh) === wh.RetainVersions + 1) // GC skipped this rewrite
-      assert(names(wh) === Set("v5"))
-      wh.rewrite("t", Seq((1L, "v6")).toDF("id", "name")) // self-heal + GC resumes
-      assert(versionDirs(wh) === wh.RetainVersions)
-      assert(names(wh) === Set("v6"))
+      // no pointer: the newest _SUCCESS version is live, and every version
+      // dir counts as committed, so the next rewrite commits over it
+      assert(names(wh) === Set("v3"))
+      wh.rewrite("t", Seq((1L, "v4")).toDF("id", "name"))
+      assert(names(wh) === Set("v4"))
     } finally FlakyFs.reset()
   }
 
