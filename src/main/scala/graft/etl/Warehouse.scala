@@ -2,7 +2,7 @@ package graft.etl
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** A second writer (another JVM/pipeline) attempted a mutating warehouse
@@ -98,7 +98,7 @@ object Warehouse {
   * operations go through Hadoop's FileSystem API, so the same code runs
   * against HDFS/S3A/ABFS, not just the local disk used in tests.
   */
-case class Warehouse(spark: SparkSession, dir: String) {
+case class Warehouse(spark: SparkSession, dir: String) extends CasTables {
 
   private def path(name: String) = s"$dir/$name"
 
@@ -175,7 +175,13 @@ case class Warehouse(spark: SparkSession, dir: String) {
 
   private def withWriterLease[T](op: String)(body: => T): T = {
     val acquired = acquireWriterLease(op)
-    try body finally if (acquired) releaseWriterLease()
+    try {
+      if (acquired) fs.delete(generationPath, false)
+      body
+    } finally if (acquired) {
+      writeGeneration()
+      releaseWriterLease()
+    }
   }
 
   /** Hold the writer lease across a MULTI-TABLE advance whose individual
@@ -190,6 +196,99 @@ case class Warehouse(spark: SparkSession, dir: String) {
     */
   private[graft] def withWriterScope[T](op: String)(body: => T): T =
     withWriterLease(op)(body)
+
+  // ------------------------------------------------- commit generation
+  /** The warehouse's one commit-generation record: a token unique to the
+    * writer scope that wrote it. The outermost writer scope deletes it on
+    * entry and writes a fresh token on exit, thrown or not, before it
+    * releases the lease, so the record exists only while no writer scope
+    * is open and a writer that dies inside its scope leaves none. A reader
+    * that finds the token it saw last knows that nothing was committed
+    * since, from one file open; a reader that finds no record knows
+    * nothing and must resolve every table afresh.
+    */
+  private def generationPath = new Path(dir, "__generation")
+  private def generationTmp = new Path(dir, "__generation.tmp")
+
+  private def writeGeneration(): Unit =
+    try {
+      val tmp = generationTmp
+      val out = fs.create(tmp, true)
+      try out.write(java.util.UUID.randomUUID().toString.getBytes("UTF-8")) finally out.close()
+      fs.rename(tmp, generationPath)
+    } catch { case _: java.io.IOException => () } // no record: readers resolve afresh
+
+  private def readGeneration(): Option[String] =
+    try {
+      val in = fs.open(generationPath)
+      try Some(new String(in.readAllBytes(), "UTF-8")).filter(_.nonEmpty) finally in.close()
+    } catch { case _: java.io.IOException => None }
+
+  /** The tables as of the last commit, for serving reads: the snapshot
+    * this warehouse handed out last while the generation record and the
+    * session's modifiable settings are unchanged, else a fresh one. With
+    * no record (a writer scope is open, or one died) the warehouse itself,
+    * which resolves every read afresh.
+    */
+  def snapshot(): CasTables = readGeneration() match {
+    case None => this
+    case Some(token) =>
+      val settings = spark.conf.getAll.filter { case (k, _) => spark.conf.isModifiable(k) }
+      synchronized {
+        served.filter(s => s.token == token && s.settings == settings).getOrElse {
+          val session = served.filter(_.settings == settings).map(_.session)
+            .getOrElse(servingSession(settings))
+          val s = new Snapshot(token, settings, session)
+          served = Some(s)
+          s
+        }
+      }
+  }
+
+  private var served: Option[Snapshot] = None
+
+  /** A session for serving reads with the caller's modifiable settings and
+    * no generated code. One pass over the dashboard's 32 distinct requests
+    * generates ~257 classes, but the JVM-wide codegen cache holds 100
+    * (`spark.sql.codegen.cache.maxEntries`, a static setting), so every
+    * pass recompiled ~285 classes: on a 4-core box Janino took 30 % of
+    * the serving CPU samples and source generation 10 %, at ~1 s p50.
+    * Interpreted operators over the snapshot's small driver-local tables
+    * cost far less than compiling them.
+    */
+  private def servingSession(settings: Map[String, String]): SparkSession = {
+    val s = spark.newSession()
+    settings.foreach { case (k, v) => s.conf.set(k, v) }
+    s.conf.set("spark.sql.codegen.wholeStage", "false")
+    s.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    s
+  }
+
+  /** The tables of one commit generation, each loaded on first use. A
+    * table of at most the session's broadcast threshold in committed bytes
+    * is held as a driver-local relation in one partition, so every
+    * aggregate, window, sort and join over it is planned without an
+    * exchange; a larger one is read from its files. Nothing is persisted.
+    */
+  private final class Snapshot(val token: String, val settings: Map[String, String],
+                               val session: SparkSession) extends CasTables {
+    private val tables = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+
+    def read(name: String, schema: StructType): DataFrame =
+      tables.computeIfAbsent(name, _ => load(name, schema))
+
+    private def load(name: String, schema: StructType): DataFrame = {
+      val p = resolve(name)
+      if (!hasParquet(p)) session.createDataFrame(java.util.List.of[Row](), schema)
+      else {
+        val files = session.read.schema(schema).parquet(p.toString)
+        val limit = session.sessionState.conf.autoBroadcastJoinThreshold
+        if (limit > 0 && files.queryExecution.analyzed.stats.sizeInBytes <= limit)
+          session.createDataFrame(files.collectAsList(), schema).coalesce(1)
+        else files
+      }
+    }
+  }
 
   private def resolve(name: String): Path = Warehouse.resolve(fs, root, name)
 
@@ -380,9 +479,10 @@ case class Warehouse(spark: SparkSession, dir: String) {
     versions.foreach { case (_, p) => if (p.getName != live) fs.delete(p, true) }
     val flat = new Path(dir, name)
     if (live != name && fs.exists(flat)) fs.delete(flat, true)
-    // the fixed-name pointer tmp a rewrite crashed between create and
-    // rename would leave (one file per table at most)
+    // the fixed-name tmps a rewrite or a writer scope's exit crashed
+    // between create and rename would leave (one file each at most)
     fs.delete(new Path(dir, s"$name.__current.tmp"), false)
+    fs.delete(generationTmp, false)
   }
 
   /** Bounded-retention reclamation — [[vacuum]] for tables that keep
@@ -437,6 +537,13 @@ case class Warehouse(spark: SparkSession, dir: String) {
     })
     (fromPointers ++ fromVersions).distinct.foreach(vacuum(_, retainLast))
   }
+}
+
+/** The CAS tables by name, over whatever [[read]] resolves them through:
+  * a [[Warehouse]] (every read resolved afresh) or one of its snapshots.
+  */
+trait CasTables {
+  def read(name: String, schema: StructType): DataFrame
 
   def supervisiones(tipo: String): DataFrame =
     read(s"supervisiones_$tipo", CasSchema.supervisiones)

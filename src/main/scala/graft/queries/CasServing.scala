@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.{Classify, Ranking}
-import graft.etl.Warehouse
+import graft.etl.{CasTables, Warehouse}
 
 /** The reference's serving layer (app.py, ~35 SQL queries + Python
   * dataflow) as pure DataFrame programs over the CAS warehouse.
@@ -16,6 +16,11 @@ import graft.etl.Warehouse
   * post-processing (tie ranking app.py:624-637, territory classification
   * app.py:44-55, roll-up groups app.py:57-89, pivoting app.py:1153-1202)
   * collapses into the plan: one job instead of N+1 queries per request.
+  *
+  * Each endpoint takes the warehouse's [[Warehouse.snapshot]] once and
+  * reads every table through it: while nothing is committed, a request
+  * costs one read of the generation record and plans over driver-local
+  * tables in a session that generates no code.
   */
 object CasServing {
 
@@ -28,7 +33,8 @@ object CasServing {
 
   /** /api/kpis/<tipo> (app.py:340-432): scalar KPIs + coverage + buckets. */
   def kpis(wh: Warehouse, tipo: String, periodoId: Option[Int] = None): DataFrame = {
-    val sup = periodoId.foldLeft(wh.supervisiones(tipo))((df, p) => df.filter(col("periodo_id") === p))
+    val snap = wh.snapshot()
+    val sup = periodoId.foldLeft(snap.supervisiones(tipo))((df, p) => df.filter(col("periodo_id") === p))
     val buckets = sup.agg(
       round(avg(col("calificacion_general")), 2).as("promedio_general"),
       count(lit(1)).as("total_supervisiones"),
@@ -37,7 +43,7 @@ object CasServing {
       sum(when(col("calificacion_general") >= 80 && col("calificacion_general") < 90, 1L).otherwise(0L)).as("bueno"),
       sum(when(col("calificacion_general") >= 70 && col("calificacion_general") < 80, 1L).otherwise(0L)).as("regular"),
       sum(when(col("calificacion_general") < 70, 1L).otherwise(0L)).as("critico"))
-    val total = wh.sucursales.filter(col("activo") === true)
+    val total = snap.sucursales.filter(col("activo") === true)
       .agg(count(lit(1)).as("total_sucursales"))
     buckets.crossJoin(total)
       .withColumn("cobertura_pct",
@@ -56,11 +62,12 @@ object CasServing {
                     territorio: Option[String] = None,
                     tc: TerritoryConfig = TerritoryConfig(),
                     rc: RollupConfig = RollupConfig()): DataFrame = {
-    val g = wh.grupos.filter(col("activo"))
+    val snap = wh.snapshot()
+    val g = snap.grupos.filter(col("activo"))
       .select(col("id").as("grupo_id"), col("nombre").as("grupo"))
-    val sActive = wh.sucursales.filter(col("activo"))
+    val sActive = snap.sucursales.filter(col("activo"))
       .select(col("id").as("s_sid"), col("grupo_operativo_id"))
-    val sup = wh.supervisiones(tipo)
+    val sup = snap.supervisiones(tipo)
 
     val supCond = col("sucursal_id") === col("s_sid") &&
       periodoId.map(p => col("periodo_id") === p).getOrElse(lit(true))
@@ -97,10 +104,11 @@ object CasServing {
     */
   def rankingSucursales(wh: Warehouse, tipo: String, periodoId: Option[Int] = None,
                         grupoId: Option[Int] = None): DataFrame = {
-    val s = wh.sucursales.filter(col("activo"))
+    val snap = wh.snapshot()
+    val s = snap.sucursales.filter(col("activo"))
       .select(col("id").as("s_sid"), col("nombre"), col("clasificacion"), col("grupo_operativo_id"))
     val base = grupoId.foldLeft(s)((df, gid) => df.filter(col("grupo_operativo_id") === gid))
-    val sup = wh.supervisiones(tipo)
+    val sup = snap.supervisiones(tipo)
     val supCond = col("sucursal_id") === col("s_sid") &&
       periodoId.map(p => col("periodo_id") === p).getOrElse(lit(true))
     val agg = base.join(sup, supCond, "left")
@@ -142,13 +150,17 @@ object CasServing {
     * single [[OtrosCol]] bucket instead of growing the header.
     */
   def historico(wh: Warehouse, tipo: String,
-                maxPivotPeriods: Int = MaxPivotPeriods): (DataFrame, DataFrame, DataFrame) = {
-    val g = wh.grupos.filter(col("activo"))
+                maxPivotPeriods: Int = MaxPivotPeriods): (DataFrame, DataFrame, DataFrame) =
+    historicoOf(wh.snapshot(), tipo, maxPivotPeriods)
+
+  private def historicoOf(snap: CasTables, tipo: String,
+                          maxPivotPeriods: Int): (DataFrame, DataFrame, DataFrame) = {
+    val g = snap.grupos.filter(col("activo"))
       .select(col("id").as("grupo_id"), col("nombre").as("grupo"))
-    val p = wh.periodos.select(col("id").as("p_periodo_id"), col("codigo"))
-    val s = wh.sucursales.filter(col("activo"))
+    val p = snap.periodos.select(col("id").as("p_periodo_id"), col("codigo"))
+    val s = snap.sucursales.filter(col("activo"))
       .select(col("id").as("s_sid"), col("grupo_operativo_id"))
-    val sup = wh.supervisiones(tipo)
+    val sup = snap.supervisiones(tipo)
 
     val long = g.crossJoin(broadcast(p))
       .join(s, col("grupo_id") === col("grupo_operativo_id"), "left")
@@ -168,7 +180,7 @@ object CasServing {
     // them out of the __otros fold, since a warehouse crossing the
     // period-count cap must not silently start counting rows the
     // non-overflow matrix always dropped.
-    val newest = wh.periodos.select(col("codigo"), col("fecha_inicio"))
+    val newest = snap.periodos.select(col("codigo"), col("fecha_inicio"))
       .filter(col("codigo").isNotNull)
       .orderBy(col("fecha_inicio").desc_nulls_last, col("codigo").desc)
       .limit(maxPivotPeriods + 1).collect().map(_.getString(0))
@@ -206,7 +218,7 @@ object CasServing {
     */
   def historicoHeatmap(wh: Warehouse, tipo: String, top: Int = 15,
                        maxPivotPeriods: Int = MaxPivotPeriods): DataFrame = {
-    val (matrix, grupoAvgs, _) = historico(wh, tipo, maxPivotPeriods)
+    val (matrix, grupoAvgs, _) = historicoOf(wh.snapshot(), tipo, maxPivotPeriods)
     val slice = broadcast(grupoAvgs.limit(top)
       .select(col("grupo_id"), col("promedio_general")))
     matrix.join(slice, Seq("grupo_id"))
@@ -219,9 +231,10 @@ object CasServing {
     * labeled (T2/F9) and partitioned by severity like app.js:1075-1076.
     */
   def alertas(wh: Warehouse, tipo: String, periodoId: Option[Int] = None): DataFrame = {
-    val s = wh.sucursales.filter(col("activo"))
+    val snap = wh.snapshot()
+    val s = snap.sucursales.filter(col("activo"))
       .select(col("id").as("s_sid"), col("nombre"))
-    val sup = periodoId.foldLeft(wh.supervisiones(tipo))((df, p) => df.filter(col("periodo_id") === p))
+    val sup = periodoId.foldLeft(snap.supervisiones(tipo))((df, p) => df.filter(col("periodo_id") === p))
     s.join(sup, col("sucursal_id") === col("s_sid"))
       .groupBy(col("s_sid"), col("nombre"))
       .agg(round(avg(col("calificacion_general")), 2).as("promedio"),
@@ -237,11 +250,12 @@ object CasServing {
     * latest supervision score per branch (W3) and severity color (T2).
     */
   def mapa(wh: Warehouse, tipo: String, periodoId: Option[Int] = None): DataFrame = {
-    val s = wh.sucursales.filter(col("activo") &&
+    val snap = wh.snapshot()
+    val s = snap.sucursales.filter(col("activo") &&
       col("latitud").isNotNull && col("longitud").isNotNull)
       .select(col("id").as("s_sid"), col("nombre"), col("latitud").as("lat"),
         col("longitud").as("lng"), col("clasificacion"))
-    val sup = periodoId.foldLeft(wh.supervisiones(tipo))((df, p) => df.filter(col("periodo_id") === p))
+    val sup = periodoId.foldLeft(snap.supervisiones(tipo))((df, p) => df.filter(col("periodo_id") === p))
     val latest = sup
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("sucursal_id"))
@@ -260,12 +274,13 @@ object CasServing {
     * ordered by the catalog's numero).
     */
   def detalleSucursal(wh: Warehouse, tipo: String, sucursalId: Int): DataFrame = {
-    val latest = wh.supervisiones(tipo)
+    val snap = wh.snapshot()
+    val latest = snap.supervisiones(tipo)
       .filter(col("sucursal_id") === sucursalId)
       .orderBy(col("fecha_supervision").desc, col("id").desc)
       .limit(1)
-    val detail = wh.detalle(tipo)
-    val cat = broadcast(wh.catalogo(tipo)
+    val detail = snap.detalle(tipo)
+    val cat = broadcast(snap.catalogo(tipo)
       .select(col("id").as("area_id"), col("codigo"), col("nombre").as("area"), col("numero")))
     latest.join(detail, latest("id") === detail("supervision_id"))
       .join(cat, Seq("area_id"))
@@ -283,7 +298,7 @@ object CasServing {
   def trendSucursal(wh: Warehouse, tipo: String, sucursalId: Int, n: Int = 4): DataFrame = {
     val w = Window.partitionBy(col("sucursal_id"))
       .orderBy(col("fecha_supervision").desc, col("id").desc)
-    wh.supervisiones(tipo)
+    wh.snapshot().supervisiones(tipo)
       .filter(col("sucursal_id") === sucursalId)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= n)
@@ -298,7 +313,7 @@ object CasServing {
 
   /** /api/estados (app.py:331-335): distinct states with branch counts. */
   def estados(wh: Warehouse): DataFrame =
-    wh.sucursales
+    wh.snapshot().sucursales
       .filter(col("activo") && col("estado").isNotNull)
       .groupBy(col("estado"))
       .agg(count(lit(1)).as("n_sucursales"))
@@ -308,10 +323,11 @@ object CasServing {
     * (P6), else the latest period with data (J11 + O2).
     */
   def periodoContexto(wh: Warehouse, tipo: String, hoy: java.sql.Date): DataFrame = {
-    val p = wh.periodos
+    val snap = wh.snapshot()
+    val p = snap.periodos
     val current = p.filter(lit(hoy).between(col("fecha_inicio"), col("fecha_fin")))
       .orderBy(col("fecha_inicio").desc).limit(1)
-    val withData = p.join(wh.supervisiones(tipo),
+    val withData = p.join(snap.supervisiones(tipo),
         p("id") === col("periodo_id"), "left_semi")
       .orderBy(col("fecha_inicio").desc).limit(1)
     current.withColumn("fuente", lit("actual"))
@@ -324,7 +340,7 @@ object CasServing {
     * column (runtime schema, newest first).
     */
   def periodosList(wh: Warehouse): DataFrame =
-    wh.periodos.orderBy(col("id").desc).limit(10)
+    wh.snapshot().periodos.orderBy(col("id").desc).limit(10)
 
   /** /api/supervision/<id>/areas/<tipo> (app.py:966-1060): one specific
     * supervision's header (with its period name) and per-area/KPI
@@ -332,16 +348,17 @@ object CasServing {
     * clicked, vs [[detalleSucursal]] which always shows the latest.
     */
   def supervisionAreas(wh: Warehouse, tipo: String, supervisionId: Long): DataFrame = {
-    val sup = wh.supervisiones(tipo)
+    val snap = wh.snapshot()
+    val sup = snap.supervisiones(tipo)
       .filter(col("id") === supervisionId)
-      .join(broadcast(wh.periodos.select(col("id").as("p_id"),
+      .join(broadcast(snap.periodos.select(col("id").as("p_id"),
         col("nombre").as("periodo_nombre"))),
         col("periodo_id") === col("p_id"), "left")
       .select(col("id"), col("calificacion_general"), col("fecha_supervision"),
         col("supervisor"), col("periodo_nombre"))
-    val cat = broadcast(wh.catalogo(tipo)
+    val cat = broadcast(snap.catalogo(tipo)
       .select(col("id").as("area_id"), col("nombre").as("area"), col("numero")))
-    sup.join(wh.detalle(tipo), sup("id") === col("supervision_id"))
+    sup.join(snap.detalle(tipo), sup("id") === col("supervision_id"))
       .join(cat, Seq("area_id"))
       .select(col("id").as("supervision_id"),
         round(col("calificacion_general"), 2).as("calificacion"),
@@ -367,16 +384,17 @@ object CasServing {
     */
   def tableDump(wh: Warehouse, name: String, limit: Int = 100): DataFrame = {
     require(DumpableTables.contains(name), s"Tabla no permitida: $name")
+    val snap = wh.snapshot()
     val df = name match {
-      case "periodos_cas"             => wh.periodos
-      case "grupos_operativos"        => wh.grupos
-      case "sucursales"               => wh.sucursales
-      case "supervisiones_operativas" => wh.supervisiones("operativas")
-      case "supervisiones_seguridad"  => wh.supervisiones("seguridad")
-      case "supervision_areas"        => wh.detalle("operativas")
-      case "seguridad_kpis"           => wh.detalle("seguridad")
-      case "catalogo_areas"           => wh.catalogo("operativas")
-      case "catalogo_kpis_seguridad"  => wh.catalogo("seguridad")
+      case "periodos_cas"             => snap.periodos
+      case "grupos_operativos"        => snap.grupos
+      case "sucursales"               => snap.sucursales
+      case "supervisiones_operativas" => snap.supervisiones("operativas")
+      case "supervisiones_seguridad"  => snap.supervisiones("seguridad")
+      case "supervision_areas"        => snap.detalle("operativas")
+      case "seguridad_kpis"           => snap.detalle("seguridad")
+      case "catalogo_areas"           => snap.catalogo("operativas")
+      case "catalogo_kpis_seguridad"  => snap.catalogo("seguridad")
     }
     // runtime schema: columns come from the resolved frame, not a caller list
     df.limit(limit).select(df.columns.toIndexedSeq.map(c => col(c).cast("string").as(c)): _*)
