@@ -227,67 +227,75 @@ case class Warehouse(spark: SparkSession, dir: String) extends CasTables {
   /** The tables as of the last commit, for serving reads: the snapshot
     * this warehouse handed out last while the generation record and the
     * session's modifiable settings are unchanged, else a fresh one. With
-    * no record (a writer scope is open, or one died) the warehouse itself,
-    * which resolves every read afresh.
+    * no record (a writer scope is open, or one died) a fresh snapshot that
+    * is not kept, so every request resolves its tables afresh.
     */
-  def snapshot(): CasTables = readGeneration() match {
-    case None => this
-    case Some(token) =>
-      val settings = spark.conf.getAll.filter { case (k, _) => spark.conf.isModifiable(k) }
-      synchronized {
-        served.filter(s => s.token == token && s.settings == settings).getOrElse {
-          val session = served.filter(_.settings == settings).map(_.session)
-            .getOrElse(servingSession(settings))
-          val s = new Snapshot(token, settings, session)
-          served = Some(s)
+  def snapshot(): CasTables = {
+    val settings = spark.conf.getAll.filter { case (k, _) => spark.conf.isModifiable(k) }
+    readGeneration() match {
+      case None => new Snapshot(settings)
+      case Some(token) => synchronized {
+        served.collect { case (`token`, `settings`, s) => s }.getOrElse {
+          val s = new Snapshot(settings)
+          served = Some((token, settings, s))
           s
         }
       }
+    }
   }
 
-  private var served: Option[Snapshot] = None
+  private var served: Option[(String, Map[String, String], Snapshot)] = None
+  private var serving: Option[(Map[String, String], SparkSession)] = None
 
   /** A session for serving reads with the caller's modifiable settings and
-    * no generated code. One pass over the dashboard's 32 distinct requests
-    * generates ~257 classes, but the JVM-wide codegen cache holds 100
-    * (`spark.sql.codegen.cache.maxEntries`, a static setting), so every
-    * pass recompiled ~285 classes: on a 4-core box Janino took 30 % of
-    * the serving CPU samples and source generation 10 %, at ~1 s p50.
-    * Interpreted operators over the snapshot's small driver-local tables
-    * cost far less than compiling them.
+    * no generated code, one per distinct settings. One pass over the
+    * dashboard's 32 distinct requests generates ~257 classes, but the
+    * JVM-wide codegen cache holds 100 (`spark.sql.codegen.cache.maxEntries`,
+    * a static setting), so every pass recompiled ~285 classes: on a 4-core
+    * box Janino took 30 % of the serving CPU samples and source generation
+    * 10 %, at ~1 s p50. Interpreted operators over the snapshot's small
+    * driver-local tables cost far less than compiling them.
+    * `wholeStage=false` alone still compiles every projection, predicate
+    * and ordering; `factoryMode` is what turns those off, and Spark marks
+    * it internal, so a Spark upgrade has to re-check it (CasSnapshotSpec
+    * counts the compiles of a pass).
     */
-  private def servingSession(settings: Map[String, String]): SparkSession = {
-    val s = spark.newSession()
-    settings.foreach { case (k, v) => s.conf.set(k, v) }
-    s.conf.set("spark.sql.codegen.wholeStage", "false")
-    s.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    s
+  private def servingSession(settings: Map[String, String]): SparkSession = synchronized {
+    serving.collect { case (`settings`, s) => s }.getOrElse {
+      val s = spark.newSession()
+      settings.foreach { case (k, v) => s.conf.set(k, v) }
+      s.conf.set("spark.sql.codegen.wholeStage", "false")
+      s.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+      serving = Some((settings, s))
+      s
+    }
   }
 
-  /** The tables of one commit generation, each loaded on first use. A
-    * table of at most the session's broadcast threshold in committed bytes
-    * is held as a driver-local relation in one partition, so every
-    * aggregate, window, sort and join over it is planned without an
-    * exchange; a larger one is read from its files. Nothing is persisted.
+  /** The served tables of one commit generation, resolved once. When every
+    * one of them has at most the caller's broadcast threshold in committed
+    * parquet bytes, each is collected on first use and held as a
+    * driver-local relation in one partition of the serving session, so
+    * every aggregate, window, sort and join over it is planned without an
+    * exchange and compiles nothing. Otherwise every table is read from its
+    * files in the caller's session, with generated code, as [[read]] does.
+    * Nothing is persisted.
     */
-  private final class Snapshot(val token: String, val settings: Map[String, String],
-                               val session: SparkSession) extends CasTables {
+  private final class Snapshot(settings: Map[String, String]) extends CasTables {
+    private val session = servingSession(settings)
+    private val committed = CasTables.Served.map { case (n, schema) => n -> readFiles(session, n, schema) }.toMap
+    private val held = {
+      val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
+      limit > 0 && committed.values.flatten.forall(_.queryExecution.analyzed.stats.sizeInBytes <= limit)
+    }
     private val tables = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
-    def read(name: String, schema: StructType): DataFrame =
-      tables.computeIfAbsent(name, _ => load(name, schema))
-
-    private def load(name: String, schema: StructType): DataFrame = {
-      val p = resolve(name)
-      if (!hasParquet(p)) session.createDataFrame(java.util.List.of[Row](), schema)
+    def read(name: String, schema: StructType): DataFrame = tables.computeIfAbsent(name, _ =>
+      if (!held) Warehouse.this.read(name, schema)
       else {
-        val files = session.read.schema(schema).parquet(p.toString)
-        val limit = session.sessionState.conf.autoBroadcastJoinThreshold
-        if (limit > 0 && files.queryExecution.analyzed.stats.sizeInBytes <= limit)
-          session.createDataFrame(files.collectAsList(), schema).coalesce(1)
-        else files
-      }
-    }
+        val rows = committed.getOrElse(name, readFiles(session, name, schema))
+          .fold(java.util.List.of[Row]())(_.collectAsList())
+        session.createDataFrame(rows, schema).coalesce(1)
+      })
   }
 
   private def resolve(name: String): Path = Warehouse.resolve(fs, root, name)
@@ -322,11 +330,16 @@ case class Warehouse(spark: SparkSession, dir: String) extends CasTables {
               fs.listStatus(st.getPath).exists(_.getPath.getName.endsWith(".parquet")))
         })
 
-  def read(name: String, schema: StructType): DataFrame = {
+  /** `name`'s committed files read in `session`, or None while it has no
+    * parquet.
+    */
+  private def readFiles(session: SparkSession, name: String, schema: StructType): Option[DataFrame] = {
     val p = resolve(name)
-    if (hasParquet(p)) spark.read.schema(schema).parquet(p.toString)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    if (hasParquet(p)) Some(session.read.schema(schema).parquet(p.toString)) else None
   }
+
+  def read(name: String, schema: StructType): DataFrame =
+    readFiles(spark, name, schema).getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema))
 
   def append(name: String, df: DataFrame): Unit =
     withWriterLease(s"append:$name") {
@@ -537,10 +550,14 @@ case class Warehouse(spark: SparkSession, dir: String) extends CasTables {
     })
     (fromPointers ++ fromVersions).distinct.foreach(vacuum(_, retainLast))
   }
+
+  def checkpoints: DataFrame = read("sync_checkpoints", CasSchema.checkpoints)
+  def syncLog: DataFrame     = read("sync_log", CasSchema.syncLog)
 }
 
-/** The CAS tables by name, over whatever [[read]] resolves them through:
-  * a [[Warehouse]] (every read resolved afresh) or one of its snapshots.
+/** The served CAS tables by name, over whatever [[read]] resolves them
+  * through: a [[Warehouse]] (every read resolved afresh) or one of its
+  * snapshots.
   */
 trait CasTables {
   def read(name: String, schema: StructType): DataFrame
@@ -554,6 +571,20 @@ trait CasTables {
   def sucursales: DataFrame = read("sucursales", CasSchema.sucursales)
   def catalogo(tipo: String): DataFrame =
     read(if (tipo == "operativas") "catalogo_areas" else "catalogo_kpis_seguridad", CasSchema.catalogo)
-  def checkpoints: DataFrame = read("sync_checkpoints", CasSchema.checkpoints)
-  def syncLog: DataFrame     = read("sync_log", CasSchema.syncLog)
+}
+
+object CasTables {
+  /** Every table the accessors read for the two supervision types, with
+    * its schema: what a snapshot resolves.
+    */
+  val Served: Seq[(String, StructType)] = Seq(
+    "periodos_cas" -> CasSchema.periodos,
+    "grupos_operativos" -> CasSchema.grupos,
+    "sucursales" -> CasSchema.sucursales,
+    "supervisiones_operativas" -> CasSchema.supervisiones,
+    "supervisiones_seguridad" -> CasSchema.supervisiones,
+    "supervision_areas" -> CasSchema.detalle,
+    "seguridad_kpis" -> CasSchema.detalle,
+    "catalogo_areas" -> CasSchema.catalogo,
+    "catalogo_kpis_seguridad" -> CasSchema.catalogo)
 }

@@ -19,8 +19,9 @@ import graft.etl.{CasTables, Warehouse}
   *
   * Each endpoint takes the warehouse's [[Warehouse.snapshot]] once and
   * reads every table through it: while nothing is committed, a request
-  * costs one read of the generation record and plans over driver-local
-  * tables in a session that generates no code.
+  * costs one read of the generation record and, when every table fits the
+  * broadcast threshold, plans over driver-local tables in a session that
+  * generates no code.
   */
 object CasServing {
 
@@ -370,12 +371,8 @@ object CasServing {
       .orderBy(col("numero"))
   }
 
-  /** The admin table-dump allowlist (app.py:1310-1313). */
-  val DumpableTables: Seq[String] = Seq(
-    "periodos_cas", "grupos_operativos", "sucursales",
-    "supervisiones_operativas", "supervisiones_seguridad",
-    "supervision_areas", "seguridad_kpis",
-    "catalogo_areas", "catalogo_kpis_seguridad")
+  /** The admin table-dump allowlist (app.py:1310-1313): the served tables. */
+  val DumpableTables: Seq[String] = CasTables.Served.map(_._1)
 
   /** S7 — the generic admin dump (app.py:1318-1321): `SELECT * FROM <name>
     * LIMIT 100` with runtime-discovered columns, every value stringified
@@ -384,18 +381,7 @@ object CasServing {
     */
   def tableDump(wh: Warehouse, name: String, limit: Int = 100): DataFrame = {
     require(DumpableTables.contains(name), s"Tabla no permitida: $name")
-    val snap = wh.snapshot()
-    val df = name match {
-      case "periodos_cas"             => snap.periodos
-      case "grupos_operativos"        => snap.grupos
-      case "sucursales"               => snap.sucursales
-      case "supervisiones_operativas" => snap.supervisiones("operativas")
-      case "supervisiones_seguridad"  => snap.supervisiones("seguridad")
-      case "supervision_areas"        => snap.detalle("operativas")
-      case "seguridad_kpis"           => snap.detalle("seguridad")
-      case "catalogo_areas"           => snap.catalogo("operativas")
-      case "catalogo_kpis_seguridad"  => snap.catalogo("seguridad")
-    }
+    val df = wh.snapshot().read(name, CasTables.Served.toMap.apply(name))
     // runtime schema: columns come from the resolved frame, not a caller list
     df.limit(limit).select(df.columns.toIndexedSeq.map(c => col(c).cast("string").as(c)): _*)
   }

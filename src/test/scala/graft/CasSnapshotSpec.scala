@@ -6,6 +6,7 @@ import java.time.Instant
 
 import org.apache.hadoop.fs.Path
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -49,22 +50,24 @@ class CasSnapshotSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     wh
   }
 
-  private def endpoints(wh: Warehouse): Seq[(String, DataFrame)] = {
+  /** Every endpoint, filtered to `periodo`, `sucursal` and `supervision`. */
+  private def endpoints(wh: Warehouse, periodo: Int = 1, sucursal: Int = 1,
+                        supervision: Long = 2L): Seq[(String, DataFrame)] = {
     val (matrix, avgs, epl) = CasServing.historico(wh, "operativas")
     Seq(
       "kpis" -> CasServing.kpis(wh, "operativas"),
-      "rankingGrupos" -> CasServing.rankingGrupos(wh, "operativas", Some(1)),
-      "rankingSucursales" -> CasServing.rankingSucursales(wh, "operativas", Some(1)),
+      "rankingGrupos" -> CasServing.rankingGrupos(wh, "operativas", Some(periodo)),
+      "rankingSucursales" -> CasServing.rankingSucursales(wh, "operativas", Some(periodo)),
       "historico.matrix" -> matrix, "historico.avgs" -> avgs, "historico.epl" -> epl,
       "historicoHeatmap" -> CasServing.historicoHeatmap(wh, "operativas"),
-      "alertas" -> CasServing.alertas(wh, "operativas", Some(1)),
+      "alertas" -> CasServing.alertas(wh, "operativas", Some(periodo)),
       "mapa" -> CasServing.mapa(wh, "operativas"),
-      "detalleSucursal" -> CasServing.detalleSucursal(wh, "operativas", 1),
-      "trendSucursal" -> CasServing.trendSucursal(wh, "operativas", 1),
+      "detalleSucursal" -> CasServing.detalleSucursal(wh, "operativas", sucursal),
+      "trendSucursal" -> CasServing.trendSucursal(wh, "operativas", sucursal),
       "estados" -> CasServing.estados(wh),
       "periodoContexto" -> CasServing.periodoContexto(wh, "operativas", Date.valueOf("2026-01-15")),
       "periodosList" -> CasServing.periodosList(wh),
-      "supervisionAreas" -> CasServing.supervisionAreas(wh, "operativas", 2L),
+      "supervisionAreas" -> CasServing.supervisionAreas(wh, "operativas", supervision),
       "tableDump" -> CasServing.tableDump(wh, "supervisiones_operativas"))
   }
 
@@ -122,6 +125,12 @@ class CasSnapshotSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     frame(Seq(sup(3, 1, 1, "2026-01-12T10:00:00Z", 70.0)), CasSchema.supervisiones)
       .write.mode("append").parquet(s"${wh.dir}/supervisiones_operativas")
     assert(total(wh) === 3)
+    frame(Seq(sup(4, 2, 1, "2026-01-13T10:00:00Z", 75.0)), CasSchema.supervisiones)
+      .write.mode("append").parquet(s"${wh.dir}/supervisiones_operativas")
+    assert(total(wh) === 4)
+    // served the one way a recorded generation is: held, compiling nothing
+    val kpis = CasServing.kpis(wh, "operativas")
+    assert(!nodes(kpis).exists(n => n.isInstanceOf[WholeStageCodegenExec] || n.isInstanceOf[FileSourceScanExec]))
   }
 
   test("the record is absent inside a writer scope and moves when the scope throws") {
@@ -146,6 +155,16 @@ class CasSnapshotSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     }
   }
 
+  test("a pass over every endpoint with literals new to the JVM compiles no code") {
+    // wholeStage=false alone still compiles each new predicate, projection
+    // and ordering; only the serving session's factoryMode keeps this at 0
+    val wh = build()
+    endpoints(wh).foreach(_._2.collect()) // loads the snapshot
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    endpoints(wh, periodo = 80231, sucursal = 80232, supervision = 80233L).foreach(_._2.collect())
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === before)
+  }
+
   test("the serving session takes the caller's session time zone, set at runtime") {
     val wh = build()
     def fechaCorta = CasServing.trendSucursal(wh, "operativas", 1).head().getAs[String]("fecha_corta")
@@ -158,13 +177,16 @@ class CasSnapshotSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("tables over the broadcast threshold are read from files, with the same rows") {
+  test("a table over the broadcast threshold sends every read to files, with generated code") {
     val wh = build()
     val held = endpoints(wh)
     assert(!held.flatMap(e => nodes(e._2)).exists(_.isInstanceOf[FileSourceScanExec]))
     withConf("spark.sql.autoBroadcastJoinThreshold", "1") {
       val files = endpoints(wh)
-      assert(nodes(files.head._2).exists(_.isInstanceOf[FileSourceScanExec]))
+      // read in the caller's session, as Warehouse.read is: whole-stage codegen on
+      val plan = nodes(files.head._2)
+      assert(plan.exists(_.isInstanceOf[FileSourceScanExec]))
+      assert(plan.exists(_.isInstanceOf[WholeStageCodegenExec]))
       files.zip(held).foreach { case ((name, f), (_, h)) =>
         assert(f.collect().toSeq === h.collect().toSeq, name)
       }
