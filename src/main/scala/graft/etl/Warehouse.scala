@@ -231,12 +231,12 @@ case class Warehouse(spark: SparkSession, dir: String) extends CasTables {
     * is not kept, so every request resolves its tables afresh.
     */
   def snapshot(): CasTables = {
-    val settings = spark.conf.getAll.filter { case (k, _) => spark.conf.isModifiable(k) }
+    val settings = graft.core.CompileFree.settings(spark)
     readGeneration() match {
-      case None => new Snapshot(settings)
+      case None => new Snapshot
       case Some(token) => synchronized {
         served.collect { case (`token`, `settings`, s) => s }.getOrElse {
-          val s = new Snapshot(settings)
+          val s = new Snapshot
           served = Some((token, settings, s))
           s
         }
@@ -245,48 +245,21 @@ case class Warehouse(spark: SparkSession, dir: String) extends CasTables {
   }
 
   private var served: Option[(String, Map[String, String], Snapshot)] = None
-  private var serving: Option[(Map[String, String], SparkSession)] = None
-
-  /** A session for serving reads with the caller's modifiable settings and
-    * no generated code, one per distinct settings. One pass over the
-    * dashboard's 32 distinct requests generates ~257 classes, but the
-    * JVM-wide codegen cache holds 100 (`spark.sql.codegen.cache.maxEntries`,
-    * a static setting), so every pass recompiled ~285 classes: on a 4-core
-    * box Janino took 30 % of the serving CPU samples and source generation
-    * 10 %, at ~1 s p50. Interpreted operators over the snapshot's small
-    * driver-local tables cost far less than compiling them.
-    * `wholeStage=false` alone still compiles every projection, predicate
-    * and ordering; `factoryMode` is what turns those off, and Spark marks
-    * it internal, so a Spark upgrade has to re-check it (CasSnapshotSpec
-    * counts the compiles of a pass).
-    */
-  private def servingSession(settings: Map[String, String]): SparkSession = synchronized {
-    serving.collect { case (`settings`, s) => s }.getOrElse {
-      val s = spark.newSession()
-      settings.foreach { case (k, v) => s.conf.set(k, v) }
-      s.conf.set("spark.sql.codegen.wholeStage", "false")
-      s.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-      serving = Some((settings, s))
-      s
-    }
-  }
 
   /** The served tables of one commit generation, resolved once. When every
-    * one of them has at most the caller's broadcast threshold in committed
-    * parquet bytes, each is collected on first use and held as a
-    * driver-local relation in one partition of the serving session, so
-    * every aggregate, window, sort and join over it is planned without an
-    * exchange and compiles nothing. Otherwise every table is read from its
-    * files in the caller's session, with generated code, as [[read]] does.
-    * Nothing is persisted.
+    * one of them passes [[graft.core.CompileFree.fits]] (at most the
+    * caller's broadcast threshold in committed parquet bytes), each is
+    * collected on first use and held as a driver-local relation in one
+    * partition of the compile-free session, so every aggregate, window,
+    * sort and join over it is planned without an exchange and compiles
+    * nothing. Otherwise every table is read from its files in the caller's
+    * session, with generated code, as [[read]] does. Nothing is persisted.
     */
-  private final class Snapshot(settings: Map[String, String]) extends CasTables {
-    private val session = servingSession(settings)
+  private final class Snapshot extends CasTables {
+    private val session = graft.core.CompileFree.session(spark)
     private val committed = CasTables.Served.map { case (n, schema) => n -> readFiles(session, n, schema) }.toMap
-    private val held = {
-      val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
-      limit > 0 && committed.values.flatten.forall(_.queryExecution.analyzed.stats.sizeInBytes <= limit)
-    }
+    private val held = graft.core.CompileFree.fits(spark,
+      committed.values.flatten.map(_.queryExecution.analyzed.stats.sizeInBytes))
     private val tables = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
     def read(name: String, schema: StructType): DataFrame = tables.computeIfAbsent(name, _ =>

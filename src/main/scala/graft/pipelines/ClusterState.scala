@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.core.CompileFree
 import graft.etl.Warehouse
 import graft.queries.{BandEmbIndex, BandIndex, EmbIndex, IvfModel, TextOps}
 
@@ -137,13 +138,14 @@ object ClusterState {
     * 100× of the cap, and the reconciliation posture at 100 TB is a
     * periodic [[seedCorpus]] (segment-merge style).
     */
-  def t37ClusterIncrement(s: SparkSession, dir: String): DataFrame = {
-    val wh = t37EnsureSeeded(s, dir)
-    val partB = graft.core.Tables.documents(s, dir)
-      .filter(TextOps.splitBucket(col("doc_id")) >= 50)
-    ingestBatchNoAppend(wh, partB)
-    clusters(wh)
-  }
+  def t37ClusterIncrement(s: SparkSession, dir: String): DataFrame =
+    CompileFree.run(s, s"$dir/documents.parquet") { s =>
+      val wh = t37EnsureSeeded(s, dir)
+      val partB = graft.core.Tables.documents(s, dir)
+        .filter(TextOps.splitBucket(col("doc_id")) >= 50)
+      ingestBatchNoAppend(wh, partB)
+      clusters(wh)
+    }
 
   private[graft] def t37EnsureSeeded(s: SparkSession, dir: String): Warehouse = {
     val docs = graft.core.Tables.documents(s, dir)
@@ -284,24 +286,22 @@ object ClusterState {
   def t40EmbedClusterIncrement(s: SparkSession, dir: String,
                                bits: Int = graft.queries.Lsh.Bits,
                                radius: Int = graft.queries.Lsh.PolicyRadius,
-                               maxBucket: Int = TextOps.EmbBucketCap): DataFrame = {
-    // resolve the policy sentinel ONCE, up front: the resolved value is
-    // part of the seed stamp, so sentinel and explicit-equal calls share
-    // one seeded generation
-    val rr = graft.queries.Lsh.resolveRadius(bits, radius, TextOps.PairRadius)
-    val wh = t40EnsureSeeded(s, dir, bits, rr, maxBucket)
-    val partB = graft.core.Tables.embeddings(s, dir)
-      .filter(TextOps.splitBucket(col("vec_id")) >= 50)
-    val pairsB = EmbIndex.incrementCosinePairs(wh, partB, bits, rr, maxBucket)
-      .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
-    TextOps.dedupClustersIncrementOpt(
-      read(wh), partB.select(col("vec_id").as("doc_id")), pairsB, validateEndpoints = false)
-      .foreach(wh.rewrite(TableName, _))
-    clusters(wh)
-      .select(col("doc_id").as("vec_id"), col("cluster"),
-        col("is_canonical"), col("cluster_size"))
-      .orderBy(col("cluster"), col("vec_id"))
-  }
+                               maxBucket: Int = TextOps.EmbBucketCap): DataFrame =
+    CompileFree.run(s, s"$dir/embeddings.parquet") { s =>
+      // resolve the policy sentinel ONCE, up front: the resolved value is
+      // part of the seed stamp, so sentinel and explicit-equal calls share
+      // one seeded generation
+      val rr = graft.queries.Lsh.resolveRadius(bits, radius, TextOps.PairRadius)
+      val wh = t40EnsureSeeded(s, dir, bits, rr, maxBucket)
+      val partB = graft.core.Tables.embeddings(s, dir)
+        .filter(TextOps.splitBucket(col("vec_id")) >= 50)
+      val pairsB = EmbIndex.incrementCosinePairs(wh, partB, bits, rr, maxBucket)
+        .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
+      TextOps.dedupClustersIncrementOpt(
+        read(wh), partB.select(col("vec_id").as("doc_id")), pairsB, validateEndpoints = false)
+        .foreach(wh.rewrite(TableName, _))
+      clusteredVectors(wh)
+    }
 
   /** t40's stamped seed (sign-code index + part-A assignment) — same
     * warmup/forced-reseed protocol as [[t37EnsureSeeded]]; the dials are
@@ -372,20 +372,25 @@ object ClusterState {
     */
   def t55BandedClusterIncrement(s: SparkSession, dir: String,
                                 tables: Int, bits: Int, radius: Int = 1,
-                                maxBucket: Int = TextOps.EmbBucketCap): DataFrame = {
-    val wh = t55EnsureSeeded(s, dir, tables, bits, radius, maxBucket)
-    val partB = graft.core.Tables.embeddings(s, dir)
-      .filter(TextOps.splitBucket(col("vec_id")) >= 50)
-    val pairsB = BandEmbIndex.incrementCosinePairs(wh, partB, tables, bits, radius, maxBucket)
-      .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
-    TextOps.dedupClustersIncrementOpt(
-      read(wh), partB.select(col("vec_id").as("doc_id")), pairsB, validateEndpoints = false)
-      .foreach(wh.rewrite(TableName, _))
+                                maxBucket: Int = TextOps.EmbBucketCap): DataFrame =
+    CompileFree.run(s, s"$dir/embeddings.parquet") { s =>
+      val wh = t55EnsureSeeded(s, dir, tables, bits, radius, maxBucket)
+      val partB = graft.core.Tables.embeddings(s, dir)
+        .filter(TextOps.splitBucket(col("vec_id")) >= 50)
+      val pairsB = BandEmbIndex.incrementCosinePairs(wh, partB, tables, bits, radius, maxBucket)
+        .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
+      TextOps.dedupClustersIncrementOpt(
+        read(wh), partB.select(col("vec_id").as("doc_id")), pairsB, validateEndpoints = false)
+        .foreach(wh.rewrite(TableName, _))
+      clusteredVectors(wh)
+    }
+
+  /** The maintained assignment as the embedding queries present it. */
+  private def clusteredVectors(wh: Warehouse): DataFrame =
     clusters(wh)
       .select(col("doc_id").as("vec_id"), col("cluster"),
         col("is_canonical"), col("cluster_size"))
       .orderBy(col("cluster"), col("vec_id"))
-  }
 
   /** t55's stamped seed (banded index + part-A assignment) — t40's
     * protocol; tables rides the stamp alongside bits/radius/cap because

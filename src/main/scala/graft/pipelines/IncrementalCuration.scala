@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
+import graft.core.CompileFree
 import graft.etl.Warehouse
 import graft.queries.{BandEmbIndex, BandIndex, EmbIndex, TextOps}
 
@@ -709,11 +710,12 @@ object IncrementalCuration {
     * read is the only driver-side value, used to derive the same split
     * the oracle computes with a scalar subquery.
     */
-  def t41IncrementalCuration(s: SparkSession, dir: String): DataFrame = {
-    val (wh, splitId) = t41EnsureSeeded(s, dir)
-    ingestAudit(wh,
-      graft.core.Tables.documents(s, dir).filter(col("doc_id") > splitId))
-  }
+  def t41IncrementalCuration(s: SparkSession, dir: String): DataFrame =
+    CompileFree.run(s, s"$dir/documents.parquet") { s =>
+      val (wh, splitId) = t41EnsureSeeded(s, dir)
+      ingestAudit(wh,
+        graft.core.Tables.documents(s, dir).filter(col("doc_id") > splitId))
+    }
 
   private def lifecycleWh(s: SparkSession, dir: String, name: String): Warehouse =
     Warehouse(s, new java.io.File(
@@ -772,13 +774,14 @@ object IncrementalCuration {
     * pairwise-mode complement to t38's clustered full-corpus run. Same
     * dial contract (tables/bits/radius/cap reach query and oracle).
     */
-  def t42IncrementalMultiSignal(s: SparkSession, dir: String): DataFrame = {
-    val (wh, splitId) = t42EnsureSeeded(s, dir)
-    ingestAudit(wh,
-      graft.core.Tables.documents(s, dir).filter(col("doc_id") > splitId),
-      emb = dialSig(graft.core.Tables.embeddings(s, dir)
-        .filter(col("vec_id") > splitId)))
-  }
+  def t42IncrementalMultiSignal(s: SparkSession, dir: String): DataFrame =
+    CompileFree.run(s, s"$dir/documents.parquet", s"$dir/embeddings.parquet") { s =>
+      val (wh, splitId) = t42EnsureSeeded(s, dir)
+      ingestAudit(wh,
+        graft.core.Tables.documents(s, dir).filter(col("doc_id") > splitId),
+        emb = dialSig(graft.core.Tables.embeddings(s, dir)
+          .filter(col("vec_id") > splitId)))
+    }
 
   /** The dialed embedding signal both multi-signal lifecycle queries run
     * with — the BANDED family at t54's env-driven dials (round 14: the
@@ -861,14 +864,15 @@ object IncrementalCuration {
     * and the increment composes components exactly — the spec-pinned
     * increment == full claim).
     */
-  def t43IncrementalClustered(s: SparkSession, dir: String): DataFrame = {
-    val (wh, splitId) = t43EnsureSeeded(s, dir)
-    ingestAudit(wh,
-      graft.core.Tables.documents(s, dir).filter(col("doc_id") > splitId),
-      emb = dialSig(graft.core.Tables.embeddings(s, dir)
-        .filter(col("vec_id") > splitId)),
-      clustered = true)
-  }
+  def t43IncrementalClustered(s: SparkSession, dir: String): DataFrame =
+    CompileFree.run(s, s"$dir/documents.parquet", s"$dir/embeddings.parquet") { s =>
+      val (wh, splitId) = t43EnsureSeeded(s, dir)
+      ingestAudit(wh,
+        graft.core.Tables.documents(s, dir).filter(col("doc_id") > splitId),
+        emb = dialSig(graft.core.Tables.embeddings(s, dir)
+          .filter(col("vec_id") > splitId)),
+        clustered = true)
+    }
 
   private[graft] def t43EnsureSeeded(s: SparkSession, dir: String): (Warehouse, Long) =
     multiSignalEnsureSeeded(s, dir, "t43_inccur", clustered = true)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{CompileFree, Tables}
 import graft.core.Tables._
 import graft.functions.{NativeHashes => NH, NativeText => NT, Rounding => R, TextFunctions => TF, VectorOps => V}
 
@@ -983,15 +983,16 @@ object TextOps {
     * queries; Bench warms the seed, measures the append + probe.
     */
   def t46AnnIvfIncrement(s: SparkSession, dir: String,
-                         k: Int = IvfModel.K, nProbe: Int = IvfModel.NProbe): DataFrame = {
-    val wh = t46EnsureSeeded(s, dir, k)
-    val cents = IvfModel.centroids(s, dir)
-    val partB = embeddings(s, dir)
-      .select(col("vec_id"), graft.functions.VectorOps.toDouble(col("embedding")).as("emb"))
-      .filter(splitBucket(col("vec_id")) >= 50)
-    IvfModel.appendListsFrame(wh, partB, cents)
-    ivfListsProbe(IvfModel.listsOf(wh), cents, nProbe)
-  }
+                         k: Int = IvfModel.K, nProbe: Int = IvfModel.NProbe): DataFrame =
+    CompileFree.run(s, s"$dir/embeddings.parquet") { s =>
+      val wh = t46EnsureSeeded(s, dir, k)
+      val cents = IvfModel.centroids(s, dir)
+      val partB = embeddings(s, dir)
+        .select(col("vec_id"), graft.functions.VectorOps.toDouble(col("embedding")).as("emb"))
+        .filter(splitBucket(col("vec_id")) >= 50)
+      IvfModel.appendListsFrame(wh, partB, cents)
+      ivfListsProbe(IvfModel.listsOf(wh), cents, nProbe)
+    }
 
   private[graft] def t46EnsureSeeded(s: SparkSession, dir: String, k: Int): graft.etl.Warehouse = {
     // the quantizer is the FULL-corpus stamped artifact (same generation
@@ -1283,15 +1284,16 @@ object TextOps {
     */
   def t48AnnIvfPqIncrement(s: SparkSession, dir: String,
                            k: Int = IvfModel.K, nProbe: Int = IvfModel.NProbe,
-                           ks: Int = DialPqKs): DataFrame = {
-    val wh = t48EnsureSeeded(s, dir, k, ks)
-    val partB = embeddings(s, dir)
-      .select(col("vec_id"), graft.functions.VectorOps.toDouble(col("embedding")).as("emb"))
-      .filter(splitBucket(col("vec_id")) >= 50)
-    PqModel.appendPqListsFrame(wh, partB, IvfModel.centroids(s, dir),
-      PqModel.codebookArr(s, dir))
-    ivfPqProbe(s, dir, PqModel.pqListsOf(wh), nProbe, ks = ks)
-  }
+                           ks: Int = DialPqKs): DataFrame =
+    CompileFree.run(s, s"$dir/embeddings.parquet") { s =>
+      val wh = t48EnsureSeeded(s, dir, k, ks)
+      val partB = embeddings(s, dir)
+        .select(col("vec_id"), graft.functions.VectorOps.toDouble(col("embedding")).as("emb"))
+        .filter(splitBucket(col("vec_id")) >= 50)
+      PqModel.appendPqListsFrame(wh, partB, IvfModel.centroids(s, dir),
+        PqModel.codebookArr(s, dir))
+      ivfPqProbe(s, dir, PqModel.pqListsOf(wh), nProbe, ks = ks)
+    }
 
   private[graft] def t48EnsureSeeded(s: SparkSession, dir: String, k: Int,
                                      ks: Int = DialPqKs): graft.etl.Warehouse = {
@@ -2156,8 +2158,10 @@ object TextOps {
     // its empty-index increment semantics) under the driver's t54 hash
     // oracle every round. t54NearDupBandedOf remains as the reference
     // implementation the equivalence spec compares against.
-    BandEmbIndex.selfCosinePairsOf(embeddings(s, dir),
-      DialBandTables, DialBandBits, DialBandRadius)
+    CompileFree.run(s, s"$dir/embeddings.parquet") { s =>
+      BandEmbIndex.selfCosinePairsOf(embeddings(s, dir),
+        DialBandTables, DialBandBits, DialBandRadius)
+    }
 
   def t54NearDupBandedOf(embSrc: DataFrame, tables: Int, bits: Int,
                          radius: Int, maxBucket: Int = EmbBucketCap): DataFrame = {

@@ -134,4 +134,60 @@ class NativeHashesSpec extends SparkTestBase {
       .first().getLong(0)
     assert(interpSim === dfSim)
   }
+
+  test("native vector kernels: interpreted eval == generated code, bit for bit") {
+    // lifecycle ops over small corpora plan in the compile-free session,
+    // so DotProduct and SignBandCodes run through eval there
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    import graft.functions.NativeVector.{DotProduct, SignBandCodes}
+
+    val rng = new scala.util.Random(11)
+    val dim = 24
+    def vec(n: Int): ArrayData = new GenericArrayData(Array.fill[Any](n)(rng.nextGaussian()))
+    val withNull: ArrayData = new GenericArrayData(Array.tabulate[Any](dim)(i => if (i == 5) null else 0.5))
+    def ref(i: Int, containsNull: Boolean) = BoundReference(i, ArrayType(DoubleType, containsNull), nullable = true)
+    def both(e: Expression, row: InternalRow): (Any, Any) =
+      (e.eval(row), GenerateUnsafeProjection.generate(Seq(e)).apply(row))
+
+    val pairs: Seq[(String, ArrayData, ArrayData, Boolean)] =
+      (0 until 20).map(i => (s"normal $i", vec(dim), vec(dim), false)) ++
+        (0 until 5).map(i => (s"normal nullable-typed $i", vec(dim), vec(dim), true)) ++ Seq(
+          ("length mismatch", vec(dim), vec(dim - 1), false),
+          ("null element", withNull, vec(dim), true),
+          ("null array", null, vec(dim), true))
+    val dots = pairs.map { case (name, a, b, containsNull) =>
+      val (interp, gen) = both(DotProduct(ref(0, containsNull), ref(1, containsNull)), InternalRow(a, b))
+      val genValue = if (gen.asInstanceOf[InternalRow].isNullAt(0)) null
+                     else gen.asInstanceOf[InternalRow].getDouble(0)
+      def bits(v: Any) = Option(v).map(d => java.lang.Double.doubleToRawLongBits(d.asInstanceOf[Double]))
+      assert(bits(interp) === bits(genValue), name)
+      name -> interp
+    }.toMap
+    assert(dots("length mismatch") == null && dots("null element") == null && dots("null array") == null)
+    assert(dots("normal 0") != null)
+
+    val (tables, bitsPer) = (3, 5)
+    val planes = Array.fill(tables * bitsPer * dim)(rng.nextGaussian())
+    val inputs: Seq[(String, ArrayData, Boolean)] =
+      pairs.filter(_._1.startsWith("normal")).map(p => (p._1, p._2, p._4)) ++ Seq(
+        ("length mismatch", vec(dim - 1), false),
+        ("null element", withNull, true),
+        ("null array", null, true))
+    val codes = inputs.map { case (name, a, containsNull) =>
+      val (interp, gen) = both(SignBandCodes(ref(0, containsNull), planes, tables, bitsPer, dim), InternalRow(a))
+      val i = interp.asInstanceOf[ArrayData].toLongArray().toSeq
+      assert(i === gen.asInstanceOf[InternalRow].getArray(0).toLongArray().toSeq, name)
+      name -> i
+    }
+    val byName = codes.toMap
+    assert(byName("length mismatch") === Seq.fill(tables)(0L))
+    assert(byName("null element") === Seq.fill(tables)(0L))
+    assert(byName("null array") === Seq.fill(tables)(0L))
+    assert(codes.filter(_._1.startsWith("normal")).exists(_._2.exists(_ != 0L)))
+  }
 }
+
