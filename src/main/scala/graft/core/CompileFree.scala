@@ -2,7 +2,6 @@ package graft.core
 
 import org.apache.hadoop.fs.Path
 
-import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
 
 /** Planning small inputs without generated code: the one size rule and the
@@ -33,41 +32,55 @@ object CompileFree {
     // CompileFreeLifecycleSpec count the compiles).
     "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
 
-  private var context: Option[SparkContext] = None
-  private var sessions = Map.empty[Map[String, String], SparkSession]
+  private var last: Option[SparkSession] = None
 
   /** The settings of `spark` a session can change at runtime. */
   def settings(spark: SparkSession): Map[String, String] =
     spark.conf.getAll.filter { case (k, _) => spark.conf.isModifiable(k) }
 
-  /** A session with `spark`'s modifiable settings and no generated code,
-    * one per distinct settings map (a compile-free session maps to itself).
+  /** A session with `spark`'s modifiable settings and no generated code.
+    * Only the last one made is kept. It is reused while it has the same
+    * SparkContext as `spark` and its settings still equal the wanted ones;
+    * a setting changed on either side since makes a new session, so a
+    * setting an op changes and leaves changed reaches no later caller. A
+    * session holds no compiled code or cached plan, so making one costs
+    * only its settings.
     */
   def session(spark: SparkSession): SparkSession = {
-    val settings = this.settings(spark) ++ NoCodegen
+    val wanted = settings(spark) ++ NoCodegen
     synchronized {
-      if (!context.contains(spark.sparkContext)) {
-        context = Some(spark.sparkContext)
-        sessions = Map.empty
-      }
-      sessions.getOrElse(settings, {
+      last.filter(s => (s.sparkContext eq spark.sparkContext) && settings(s) == wanted).getOrElse {
         val s = spark.newSession()
-        settings.foreach { case (k, v) => s.conf.set(k, v) }
-        sessions += settings -> s
+        wanted.foreach { case (k, v) => s.conf.set(k, v) }
+        last = Some(s)
         s
-      })
+      }
     }
   }
 
   /** The size rule: `spark.sql.autoBroadcastJoinThreshold` is > 0 and every
-    * input holds at most that many committed bytes. The threshold bounds
-    * compressed bytes on disk, not memory: a held input is its decoded
-    * rows, a multiple of that.
+    * input holds at most that many committed bytes, and at most `cap`. The
+    * threshold bounds compressed bytes on disk, not memory: a held input is
+    * its decoded rows, a multiple of that.
     */
-  def fits(spark: SparkSession, committedBytes: Iterable[BigInt]): Boolean = {
+  def fits(spark: SparkSession, committedBytes: Iterable[BigInt],
+           cap: Long = Long.MaxValue): Boolean = {
     val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
-    limit > 0 && committedBytes.forall(_ <= limit)
+    limit > 0 && committedBytes.forall(_ <= limit.min(cap))
   }
+
+  /** The cap [[run]] puts on each corpus table, in committed bytes: the
+    * lifecycle side of the rule is set by measurement, not by the
+    * broadcast threshold. An op's compile cost is fixed, while its
+    * interpreted cost grows with its rows, so the two cross.
+    * `graft.Bench`'s lifecycle rows, codegen vs compile-free, 4-core box,
+    * corpora derived by `graft.tools.ScaleData`: at sf0.1 (documents
+    * 584 KB, embeddings 780 KB) every entry that calls [[run]] ran faster
+    * compile-free; at sf0.3 (1.7 MB, 1.6 MB) and sf1.0 (5.8 MB, 5.2 MB)
+    * the four that verify cosine pairs (t40, t42, t43, t55) ran 1.35-1.5x
+    * slower. The cap sits just over the largest corpus measured to win.
+    */
+  val LifecycleBytes: Long = 1000000L
 
   /** The bytes of the data files under `path` (names starting with `_` or
     * `.` are not data). A path that cannot be listed counts as over any
@@ -87,10 +100,10 @@ object CompileFree {
   }
 
   /** `op` built whole in [[session]] when every one of `inputs` (paths of
-    * the tables it reads) passes [[fits]], else in `spark`. Everything the
-    * op makes, the frame it returns included, belongs to the session it
-    * was given, so no frame crosses sessions.
+    * the tables it reads) passes [[fits]] under [[LifecycleBytes]], else in
+    * `spark`. Everything the op makes, the frame it returns included,
+    * belongs to the session it was given, so no frame crosses sessions.
     */
   def run[T](spark: SparkSession, inputs: String*)(op: SparkSession => T): T =
-    op(if (fits(spark, inputs.map(committedBytes(spark, _)))) session(spark) else spark)
+    op(if (fits(spark, inputs.map(committedBytes(spark, _)), LifecycleBytes)) session(spark) else spark)
 }

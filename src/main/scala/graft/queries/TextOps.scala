@@ -2158,10 +2158,8 @@ object TextOps {
     // its empty-index increment semantics) under the driver's t54 hash
     // oracle every round. t54NearDupBandedOf remains as the reference
     // implementation the equivalence spec compares against.
-    CompileFree.run(s, s"$dir/embeddings.parquet") { s =>
-      BandEmbIndex.selfCosinePairsOf(embeddings(s, dir),
-        DialBandTables, DialBandBits, DialBandRadius)
-    }
+    BandEmbIndex.selfCosinePairsOf(embeddings(s, dir),
+      DialBandTables, DialBandBits, DialBandRadius)
 
   def t54NearDupBandedOf(embSrc: DataFrame, tables: Int, bits: Int,
                          radius: Int, maxBucket: Int = EmbBucketCap): DataFrame = {

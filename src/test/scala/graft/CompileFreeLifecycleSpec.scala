@@ -9,6 +9,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
+import graft.core.CompileFree
 import graft.queries.IvfModel
 
 /** Lifecycle ingests over corpora within the size rule plan their whole op
@@ -56,6 +57,54 @@ class CompileFreeLifecycleSpec extends SparkTestBase with AdaptiveSparkPlanHelpe
 
   private def nodes(df: DataFrame): Seq[SparkPlan] =
     collectWithSubqueries(df.queryExecution.executedPlan) { case n => n }
+
+  test("the compile-free session is the last one made, replaced when its settings differ") {
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    try {
+      val s = CompileFree.session(spark)
+      assert(s ne spark)
+      assert(CompileFree.session(spark) eq s)
+      assert(s.conf.get("spark.sql.codegen.factoryMode") === "NO_CODEGEN")
+      // a setting changed inside an op is not handed to the next caller
+      s.conf.set(key, "3")
+      val t = CompileFree.session(spark)
+      assert((t ne s) && t.conf.get(key) === saved)
+      // a caller with other settings gets a session of its own, and only
+      // the last session made is kept
+      spark.conf.set(key, "5")
+      val u = CompileFree.session(spark)
+      assert((u ne t) && u.conf.get(key) === "5")
+      spark.conf.set(key, saved)
+      assert(CompileFree.session(spark) ne t)
+    } finally spark.conf.set(key, saved)
+  }
+
+  test("an entry runs compile-free only while every corpus table is within the cap and the threshold") {
+    val root = Files.createTempDirectory("graft_compile_free_cap_")
+    def table(name: String, bytes: Long): String = {
+      val t = Files.createDirectories(root.resolve(name))
+      Files.write(t.resolve("part-00000.parquet"), new Array[Byte](bytes.toInt))
+      t.toString
+    }
+    try {
+      val small = table("small", CompileFree.LifecycleBytes)
+      // names starting with `_` or `.` are not data and are not counted
+      Files.write(root.resolve("small").resolve(".part-00000.parquet.crc"), new Array[Byte](2000000))
+      val big = table("big", CompileFree.LifecycleBytes + 1)
+      assert(CompileFree.run(spark, small)(identity) eq CompileFree.session(spark))
+      assert(CompileFree.run(spark, small, big)(identity) eq spark)
+      assert(CompileFree.run(spark, root.resolve("missing").toString)(identity) eq spark)
+      val saved = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
+      try assert(CompileFree.run(spark, small)(identity) eq spark)
+      finally saved.fold(spark.conf.unset("spark.sql.autoBroadcastJoinThreshold"))(
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
+    } finally {
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.toSeq.reverse.foreach(Files.delete) finally walk.close()
+    }
+  }
 
   test("a second t41 op and a second t55 op over a small corpus compile no code") {
     withIndexRoot { _ =>
