@@ -2,11 +2,14 @@ package graft.core
 
 import org.apache.hadoop.fs.Path
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 
 /** Planning small inputs without generated code: the one size rule and the
-  * one session that the serving snapshot ([[graft.etl.Warehouse.snapshot]])
-  * and the lifecycle entries ([[run]]) share.
+  * one session that three callers share: the serving snapshot
+  * ([[graft.etl.Warehouse.snapshot]]), the lifecycle entries ([[run]]), and
+  * the daily sync and period transition ([[graft.etl.Warehouse.compileFree]]).
   *
   * Spark compiles a class for every new whole-stage pipeline, projection,
   * predicate and ordering, and the JVM-wide cache of compiled classes holds
@@ -16,9 +19,10 @@ import org.apache.spark.sql.SparkSession
   * them, and recompiles them on every pass. Measured on a 4-core box: one
   * pass over the dashboard's 32 distinct requests recompiled ~285 classes
   * (Janino 30 % of the serving CPU samples, source generation 10 %, at
-  * ~1 s p50), and every t41 ingest op recompiled 123-125 classes and every
-  * t55 op 133-137. Over inputs this small, interpreted operators cost less
-  * than compiling them, and less even than reusing cached code: with
+  * ~1 s p50), every t41 ingest op recompiled 123-125 classes and every
+  * t55 op 133-137, and every daily sync 28-62. Over inputs this small,
+  * interpreted operators cost less than compiling them, and less even
+  * than reusing cached code: with
   * codegen off the `lifecycle-ingest` pass fell from 8.7 s to 5.6 s, where
   * a 5,000-entry cache (0 compiles per repeated op) gave 6.0 s.
   */
@@ -28,8 +32,8 @@ object CompileFree {
     "spark.sql.codegen.wholeStage" -> "false",
     // wholeStage=false alone still compiles every projection, predicate and
     // ordering; this is what turns those off. Spark marks it internal, so a
-    // Spark upgrade has to re-check it (CasSnapshotSpec and
-    // CompileFreeLifecycleSpec count the compiles).
+    // Spark upgrade has to re-check it (CasSnapshotSpec,
+    // CompileFreeLifecycleSpec and CompileFreeSyncSpec count the compiles).
     "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
 
   private var last: Option[SparkSession] = None
@@ -81,6 +85,18 @@ object CompileFree {
     * slower. The cap sits just over the largest corpus measured to win.
     */
   val LifecycleBytes: Long = 1000000L
+
+  /** The bytes `df` reads: a driver-local relation of binary rows (what
+    * `toDF` and `createDataset` build) counts the bytes those rows hold,
+    * since its plan statistics estimate 20 bytes per string; any other
+    * leaf counts its plan statistics, for a file read the bytes of its
+    * files.
+    */
+  def inputBytes(df: DataFrame): BigInt = df.queryExecution.analyzed.collectLeaves().map {
+    case l: LocalRelation if l.data.forall(_.isInstanceOf[UnsafeRow]) =>
+      BigInt(l.data.map(_.asInstanceOf[UnsafeRow].getSizeInBytes.toLong).sum)
+    case leaf => leaf.stats.sizeInBytes
+  }.sum
 
   /** The bytes of the data files under `path` (names starting with `_` or
     * `.` are not data). A path that cannot be listed counts as over any

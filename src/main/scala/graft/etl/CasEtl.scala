@@ -3,6 +3,9 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 
+import org.apache.spark.sql.graftshim.ColumnBridge
+
+import graft.core.CompileFree
 import graft.queries.Frames
 
 /** The incremental sync pipeline (reference etl_sync.py run_sync /
@@ -31,6 +34,15 @@ import graft.queries.Frames
   * Surrogate ids are xxhash64 of the natural key instead of the
   * reference's serial RETURNING id (etl_sync.py:236-245) — deterministic
   * under re-runs and needs no driver-side coordination at any scale.
+  *
+  * [[sync]] and [[periodTransition]] switch session once, at their entry:
+  * while every served table, and the sync's raw increment, passes the
+  * serving snapshot's size rule under [[CompileFree.LifecycleBytes]]
+  * ([[Warehouse.compileFree]]), the whole op, the caller's raw frame
+  * included ([[ColumnBridge.rehome]]), is built in the compile-free
+  * session; otherwise in the caller's session, with generated code. The
+  * admin rewrites ([[backfillScores]], [[setPeriodoActivo]],
+  * [[updatePeriodoFechas]]) keep the caller's session.
   */
 object CasEtl {
 
@@ -130,6 +142,11 @@ object CasEtl {
   def sync(wh: Warehouse, rawJson: DataFrame, tipo: String,
            complete: Boolean = true): SyncResult = wh.withWriterScope(s"sync:$tipo") {
     require(tipo == "operativas" || tipo == "seguridad")
+    val in = wh.compileFree(CompileFree.inputBytes(rawJson))
+    syncIn(in, ColumnBridge.rehome(rawJson, in.spark), tipo, complete)
+  }
+
+  private def syncIn(wh: Warehouse, rawJson: DataFrame, tipo: String, complete: Boolean): SyncResult = {
     val parsed0 = SubmissionParse.parse(rawJson)
 
     // S3 — incremental extract: only submissions after the checkpoint
@@ -290,7 +307,9 @@ object CasEtl {
     * dozen-row table: periodos is collected once, the active and next
     * periods are picked on the driver, and the coverage check is one query.
     */
-  def periodTransition(wh: Warehouse): Option[String] = {
+  def periodTransition(wh: Warehouse): Option[String] = transitionIn(wh.compileFree())
+
+  private def transitionIn(wh: Warehouse): Option[String] = {
     val periodos = wh.periodos
     val rows = periodos.collect().toSeq
     def inicio(r: Row) = Option(r.getAs[java.sql.Date]("fecha_inicio"))

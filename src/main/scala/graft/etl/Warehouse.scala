@@ -246,6 +246,31 @@ case class Warehouse(spark: SparkSession, dir: String) extends CasTables {
 
   private var served: Option[(String, Map[String, String], Snapshot)] = None
 
+  /** The served tables' committed files, read in `session` (None while a
+    * table has no parquet), and whether each of them and each of `inputs`
+    * (bytes) passes [[graft.core.CompileFree.fits]] under `cap`: the one
+    * rule that decides both whether a snapshot holds its tables and
+    * whether the daily sync and transition run compile-free.
+    */
+  private def servedFiles(session: SparkSession, cap: Long = Long.MaxValue,
+                          inputs: Seq[BigInt] = Nil): (Map[String, Option[DataFrame]], Boolean) = {
+    val committed = CasTables.Served.map { case (n, schema) => n -> readFiles(session, n, schema) }.toMap
+    (committed, graft.core.CompileFree.fits(spark,
+      committed.values.flatten.map(_.queryExecution.analyzed.stats.sizeInBytes) ++ inputs, cap))
+  }
+
+  /** This warehouse bound to the compile-free session when every served
+    * table and every one of `inputs` (bytes) fits under
+    * [[graft.core.CompileFree.LifecycleBytes]] ([[servedFiles]]), else
+    * itself. The copy's writes re-enter this warehouse's writer scope,
+    * since the lease is keyed on the per-JVM [[Warehouse.OwnerId]], not on
+    * the instance.
+    */
+  private[graft] def compileFree(inputs: BigInt*): Warehouse =
+    if (servedFiles(spark, graft.core.CompileFree.LifecycleBytes, inputs)._2)
+      copy(spark = graft.core.CompileFree.session(spark))
+    else this
+
   /** The served tables of one commit generation, resolved once. When every
     * one of them passes [[graft.core.CompileFree.fits]] (at most the
     * caller's broadcast threshold in committed parquet bytes), each is
@@ -257,9 +282,7 @@ case class Warehouse(spark: SparkSession, dir: String) extends CasTables {
     */
   private final class Snapshot extends CasTables {
     private val session = graft.core.CompileFree.session(spark)
-    private val committed = CasTables.Served.map { case (n, schema) => n -> readFiles(session, n, schema) }.toMap
-    private val held = graft.core.CompileFree.fits(spark,
-      committed.values.flatten.map(_.queryExecution.analyzed.stats.sizeInBytes))
+    private val (committed, held) = servedFiles(session)
     private val tables = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
     def read(name: String, schema: StructType): DataFrame = tables.computeIfAbsent(name, _ =>

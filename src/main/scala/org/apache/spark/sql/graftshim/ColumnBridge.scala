@@ -21,4 +21,14 @@ object ColumnBridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
+
+  /** `df`'s logical plan as a frame of `session`: the same rows, analysed,
+    * optimised and planned under `session`'s settings, with nothing
+    * collected. The sessions must share one SparkContext.
+    */
+  def rehome(df: org.apache.spark.sql.DataFrame,
+             session: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame =
+    if (df.sparkSession eq session) df
+    else org.apache.spark.sql.classic.Dataset.ofRows(
+      session.asInstanceOf[org.apache.spark.sql.classic.SparkSession], df.queryExecution.logical)
 }
