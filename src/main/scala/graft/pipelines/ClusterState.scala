@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.core.CompileFree
 import graft.etl.Warehouse
-import graft.queries.{BandEmbIndex, BandIndex, EmbIndex, IvfModel, TextOps}
+import graft.queries.{BandEmbIndex, BandIndex, EmbIndex, Frames, IvfModel, PairFamily, TextOps}
 
 /** PERSISTED dedup-cluster state — the reference's checkpoint posture
   * (etl_sync.py:356-385: sync state survives runs, each batch advances
@@ -70,113 +70,64 @@ object ClusterState {
   def clusters(wh: Warehouse): DataFrame = TextOps.presentClusters(read(wh))
 
   // ------------------------------------------------- index-fed lifecycle
-  /** Full build of BOTH persisted artifacts — the cluster assignment AND
-    * the [[BandIndex]] the next batches will probe. Run once per corpus
-    * (or to reconcile after many increments); everything after is
-    * [[ingestBatch]].
+  /** Full build of BOTH persisted artifacts over a slice — `fam`'s index
+    * (the one the next batches will probe) and the cluster assignment
+    * from the slice's self pairs. Run once per corpus (or to
+    * [[reconcile]]); everything after is [[ingestBatch]].
     */
-  def seedCorpus(wh: Warehouse, docs: DataFrame): Unit = {
-    BandIndex.seed(wh, docs)
-    seed(wh, docs.select(col("doc_id")), TextOps.minhashPairsOf(docs))
+  def seedCorpus(wh: Warehouse, fam: PairFamily, slice: DataFrame): Unit = {
+    fam.seed(wh, slice)
+    seedPairs(wh, fam, slice)
   }
 
-  /** One ingest batch, fully incremental: the batch bands ONLY ITSELF,
-    * probes the persisted index for its candidate pairs (partition-pruned
-    * read — see [[BandIndex.incrementCandidatePairs]]), advances the
-    * cluster state through the contracted propagation, then appends its
-    * own bands to the index for the NEXT batch. Nothing in the loop
-    * re-shingles or re-bands the settled corpus; the only full passes
-    * left are one column-pruned read of the prior assignment (the
-    * composition join inside the increment) and the append's idempotency
-    * anti-join on the index's (doc_id, band) columns.
+  private def seedPairs(wh: Warehouse, fam: PairFamily, slice: DataFrame): Unit = {
+    val pairs = fam.selfPairs(slice)
+    try seed(wh, fam.nodesOf(slice), fam.edgesOf(pairs))
+    finally Frames.releaseBeyond(pairs, slice)
+  }
+
+  /** One ingest batch, fully incremental: the batch codes ONLY ITSELF,
+    * probes `fam`'s persisted index for its candidate pairs
+    * (partition-pruned read), advances the cluster state through the
+    * contracted propagation, then appends its own coded rows to the index
+    * for the NEXT batch. Nothing in the loop re-codes the settled corpus;
+    * the only full passes left are one column-pruned read of the prior
+    * assignment (the composition join inside the increment) and the
+    * append's idempotency anti-join on the index's key columns.
     *
     * Replay-safe at every crash point: pairs are recomputed
     * deterministically, a re-run advance is a no-op (the increment drops
     * newNodes already in the prior assignment), and the index append
-    * anti-joins what already landed. `validateEndpoints = false` on the
-    * advance: this pair feed satisfies the endpoint contract by
-    * construction (every pair touches the batch or the indexed corpus,
-    * both governed by the state), so the guard's extra pass is skipped
-    * in the hot loop.
+    * anti-joins what already landed.
     */
-  def ingestBatch(wh: Warehouse, batchDocs: DataFrame): Unit = {
-    // one banding pass (shingle + minhash — the batch's dominant compute)
-    // shared by the probe and the append
-    val bb = cut(BandIndex.bandedOf(batchDocs))
-    val pairs = BandIndex.incrementPairsOf(BandIndex.banded(wh), bb, TextOps.MaxBucket)
-    TextOps.dedupClustersIncrementOpt(
-      read(wh), batchDocs.select(col("doc_id")), pairs, validateEndpoints = false)
-      .foreach(wh.rewrite(TableName, _))
-    BandIndex.appendBatchBanded(wh, bb)
-  }
+  def ingestBatch(wh: Warehouse, fam: PairFamily, batch: DataFrame): Unit =
+    advanceProbed(wh, fam, batch)(fam.append(wh, _))
 
-  private def cut(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
-
-  // ---------------------------------------------------------------- t37
-  /** The incremental path as a registered, ORACLE-CHECKED query: split
-    * the corpus deterministically (same md5-bucket arithmetic as t17 —
-    * low 50 buckets are the "settled" part A, the rest is the ingest
-    * batch B), seed state + band index on A, advance with B's
-    * INDEX-PROBED pairs, present the maintained state. The oracle is
-    * t13's full-recluster SQL over the WHOLE corpus — increment == full
-    * recluster IS the claim, proved here through the persisted warehouse
-    * and the driver's DuckDB hash-compare, not just in-memory specs.
-    *
-    * The seed (band index + part-A assignment) is STAMPED — Bench warms
-    * it via [[warmSeeds]] so the measured region is the index-probed
-    * advance a deployment pays per batch; the advance itself is
-    * replay-idempotent (redelivered newNodes anti-join out, their pairs
-    * contract to already-merged reps), so a repeat invocation over the
-    * advanced state presents identical clusters. Verify's
-    * `graft.lifecycle.reseed=true` forces the full re-seed per
-    * invocation, keeping the dumped hashes a from-scratch replay.
-    * Cap caveat, documented not hidden: a band bucket crossing the skew
-    * cap only in the union would have fed part-A pairs the full
-    * recluster drops; at the verified scale factors no bucket is within
-    * 100× of the cap, and the reconciliation posture at 100 TB is a
-    * periodic [[seedCorpus]] (segment-merge style).
+  /** The probed feed: code the batch once (shared by the probe and by
+    * `andThen`, the caller's use of the coded rows — the index append, or
+    * nothing), probe, advance, then release every pin the coding, the
+    * probe and the increment took, also when a step throws.
+    * `validateEndpoints = false` on the advance: this pair feed satisfies
+    * the endpoint contract by construction (every pair touches the batch
+    * or the indexed corpus, both governed by the state), so the guard's
+    * extra pass is skipped in the hot loop.
     */
-  def t37ClusterIncrement(s: SparkSession, dir: String): DataFrame =
-    CompileFree.run(s, s"$dir/documents.parquet") { s =>
-      val wh = t37EnsureSeeded(s, dir)
-      val partB = graft.core.Tables.documents(s, dir)
-        .filter(TextOps.splitBucket(col("doc_id")) >= 50)
-      ingestBatchNoAppend(wh, partB)
-      clusters(wh)
-    }
-
-  private[graft] def t37EnsureSeeded(s: SparkSession, dir: String): Warehouse = {
-    val docs = graft.core.Tables.documents(s, dir)
-    val partA = docs.filter(TextOps.splitBucket(col("doc_id")) < 50)
-    // own sub-warehouse: the shared per-corpus scratch holds the FULL-
-    // corpus artifacts (ann_*, and BandIndex.ensure's full index); t37's
-    // part-A index under the same table name would refit-ping-pong there
-    val wh = Warehouse(s, new java.io.File(
-      IvfModel.warehouseFor(s, dir).dir, "t37_increment").toString)
-    val docsStamp = graft.core.Tables.contentStamp(s, s"$dir/documents.parquet")
-    BandIndex.ensureFor(wh, partA,
-      s"bands-partA50\n$dir\nbk=${BandIndex.BkBuckets}\n$docsStamp")
-    graft.queries.StampedTable.ensureSeeded(wh, "t37_seed",
-      s"t37-seed\n$dir\n$docsStamp") {
-      seed(wh, partA.select(col("doc_id")), TextOps.minhashPairsOf(partA))
-    }
-    wh
-  }
-
-  /** [[ingestBatch]] minus the index append — t37 must leave the index at
-    * exactly part A: [[BandIndex.ensureFor]] stamp-guards the table as
-    * part-A content, and an append would grow it under the same stamp,
-    * serving A ∪ B to any later caller trusting that stamp. (The probe
-    * itself is replay-exact either way — it anti-joins the current
-    * batch's ids out of the index side — but the stamp must not lie.)
-    */
-  private def ingestBatchNoAppend(wh: Warehouse, batchDocs: DataFrame): Unit = {
-    val pairs = BandIndex.incrementCandidatePairs(wh, batchDocs)
-    TextOps.dedupClustersIncrementOpt(
-      read(wh), batchDocs.select(col("doc_id")), pairs, validateEndpoints = false)
-      .foreach(wh.rewrite(TableName, _))
+  private def advanceProbed(wh: Warehouse, fam: PairFamily, batch: DataFrame)
+                           (andThen: DataFrame => Unit): Unit = {
+    val coded = Frames.cut(fam.codedOf(batch))
+    try {
+      val pairs = fam.incrementPairs(wh, coded)
+      try {
+        val inc = TextOps.dedupClustersIncrementOpt(
+          read(wh), fam.nodesOf(batch), fam.edgesOf(pairs), validateEndpoints = false)
+        // the increment's tree holds the contraction's fresh-node and
+        // label-map cuts
+        try {
+          inc.foreach(wh.rewrite(TableName, _))
+          andThen(coded)
+        } finally inc.foreach(Frames.releaseBeyond(_, batch))
+      } finally Frames.release(pairs)
+    } finally Frames.release(coded)
   }
 
   // ------------------------------------------------------ reconciliation
@@ -192,227 +143,113 @@ object ClusterState {
     * reference's full-resync-after-N-increments posture
     * (etl_sync.py:356-385 re-pulls a full window on schedule).
     */
-  def reconcile(wh: Warehouse, docs: DataFrame): Long =
-    reconcileWith(wh) { seedCorpus(wh, docs) }
-
-  /** [[reconcile]] for the embedding signal: full [[seedEmbeddings]]
-    * rebuild, same drift measure.
-    */
-  def reconcileEmbeddings(wh: Warehouse, embSrc: DataFrame,
-                          bits: Int = graft.queries.Lsh.Bits,
-                          radius: Int = graft.queries.Lsh.PolicyRadius,
-                          maxBucket: Int = TextOps.EmbBucketCap): Long =
-    reconcileWith(wh) { seedEmbeddings(wh, embSrc, bits, radius, maxBucket) }
-
-  /** [[reconcile]] for the BANDED embedding signal: full
-    * [[seedBandedEmbeddings]] rebuild (state + [[graft.queries
-    * .BandEmbIndex]]), same drift measure — the t55 lifecycle's
-    * union-cap repair, per (table, bucket).
-    */
-  def reconcileBandedEmbeddings(wh: Warehouse, embSrc: DataFrame,
-                                tables: Int, bits: Int, radius: Int = 1,
-                                maxBucket: Int = TextOps.EmbBucketCap): Long =
-    reconcileWith(wh) { seedBandedEmbeddings(wh, embSrc, tables, bits, radius, maxBucket) }
-
-
-  private def reconcileWith(wh: Warehouse)(rebuild: => Unit): Long = {
+  def reconcile(wh: Warehouse, fam: PairFamily, slice: DataFrame): Long = {
     // materialize the pre-rebuild assignment EAGERLY: the rebuild commits
     // a new generation, and a lazy frame would race the retention window
-    val before = read(wh)
-      .withColumnRenamed("cluster", "cluster_before").localCheckpoint()
-    rebuild
-    read(wh).join(before, Seq("doc_id"), "full_outer")
-      .filter(col("cluster").isNull || col("cluster_before").isNull ||
-        col("cluster") =!= col("cluster_before"))
-      .count()
+    val before = Frames.cut(read(wh).withColumnRenamed("cluster", "cluster_before"))
+    try {
+      seedCorpus(wh, fam, slice)
+      read(wh).join(before, Seq("doc_id"), "full_outer")
+        .filter(col("cluster").isNull || col("cluster_before").isNull ||
+          col("cluster") =!= col("cluster_before"))
+        .count()
+    } finally Frames.release(before)
   }
 
-  /** [[seedCorpus]]/[[ingestBatch]] for the EMBEDDING signal: same
-    * state table, the [[EmbIndex]] as the pair feed. A deployment
-    * maintaining BOTH signals uses two warehouses (or lets Curation
-    * union the pair feeds into one state via `extraPairs`).
+  // ------------------------------------------------- t37 / t40 / t55
+  /** The incremental path as registered, ORACLE-CHECKED queries, one per
+    * index family: t37 (text bands, oracle t13's full recluster), t40
+    * (single-table sign codes, oracle t34's closure) and t55 (banded sign
+    * codes, oracle [[TextOps.t55Sql]], the full t54 closure). Each splits
+    * its corpus table deterministically (same md5-bucket arithmetic as
+    * t17 — the low 50 buckets are the "settled" part A, the rest is the
+    * ingest batch B), seeds state + index on A, advances with B's
+    * INDEX-PROBED pairs and presents the maintained state. The oracle
+    * runs over the WHOLE corpus — increment == full recluster IS the
+    * claim, proved through the persisted warehouse and the driver's
+    * DuckDB hash-compare, not just in-memory specs. The dials reach both
+    * the query and the oracle SQL through the shared Dial* values.
+    *
+    * The seed is STAMPED ([[ensureSeeded]]) — Bench warms it via
+    * [[warmSeeds]] so the measured region is the index-probed advance a
+    * deployment pays per batch; the advance itself is replay-idempotent
+    * (redelivered newNodes anti-join out, their pairs contract to
+    * already-merged reps), so a repeat invocation over the advanced state
+    * presents identical rows. The advance skips the index append: the
+    * index is stamp-guarded as part-A content, and an append would grow
+    * it under the same stamp, serving A ∪ B to any later caller trusting
+    * that stamp. (The probe itself is replay-exact either way — it
+    * anti-joins the batch's ids out of the index side — but the stamp
+    * must not lie.) Verify's `graft.lifecycle.reseed=true` forces the
+    * full re-seed per invocation, keeping the dumped hashes a
+    * from-scratch replay.
+    *
+    * Cap caveat, documented not hidden: a bucket crossing the skew cap
+    * only in the union would have fed part-A pairs the full recluster
+    * drops; at the verified scale factors no t37 band bucket is within
+    * 100× of the cap, while t40's crossing is MEASURABLE — at the
+    * deliberately-biting `SPARK_GRAFT_EMB_CAP=8` dial the increment
+    * presents 25 rows where the full-recluster oracle presents 15
+    * (sf0.01), so the dial records cover t40 at bits=10 (62 rows,
+    * hash-green: no crossing) and NOT at cap=8. That boundary is where a
+    * deployment schedules [[reconcile]].
     */
-  def seedEmbeddings(wh: Warehouse, embSrc: DataFrame,
-                     bits: Int = graft.queries.Lsh.Bits,
-                     radius: Int = graft.queries.Lsh.PolicyRadius,
-                     maxBucket: Int = TextOps.EmbBucketCap): Unit = {
-    EmbIndex.seed(wh, embSrc, bits)
-    seed(wh, embSrc.select(col("vec_id").as("doc_id")),
-      TextOps.t15CosineNearDupOf(embSrc, bits, radius, maxBucket = maxBucket)
-        .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
-  }
+  def t37ClusterIncrement(s: SparkSession, dir: String): DataFrame =
+    registered(s, dir, "t37", BandIndex.Family, "documents")
 
-  /** One embedding ingest batch: code only the batch, probe the
-    * persisted sign-code index, advance, append — the same replay-safe
-    * crash points as [[ingestBatch]].
-    */
-  def ingestEmbeddingBatch(wh: Warehouse, batchEmb: DataFrame,
-                           bits: Int = graft.queries.Lsh.Bits,
-                           radius: Int = graft.queries.Lsh.PolicyRadius,
-                           maxBucket: Int = TextOps.EmbBucketCap): Unit = {
-    // one coding pass shared by probe and append, like [[ingestBatch]]
-    val bc = cut(EmbIndex.codedOf(batchEmb, bits))
-    val pairs = EmbIndex.incrementCosinePairsOf(EmbIndex.coded(wh), bc, bits,
-      graft.queries.Lsh.resolveRadius(bits, radius, TextOps.PairRadius), maxBucket)
-      .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
-    TextOps.dedupClustersIncrementOpt(
-      read(wh), batchEmb.select(col("vec_id").as("doc_id")), pairs, validateEndpoints = false)
-      .foreach(wh.rewrite(TableName, _))
-    EmbIndex.appendBatchCoded(wh, bc)
-  }
-
-  // ---------------------------------------------------------------- t40
-  /** t37's EMBEDDING twin: incremental SEMANTIC dedup through the
-    * persisted [[graft.queries.EmbIndex]] — split the embeddings by the
-    * same md5-bucket arithmetic, seed state + sign-code index on part A
-    * (t15 pairs over A), advance with part B's INDEX-PROBED cosine
-    * pairs, present the maintained state. Oracle = t34's full transitive
-    * closure over the WHOLE corpus (same dial contract: bits/radius/cap
-    * reach both this query and the oracle SQL via the shared Dial*
-    * values). Together t37 + t40 make the incremental posture
-    * oracle-proven on BOTH dedup signal types; the same protocol applies
-    * (stamped seed warmed by Bench, Verify's forced re-seed for
-    * from-scratch determinism, union-cap crossing reconciled by periodic
-    * full reclusters). The crossing caveat is
-    * MEASURABLE here, not hypothetical: at the deliberately-biting
-    * `SPARK_GRAFT_EMB_CAP=8` dial the seed retains part-A pairs from
-    * sign codes that only the union pushes over the cap, so the
-    * increment presents 25 rows where the full-recluster oracle
-    * presents 15 (sf0.01) — the dial records therefore cover t40 at
-    * bits=10 (62 rows, hash-green: no crossing) and NOT at cap=8,
-    * which is exactly the boundary where a deployment schedules
-    * [[seedCorpus]]-style reconciliation.
-    */
   def t40EmbedClusterIncrement(s: SparkSession, dir: String,
                                bits: Int = graft.queries.Lsh.Bits,
                                radius: Int = graft.queries.Lsh.PolicyRadius,
                                maxBucket: Int = TextOps.EmbBucketCap): DataFrame =
-    CompileFree.run(s, s"$dir/embeddings.parquet") { s =>
-      // resolve the policy sentinel ONCE, up front: the resolved value is
-      // part of the seed stamp, so sentinel and explicit-equal calls share
-      // one seeded generation
-      val rr = graft.queries.Lsh.resolveRadius(bits, radius, TextOps.PairRadius)
-      val wh = t40EnsureSeeded(s, dir, bits, rr, maxBucket)
-      val partB = graft.core.Tables.embeddings(s, dir)
-        .filter(TextOps.splitBucket(col("vec_id")) >= 50)
-      val pairsB = EmbIndex.incrementCosinePairs(wh, partB, bits, rr, maxBucket)
-        .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
-      TextOps.dedupClustersIncrementOpt(
-        read(wh), partB.select(col("vec_id").as("doc_id")), pairsB, validateEndpoints = false)
-        .foreach(wh.rewrite(TableName, _))
-      clusteredVectors(wh)
-    }
+    registered(s, dir, "t40", EmbIndex.Family(bits, radius, maxBucket), "embeddings")
 
-  /** t40's stamped seed (sign-code index + part-A assignment) — same
-    * warmup/forced-reseed protocol as [[t37EnsureSeeded]]; the dials are
-    * part of the stamp because they change both the index layout and the
-    * seeded pair set.
-    */
-  private[graft] def t40EnsureSeeded(s: SparkSession, dir: String,
-                                     bits: Int, radius: Int, maxBucket: Int): Warehouse = {
-    val emb = graft.core.Tables.embeddings(s, dir)
-    val partA = emb.filter(TextOps.splitBucket(col("vec_id")) < 50)
-    val wh = Warehouse(s, new java.io.File(
-      IvfModel.warehouseFor(s, dir).dir, "t40_increment").toString)
-    val embStamp = graft.core.Tables.contentStamp(s, s"$dir/embeddings.parquet")
-    EmbIndex.ensureFor(wh, partA, s"emb-partA50\n$dir\nbits=$bits\n$embStamp", bits)
-    graft.queries.StampedTable.ensureSeeded(wh, "t40_seed",
-      s"t40-seed\n$dir\nbits=$bits\nradius=$radius\ncap=$maxBucket\n$embStamp") {
-      val pairsA = TextOps.t15CosineNearDupOf(partA, bits, radius, maxBucket = maxBucket)
-        .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
-      seed(wh, partA.select(col("vec_id").as("doc_id")), pairsA)
-    }
-    wh
-  }
-
-  // ---------------------------------------------------------------- t55
-  /** [[seedEmbeddings]]'s BANDED twin: full build of cluster state +
-    * the [[graft.queries.BandEmbIndex]] OR-amplification index, pairs
-    * from the full t54 construction. The banded family is the measured
-    * scale path for the embedding lifecycle (SCALE.md round 13: the
-    * single-table Hamming ball is explode-dominated and loses recall
-    * every decade at any bounded mask budget; the banded probe costs
-    * L × (1 + bits) per item with L ~ n^0.22/decade).
-    */
-  def seedBandedEmbeddings(wh: Warehouse, embSrc: DataFrame,
-                           tables: Int, bits: Int, radius: Int = 1,
-                           maxBucket: Int = TextOps.EmbBucketCap): Unit = {
-    BandEmbIndex.seed(wh, embSrc, tables, bits)
-    seed(wh, embSrc.select(col("vec_id").as("doc_id")),
-      BandEmbIndex.selfCosinePairsOf(embSrc, tables, bits, radius, maxBucket)
-        .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
-  }
-
-  /** One BANDED embedding ingest batch: code only the batch (L × bits
-    * dots), probe the persisted banded index per (table, in-band mask),
-    * advance, append — the same replay-safe crash points as
-    * [[ingestEmbeddingBatch]].
-    */
-  def ingestBandedEmbeddingBatch(wh: Warehouse, batchEmb: DataFrame,
-                                 tables: Int, bits: Int, radius: Int = 1,
-                                 maxBucket: Int = TextOps.EmbBucketCap): Unit = {
-    val bc = cut(BandEmbIndex.codedOf(batchEmb, tables, bits))
-    val pairs = BandEmbIndex.incrementCosinePairsOf(BandEmbIndex.coded(wh), bc,
-      bits, radius, maxBucket)
-      .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
-    TextOps.dedupClustersIncrementOpt(
-      read(wh), batchEmb.select(col("vec_id").as("doc_id")), pairs, validateEndpoints = false)
-      .foreach(wh.rewrite(TableName, _))
-    BandEmbIndex.appendBatchCoded(wh, bc)
-  }
-
-  /** t40's BANDED twin: incremental semantic dedup through the
-    * persisted [[graft.queries.BandEmbIndex]] — same md5-bucket split,
-    * seed state + banded index on part A (t54 pairs over A), advance
-    * with part B's index-probed banded cosine pairs, present the
-    * maintained state. Oracle = [[TextOps.t55Sql]], the full t54
-    * transitive closure over the WHOLE corpus (shared DialBand* values
-    * reach both sides). The union-cap crossing caveat is t40's,
-    * per (table, bucket).
+  /** The banded family is the measured scale path for the embedding
+    * lifecycle (SCALE.md round 13: the single-table Hamming ball is
+    * explode-dominated and loses recall every decade at any bounded mask
+    * budget; the banded probe costs L × (1 + bits) per item with
+    * L ~ n^0.22/decade).
     */
   def t55BandedClusterIncrement(s: SparkSession, dir: String,
                                 tables: Int, bits: Int, radius: Int = 1,
                                 maxBucket: Int = TextOps.EmbBucketCap): DataFrame =
-    CompileFree.run(s, s"$dir/embeddings.parquet") { s =>
-      val wh = t55EnsureSeeded(s, dir, tables, bits, radius, maxBucket)
-      val partB = graft.core.Tables.embeddings(s, dir)
-        .filter(TextOps.splitBucket(col("vec_id")) >= 50)
-      val pairsB = BandEmbIndex.incrementCosinePairs(wh, partB, tables, bits, radius, maxBucket)
-        .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
-      TextOps.dedupClustersIncrementOpt(
-        read(wh), partB.select(col("vec_id").as("doc_id")), pairsB, validateEndpoints = false)
-        .foreach(wh.rewrite(TableName, _))
-      clusteredVectors(wh)
+    registered(s, dir, "t55", BandEmbIndex.Family(tables, bits, radius, maxBucket), "embeddings")
+
+  private[graft] def t55EnsureSeeded(s: SparkSession, dir: String, tables: Int,
+                                     bits: Int, radius: Int, maxBucket: Int): Warehouse =
+    ensureSeeded(s, dir, "t55", BandEmbIndex.Family(tables, bits, radius, maxBucket), "embeddings")
+
+  private def registered(s: SparkSession, dir: String, name: String,
+                         fam: PairFamily, table: String): DataFrame =
+    CompileFree.run(s, s"$dir/$table.parquet") { s =>
+      val wh = ensureSeeded(s, dir, name, fam, table)
+      val partB = graft.core.Tables.read(s, dir, table)
+        .filter(TextOps.splitBucket(col(fam.idCol)) >= 50)
+      advanceProbed(wh, fam, partB)(_ => ())
+      clusters(wh)
+        .select(col("doc_id").as(fam.idCol), col("cluster"),
+          col("is_canonical"), col("cluster_size"))
+        .orderBy(col("cluster"), col(fam.idCol))
     }
 
-  /** The maintained assignment as the embedding queries present it. */
-  private def clusteredVectors(wh: Warehouse): DataFrame =
-    clusters(wh)
-      .select(col("doc_id").as("vec_id"), col("cluster"),
-        col("is_canonical"), col("cluster_size"))
-      .orderBy(col("cluster"), col("vec_id"))
-
-  /** t55's stamped seed (banded index + part-A assignment) — t40's
-    * protocol; tables rides the stamp alongside bits/radius/cap because
-    * it changes both the index layout and the seeded pair set.
+  /** A registered entry's stamped seed (index + part-A assignment) in its
+    * own sub-warehouse: the shared per-corpus scratch holds the
+    * FULL-corpus artifacts (ann_*, and [[BandIndex.ensure]]'s full index),
+    * and a part-A index under the same table name would refit-ping-pong
+    * there. The family adds its layout dials to the index stamp, and all
+    * its dials ride the seed stamp: they change the index layout and the
+    * seeded pair set.
     */
-  private[graft] def t55EnsureSeeded(s: SparkSession, dir: String, tables: Int,
-                                     bits: Int, radius: Int, maxBucket: Int): Warehouse = {
-    val emb = graft.core.Tables.embeddings(s, dir)
-    val partA = emb.filter(TextOps.splitBucket(col("vec_id")) < 50)
+  private def ensureSeeded(s: SparkSession, dir: String, name: String,
+                           fam: PairFamily, table: String): Warehouse = {
+    val partA = graft.core.Tables.read(s, dir, table)
+      .filter(TextOps.splitBucket(col(fam.idCol)) < 50)
     val wh = Warehouse(s, new java.io.File(
-      IvfModel.warehouseFor(s, dir).dir, "t55_increment").toString)
-    val embStamp = graft.core.Tables.contentStamp(s, s"$dir/embeddings.parquet")
-    BandEmbIndex.ensureFor(wh, partA,
-      s"emb-band-partA50\n$dir\n$embStamp", tables, bits)
-    graft.queries.StampedTable.ensureSeeded(wh, "t55_seed",
-      s"t55-seed\n$dir\ntables=$tables\nbits=$bits\nradius=$radius\ncap=$maxBucket\n$embStamp") {
-      // slim sliced self-probe, NOT the direct t54 construction — the
-      // wide-shuffle seed was the measured round-17 ENOSPC (see
-      // BandEmbIndex.selfCosinePairsOf)
-      val pairsA = BandEmbIndex.selfCosinePairsOf(partA, tables, bits, radius, maxBucket)
-        .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
-      seed(wh, partA.select(col("vec_id").as("doc_id")), pairsA)
+      IvfModel.warehouseFor(s, dir).dir, s"${name}_increment").toString)
+    val corpusStamp = graft.core.Tables.contentStamp(s, s"$dir/$table.parquet")
+    fam.ensure(wh, partA, s"$name-partA50\n$dir\n$corpusStamp")
+    graft.queries.StampedTable.ensureSeeded(wh, s"${name}_seed",
+      s"$name-seed\n$dir\n${fam.dials}\n$corpusStamp") {
+      seedPairs(wh, fam, partA)
     }
     wh
   }
@@ -444,13 +281,12 @@ object ClusterState {
     *     Violations (mutated content re-ingested past the pruned
     *     anti-join) are silent data corruption at ingest time — here
     *     they cost one loud log line and a report field;
-    *  3. optionally RECONCILE: when `reconcileDocs` / `reconcileEmb` is
-    *     supplied, rebuild that signal's artifacts from the full corpus
-    *     ([[reconcile]] / [[reconcileEmbeddings]]) and measure the
-    *     drift the incremental state had accumulated (the
-    *     union-cap-crossing caveat made operational: run maintain with
-    *     a corpus on a cadence, alert past `driftAlertThreshold`, tune
-    *     the cadence by the measured drift);
+    *  3. optionally RECONCILE: for each (family, corpus) in
+    *     `reconcileWith`, rebuild that family's artifacts from the full
+    *     corpus ([[reconcile]]) and measure the drift the incremental
+    *     state had accumulated (the union-cap-crossing caveat made
+    *     operational: run maintain with a corpus on a cadence, alert past
+    *     `driftAlertThreshold`, tune the cadence by the measured drift);
     *  4. bounded-retention vacuum of every versioned table (per-batch
     *     state rewrites accumulate generations; the reader window is
     *     kept).
@@ -463,11 +299,7 @@ object ClusterState {
     * end to end); with one, the state is REPAIRED to the full rebuild.
     */
   def maintain(wh: Warehouse, retainLast: Int = 3,
-               reconcileDocs: Option[DataFrame] = None,
-               reconcileEmb: Option[DataFrame] = None,
-               embBits: Int = graft.queries.Lsh.Bits,
-               embRadius: Int = graft.queries.Lsh.PolicyRadius,
-               embMaxBucket: Int = TextOps.EmbBucketCap,
+               reconcileWith: Seq[(PairFamily, DataFrame)] = Nil,
                driftAlertThreshold: Long = 0): MaintainReport = {
     import graft.queries.{IvfModel, PqModel}
     if (!wh.read(BandIndex.TableName, BandIndex.Schema).isEmpty) BandIndex.compact(wh)
@@ -497,8 +329,7 @@ object ClusterState {
           "or switch this feed to checked appends")
       t -> d
     }).toMap
-    val drifts = reconcileDocs.map(reconcile(wh, _)).toSeq ++
-      reconcileEmb.map(reconcileEmbeddings(wh, _, embBits, embRadius, embMaxBucket)).toSeq
+    val drifts = reconcileWith.map { case (fam, corpus) => reconcile(wh, fam, corpus) }
     val drift = if (drifts.isEmpty) None else Some(drifts.sum)
     val alerted = drift.exists(_ > driftAlertThreshold)
     if (alerted)
@@ -509,14 +340,14 @@ object ClusterState {
     MaintainReport(dupes, drift, alerted)
   }
 
-  /** Seed both cluster-increment lifecycle queries' persisted state
+  /** Seed the three cluster-increment lifecycle queries' persisted state
     * (stamped — zero jobs on repeat); Bench warmup, next to the IVF list
-    * build. Dials mirror the registry's t40 wiring exactly.
+    * build. Dials mirror the registry's t40/t55 wiring exactly.
     */
   def warmSeeds(s: SparkSession, dir: String): Unit = {
-    t37EnsureSeeded(s, dir)
-    t40EnsureSeeded(s, dir, TextOps.DialBits,
-      TextOps.DialPairRadius, TextOps.DialEmbCap)
+    ensureSeeded(s, dir, "t37", BandIndex.Family, "documents")
+    ensureSeeded(s, dir, "t40", EmbIndex.Family(TextOps.DialBits,
+      TextOps.DialPairRadius, TextOps.DialEmbCap), "embeddings")
     t55EnsureSeeded(s, dir, TextOps.DialBandTables, TextOps.DialBandBits,
       TextOps.DialBandRadius, TextOps.DialEmbCap)
   }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 
 import graft.core.CompileFree
 import graft.etl.Warehouse
-import graft.queries.{BandEmbIndex, BandIndex, EmbIndex, TextOps}
+import graft.queries.{BandEmbIndex, BandIndex, Frames, TextOps}
 
 /** INCREMENTAL curation — the flagship composition (quality → exact dedup
   * → near-dup removal, [[Curation]]) applied per ingest batch WITHOUT
@@ -51,78 +51,27 @@ object IncrementalCuration {
     * (vec_id, embedding) frame of the corpus slice at hand — the settled
     * corpus in [[seed]], ONE batch in [[ingest]] — `vecToDoc` maps vector
     * ids onto document ids (identity when a document's vector shares its
-    * id, the common case), and the dials are t15's. The persisted twin
-    * artifact is the [[EmbIndex]] over ALL settled vectors (not only
-    * survivors — the full pipeline computes t15 over the whole vector
-    * table and gates afterwards, so the incremental probe must see the
-    * same bucket occupancies to cap identically); survivor gating happens
-    * on the mapped doc pairs, exactly where [[Curation.curateHandle]]
-    * gates `extraPairs`.
+    * id, the common case), and `family` holds the banded index's dials
+    * the signal codes, pairs, seeds, probes and appends through (banded
+    * since round 14 — SCALE.md round 13 measured the single-table
+    * Hamming ball EXPLODE-dominated and unable to hold the recall floor
+    * past the second decade at any bounded mask budget). The persisted
+    * twin artifact is the family's
+    * index over ALL settled vectors (not only survivors — the full
+    * pipeline computes its pairs over the whole vector table and gates
+    * afterwards, so the incremental probe must see the same bucket
+    * occupancies to cap identically); survivor gating happens on the
+    * mapped doc pairs, exactly where [[Curation.curateHandle]] gates
+    * `extraPairs`.
     */
   final case class EmbeddingSignal(embSrc: DataFrame,
                                    vecToDoc: Option[DataFrame] = None,
-                                   bits: Int = graft.queries.Lsh.Bits,
-                                   radius: Int = graft.queries.Lsh.PolicyRadius,
-                                   maxBucket: Int = TextOps.EmbBucketCap,
-                                   banded: Boolean = true,
-                                   tables: Int = 0) {
-    /** The [[graft.queries.Lsh.PolicyRadius]] sentinel resolved against
-      * this signal's family — what every probe below actually runs at.
-      * Banded (the default since round 14 — SCALE.md round 13 measured
-      * the single-table Hamming ball EXPLODE-dominated and unable to
-      * hold the recall floor past the second decade at any bounded mask
-      * budget) resolves the sentinel to the in-band radius 1 (t54's
-      * dial: 1 + bits masks per table, no Hamming-ball multiplier);
-      * single-table resolves through [[graft.queries.Lsh.radiusFor]].
-      */
-    val resolvedRadius: Int =
-      if (banded) { if (radius < 0) 1 else radius }
-      else graft.queries.Lsh.resolveRadius(bits, radius, TextOps.PairRadius)
-
-    /** OR-construction width: `tables ≤ 0` means the recall-floor
-      * policy [[graft.queries.Lsh.bandTablesFor]] at this signal's
-      * (bits, in-band radius) — L sized so per-pair recall on genuine
-      * duplicates clears the floor; L grows ~n^0.22/decade as the
-      * occupancy policy widens codes. Single-table signals ignore it.
-      */
-    val resolvedTables: Int =
-      if (!banded) 1
-      else if (tables > 0) tables
-      else graft.queries.Lsh.bandTablesFor(bits, resolvedRadius)
-
+                                   family: BandEmbIndex.Family = BandEmbIndex.Family()) {
     /** Whole-slice self pairs at this signal's dials — the seed's
       * extraPairs source, and what a full (settled ∪ batch) recluster
-      * would compute: t54's banded construction or t15's single-table
-      * Hamming ball, τ-verified either way.
+      * would compute.
       */
-    def selfPairs: DataFrame =
-      if (banded) BandEmbIndex.selfCosinePairsOf(embSrc, resolvedTables, bits,
-        resolvedRadius, maxBucket) // slim sliced self-probe (round-17 seed ENOSPC fix)
-      else TextOps.t15CosineNearDupOf(embSrc, bits, resolvedRadius, maxBucket = maxBucket)
-
-    /** Persist this signal's index family over the slice (seed path). */
-    private[pipelines] def seedIndex(wh: Warehouse): Unit =
-      if (banded) BandEmbIndex.seed(wh, embSrc, resolvedTables, bits)
-      else EmbIndex.seed(wh, embSrc, bits)
-
-    /** The slice's coded rows — shared by probe and append (the batch's
-      * dominant per-vector compute, materialized once by the caller).
-      */
-    private[pipelines] def codedBatch: DataFrame =
-      if (banded) BandEmbIndex.codedOf(embSrc, resolvedTables, bits)
-      else EmbIndex.codedOf(embSrc, bits)
-
-    /** Index-probed (settled, batch) ∪ (batch, batch) cosine pairs. */
-    private[pipelines] def incrementPairs(wh: Warehouse, coded: DataFrame): DataFrame =
-      if (banded) BandEmbIndex.incrementCosinePairsOf(
-        BandEmbIndex.coded(wh), coded, bits, resolvedRadius, maxBucket)
-      else EmbIndex.incrementCosinePairsOf(
-        EmbIndex.coded(wh), coded, bits, resolvedRadius, maxBucket)
-
-    /** Grow the persisted index by the already-coded batch. */
-    private[pipelines] def appendCoded(wh: Warehouse, coded: DataFrame): Unit =
-      if (banded) BandEmbIndex.appendBatchCoded(wh, coded)
-      else EmbIndex.appendBatchCoded(wh, coded)
+    def selfPairs: DataFrame = family.selfPairs(embSrc)
 
     /** Vector pairs → doc pairs. `vecToDoc = None` means a document's
       * vector SHARES its id — a plain rename, no join. An explicit
@@ -135,32 +84,6 @@ object IncrementalCuration {
     private[pipelines] def docPairsOf(vPairs: DataFrame): DataFrame =
       vecToDoc.map(m => Curation.embeddingDocPairs(vPairs, m))
         .getOrElse(vPairs.select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
-  }
-
-  private def cut(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
-
-  /** Explicitly release the storage a [[cut]] pinned — the persisted
-    * blocks behind the checkpointed frame's `LogicalRDD`. Within one
-    * long-lived session (the bench JVM runs the lifecycle queries ~164
-    * times across two passes) leaving reclamation to ContextCleaner GC
-    * pressure accumulates executor storage; this is the explicit-release
-    * posture [[Curation.CurationHandle.close]] already has, applied to
-    * the incremental path's cuts. ONLY for frames nothing evaluates
-    * again: a released localCheckpoint cannot be recomputed (its lineage
-    * is truncated by design).
-    *
-    * Walks the WHOLE analyzed tree, not just the root: passing a cut's
-    * PRE-cut source frame releases the inner cuts embedded in its plan
-    * too (the band/emb index probes each pin their batch-side and probed
-    * slices — `LogicalRDD` leaves of the pair frame's tree that nothing
-    * outside the probe holds a reference to).
-    */
-  private def releaseCut(dfs: DataFrame*): Unit = dfs.foreach { df =>
-    df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(false))
   }
 
   /** Full build: run the batch pipeline over the whole settled corpus
@@ -186,7 +109,7 @@ object IncrementalCuration {
                         emb: Option[EmbeddingSignal] = None,
                         clustered: Boolean = false): Unit = {
     val (_, _, taggedCut) = seedImpl(wh, docs, t, emb, clustered)
-    releaseCut(taggedCut)
+    Frames.release(taggedCut)
   }
 
   private def seedImpl(wh: Warehouse, docs: DataFrame,
@@ -204,7 +127,7 @@ object IncrementalCuration {
     // cosine self-join re-runs per materialization (~4× the pair cost;
     // observed doubling the registered t42's bench time)
     val extras = emb.map { e =>
-      cut(e.docPairsOf(e.selfPairs.select(col("vec_a"), col("vec_b"))))
+      Frames.cut(e.docPairsOf(e.selfPairs.select(col("vec_a"), col("vec_b"))))
     }
     val run = Curation.curateHandle(docs, t, useClusters = clustered, extraPairs = extras)
     var taggedSrcRef: Option[DataFrame] = None
@@ -218,12 +141,12 @@ object IncrementalCuration {
       // so they are dropped before the cut.
       val taggedSrc = run.tagged.drop("sh")
       taggedSrcRef = Some(taggedSrc)
-      val taggedCut = cut(taggedSrc)
+      val taggedCut = Frames.cut(taggedSrc)
       val surv = taggedCut.filter(col("stage").isin("near_dup", "kept"))
       wh.rewrite(HashTable,
         surv.select(col("content_hash"), col("doc_id").as("keep_id")))
       BandIndex.seed(wh, surv.select(col("doc_id"), col("text")))
-      emb.foreach(_.seedIndex(wh))
+      emb.foreach(e => e.family.seed(wh, e.embSrc))
       // clustered mode persists a FOURTH artifact: the cluster assignment
       // over the settled survivors — the EXACT frame curateHandle's own
       // near-dup stage derived its drop decision from (exposed on the
@@ -244,8 +167,8 @@ object IncrementalCuration {
       // sweep the tag pipeline's SOURCE tree (clustered mode's
       // propagation cut and the contraction's internals live there; the
       // returned outputs are backed by taggedCut's own RDD, untouched)
-      extras.foreach(releaseCut(_))
-      taggedSrcRef.foreach(releaseCut(_))
+      extras.foreach(Frames.release(_))
+      taggedSrcRef.foreach(Frames.release(_))
     }
   }
 
@@ -296,8 +219,8 @@ object IncrementalCuration {
                 clustered: Boolean = false): Long = {
     // pre-rebuild state, materialized EAGERLY: the rebuild commits new
     // generations and a lazy frame would race the retention window
-    val beforeHash = cut(wh.read(HashTable, HashSchema))
-    val beforeCl = if (clustered) Some(cut(ClusterState.read(wh))) else None
+    val beforeHash = Frames.cut(wh.read(HashTable, HashSchema))
+    val beforeCl = if (clustered) Some(Frames.cut(ClusterState.read(wh))) else None
     seedState(wh, docs, t, emb, clustered)
     val hashDrift = beforeHash
       .select(col("content_hash"), col("keep_id").as("k0"))
@@ -311,7 +234,7 @@ object IncrementalCuration {
           Seq("doc_id"), "full_outer")
         .filter(!(col("c0") <=> col("c1"))).count()
     }.getOrElse(0L)
-    releaseCut((beforeHash +: beforeCl.toSeq): _*)
+    Frames.release((beforeHash +: beforeCl.toSeq): _*)
     // the split names the drifting artifact for the operator: hash drift
     // means the exact stage itself diverged (should never happen under
     // append-only ids); cluster drift is the documented union-cap /
@@ -379,12 +302,12 @@ object IncrementalCuration {
                          wantCurated: Boolean): (Option[DataFrame], DataFrame) = {
     val settled = wh.read(HashTable, HashSchema)
     // intermediate cuts (everything but the two returned outputs) are
-    // tracked and released before returning — see [[releaseCut]]. The
+    // tracked and released before returning — see [[Frames.release]]. The
     // PRE-cut source is tracked alongside the cut: its tree embeds any
     // inner cuts (the index probes' pinned slices), which the final
     // release sweep then reaches too.
     val tracked = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def cutT(df: DataFrame): DataFrame = { val c = cut(df); tracked += df; tracked += c; c }
+    def cutT(df: DataFrame): DataFrame = { val c = Frames.cut(df); tracked += df; tracked += c; c }
 
     // ---- embedding branch: code → persisted-index probe → doc-pair
     // normalization, dispatchable BESIDE the text stages ----
@@ -402,16 +325,16 @@ object IncrementalCuration {
     def runEmbBranch(e: EmbeddingSignal): (DataFrame, DataFrame, Seq[DataFrame]) = {
       // the batch coding is shared by probe and append (the batch's
       // dominant per-vector compute, materialized once)
-      val preCoded = e.codedBatch
-      val coded = cut(preCoded)
+      val preCoded = e.family.codedOf(e.embSrc)
+      val coded = Frames.cut(preCoded)
       // the index probe runs its eager work (pruned-index cut, slice-plan
       // stats, per-slice materializations) INSIDE this call
-      val vPairs = e.incrementPairs(wh, coded)
+      val vPairs = e.family.incrementPairs(wh, coded)
       val preNorm = e.docPairsOf(vPairs.select(col("vec_a"), col("vec_b")))
         .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
           greatest(col("doc_a"), col("doc_b")).as("doc_b"))
         .filter(col("doc_a") =!= col("doc_b"))
-      val norm = cut(preNorm)
+      val norm = Frames.cut(preNorm)
       // (coded, norm, early-releasable): everything but `norm` is done
       // the moment the appends have run — vPairs/preNorm's trees hold
       // the probe's corpus-scale internals (pruned-index + slice cuts),
@@ -545,7 +468,7 @@ object IncrementalCuration {
           .select(col("content_hash"), col("doc_id").as("keep_id")))(
         wh.appendLive(HashTable, _)),
       () => BandIndex.appendBatchBanded(wh, bandedSurv),
-      () => emb.zip(codedBatch).foreach { case (e, c) => e.appendCoded(wh, c) })
+      () => emb.zip(codedBatch).foreach { case (e, c) => e.family.append(wh, c) })
     wh.withWriterScope("ingest-appends") {
       import scala.concurrent.{Await, ExecutionContext, Future}
       val pool = java.util.concurrent.Executors.newFixedThreadPool(appendTasks.size)
@@ -570,7 +493,7 @@ object IncrementalCuration {
     // stage below. Sweep-end release left all of this pinned THROUGH
     // the cluster stage; at the 3M-vector off-fit batch that is where
     // the scratch went.
-    embRes.foreach { case (_, _, early) => releaseCut(early: _*) }
+    embRes.foreach { case (_, _, early) => Frames.release(early: _*) }
 
     val embPairsGated = embRes.map { case (_, normPairs, _) =>
       // probe-shaped like the exact stage above: the survivor universe
@@ -639,8 +562,8 @@ object IncrementalCuration {
     // contracted increment's internals — have no consumer left. Only
     // `staged` (the tag/append source) and `toDrop` survive to the
     // output stage.
-    embRes.foreach { case (_, norm, _) => releaseCut(norm) }
-    releaseCut(pairs, bandedSurv)
+    embRes.foreach { case (_, norm, _) => Frames.release(norm) }
+    Frames.release(pairs, bandedSurv)
 
     val tagged = staged2
       .join(toDrop, Seq("doc_id"), "left")
@@ -661,8 +584,8 @@ object IncrementalCuration {
       count(when(col("stage") === "kept", 1)).as("curated_docs"))
     // audit-only callers skip the curated materialization entirely — one
     // fewer batch-sized job + pin per lifecycle invocation
-    val curatedOut = if (wantCurated) Some(cut(curated)) else None
-    val auditOut = cut(audit)
+    val curatedOut = if (wantCurated) Some(Frames.cut(curated)) else None
+    val auditOut = Frames.cut(audit)
 
     // outputs are materialized and the appends have run — every consumer
     // of the intermediate cuts is done; the final sweep releases whatever
@@ -670,7 +593,7 @@ object IncrementalCuration {
     // idempotent), so a long-lived session (the bench JVM, a per-batch
     // driver loop) holds only the two outputs it was handed (spec-pinned:
     // no lingering blocks past these)
-    releaseCut(tracked.toSeq: _*)
+    Frames.release(tracked.toSeq: _*)
     (curatedOut, auditOut)
   }
 
@@ -785,18 +708,13 @@ object IncrementalCuration {
 
   /** The dialed embedding signal both multi-signal lifecycle queries run
     * with — the BANDED family at t54's env-driven dials (round 14: the
-    * lifecycle rides the scale-safe OR-amplification pair source; the
-    * single-table family stays reachable via `banded = false`), so the
-    * oracle's CTEs (which inline the same dial values) and the Spark
+    * lifecycle rides the scale-safe OR-amplification pair source), so
+    * the oracle's CTEs (which inline the same dial values) and the Spark
     * side cannot diverge.
     */
   private def dialSig(embSlice: DataFrame): Option[EmbeddingSignal] =
-    Some(EmbeddingSignal(embSlice,
-      bits = TextOps.DialBandBits,
-      radius = TextOps.DialBandRadius,
-      maxBucket = TextOps.DialEmbCap,
-      banded = true,
-      tables = TextOps.DialBandTables))
+    Some(EmbeddingSignal(embSlice, family = BandEmbIndex.Family(TextOps.DialBandTables,
+      TextOps.DialBandBits, TextOps.DialBandRadius, TextOps.DialEmbCap)))
 
   // pb rides the stamp because seedState bakes the index's partition
   // layout into the seeded warehouse: a table seeded under a different

@@ -908,7 +908,7 @@ object IvfModel {
     * their mixed stamps verbatim, one file per `cluster=` directory,
     * pointer-flip commit. Pairs with [[appendLists]] in the append-only
     * lifecycle the same way [[graft.queries.BandIndex.compact]] pairs
-    * with its appendBatch.
+    * with its appendBatchBanded.
     */
   def compactLists(s: SparkSession, dir: String): Unit =
     warehouseFor(s, dir).compact(ListsTable, ListsSchema, partitionBy = Seq("cluster"))
@@ -1179,8 +1179,6 @@ object IvfModel {
         attrs.map(a => StructField(a.name, a.dtype)) ++
         Seq(StructField("corpus_stamp", StringType), StructField("cluster", IntegerType)))
   }
-
-  val CompAttrListsSchema: org.apache.spark.sql.types.StructType = compAttrListsSchema()
 
   /** Per-ATTRIBUTE dispatch stats for the composite crossover, persisted
     * at build time like [[AttrStatsTable]] but keyed (attr, key):

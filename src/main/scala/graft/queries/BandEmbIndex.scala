@@ -129,7 +129,8 @@ object BandEmbIndex extends PersistedIndex {
     */
   def coded(wh: Warehouse): DataFrame = rows(wh)
 
-  /** Grow the index by an ingest batch. IDEMPOTENT under replay at
+  /** Grow the index by an ALREADY-coded ingest batch ([[codedOf]]; probe
+    * + append share one materialized coding). IDEMPOTENT under replay at
     * (vec_id, tbl) granularity — a vector's L rows land in DIFFERENT
     * partition files, so a crash mid-append can commit some tables and
     * not others; an anti-join on vec_id alone would then see the vector
@@ -138,13 +139,8 @@ object BandEmbIndex extends PersistedIndex {
     * (vec_id, tbl) is exactly one row in exactly one file — the repair
     * granularity matches the commit granularity, the
     * [[BandIndex.appendBatchBanded]] (doc_id, band) posture exactly.
-    */
-  def appendBatch(wh: Warehouse, batchEmb: DataFrame, tables: Int, bits: Int): Unit =
-    appendBatchCoded(wh, codedOf(batchEmb, tables, bits))
-
-  /** [[appendBatch]] over an ALREADY-coded batch frame (probe + append
-    * share one materialized coding). The idempotency anti-join is
-    * PARTITION-PRUNED to the batch's own pbuckets — an existing
+    *
+    * The idempotency anti-join is PARTITION-PRUNED to the batch's own pbuckets — an existing
     * (vec_id, tbl) row necessarily sits where the deterministic
     * re-coding derives. Same IMMUTABLE-per-vec_id precondition as
     * [[EmbIndex.appendBatchCoded]] (mutated re-ingests escape the
@@ -154,6 +150,36 @@ object BandEmbIndex extends PersistedIndex {
                        maxInline: Int = BucketPrune.MaxInline,
                        checked: Boolean = false): Unit =
     appendRows(wh, batchCoded, maxInline, checked)
+
+  /** This index as a [[PairFamily]] over (vec_id, embedding) slices at
+    * t54's dials; pairs are (vec_a, vec_b, cosine). The sentinels resolve
+    * here: `radius < 0` is the in-band radius 1 (1 + bits masks per
+    * table, no Hamming-ball multiplier), `tables ≤ 0` the recall-floor
+    * policy [[Lsh.bandTablesFor]] at (bits, that radius) — L grows
+    * ~n^0.22/decade as the occupancy policy widens codes.
+    */
+  final case class Family(tables: Int = 0, bits: Int = Lsh.Bits,
+                          radius: Int = Lsh.PolicyRadius,
+                          maxBucket: Int = TextOps.EmbBucketCap) extends PairFamily {
+    val resolvedRadius: Int = if (radius < 0) 1 else radius
+    val resolvedTables: Int =
+      if (tables > 0) tables else Lsh.bandTablesFor(bits, resolvedRadius)
+    def key: String = "vec"
+    def dials: String =
+      s"tables=$resolvedTables\nbits=$bits\nradius=$resolvedRadius\ncap=$maxBucket"
+    def codedOf(emb: DataFrame): DataFrame = BandEmbIndex.codedOf(emb, resolvedTables, bits)
+    // slim sliced self-probe, NOT the direct t54 construction — the
+    // wide-shuffle seed was the measured round-17 ENOSPC
+    def selfPairs(emb: DataFrame): DataFrame =
+      selfCosinePairsOf(emb, resolvedTables, bits, resolvedRadius, maxBucket)
+    def seed(wh: Warehouse, emb: DataFrame): Unit =
+      BandEmbIndex.seed(wh, emb, resolvedTables, bits)
+    def ensure(wh: Warehouse, emb: => DataFrame, stamp: String): Unit =
+      ensureFor(wh, emb, stamp, resolvedTables, bits)
+    def incrementPairs(wh: Warehouse, coded: DataFrame): DataFrame =
+      incrementCosinePairsOf(BandEmbIndex.coded(wh), coded, bits, resolvedRadius, maxBucket)
+    def append(wh: Warehouse, coded: DataFrame): Unit = appendBatchCoded(wh, coded)
+  }
 
   /** The index restricted to a probe frame's (tbl, bucket) set — static
     * partition filter on the derived pbuckets, row-group data filter on
@@ -168,19 +194,6 @@ object BandEmbIndex extends PersistedIndex {
       BucketPrune.restrict(index, "pbucket", b, maxInline),
       "bucket", b, maxInline)
   }
-
-  /** Banded cosine near-dup pairs of an ingest batch against the
-    * persisted index — every pair (vec_a < vec_b, cosine ≥ τ) with AT
-    * LEAST ONE endpoint in the batch, identical to
-    * [[TextOps.t54NearDupBandedOf]] over (index ∪ batch) restricted to
-    * the batch's neighborhood (spec-pinned, cap applied on the UNION's
-    * per-(tbl, bucket) counts with t54's drop-the-members semantics).
-    */
-  def incrementCosinePairs(wh: Warehouse, batchEmb: DataFrame,
-                           tables: Int, bits: Int, radius: Int = 1,
-                           maxBucket: Int = TextOps.EmbBucketCap): DataFrame =
-    incrementCosinePairsOf(coded(wh), codedOf(batchEmb, tables, bits),
-      bits, radius, maxBucket)
 
   /** Whole-frame banded self pairs THROUGH the slim sliced probe — the
     * seed-side twin of [[incrementCosinePairsOf]]: against an EMPTY
@@ -342,6 +355,13 @@ object BandEmbIndex extends PersistedIndex {
     Seq(LongType, IntegerType, LongType)
   }
 
+  /** Banded cosine near-dup pairs of a coded ingest batch against the
+    * index — every pair (vec_a < vec_b, cosine ≥ τ) with AT LEAST ONE
+    * endpoint in the batch, identical to [[TextOps.t54NearDupBandedOf]]
+    * over (index ∪ batch) restricted to the batch's neighborhood
+    * (spec-pinned, cap applied on the UNION's per-(tbl, bucket) counts
+    * with t54's drop-the-members semantics). [[Family]]'s probe.
+    */
   private[graft] def incrementCosinePairsOf(index: DataFrame, batchCoded: DataFrame,
                                             bits: Int, radius: Int,
                                             maxBucket: Int,
@@ -621,7 +641,7 @@ object BandEmbIndex extends PersistedIndex {
         // (guide §5: unpersist when done; round-17 VERDICT next #2/#3).
         // Top-level only — the batch cut (`bc`) is the CALLER's (probe +
         // append share it) and must stay pinned.
-        probedCut.foreach(Frames.release)
+        probedCut.foreach(Frames.release(_))
         sliceFrames
           .reduce(_ unionByName _)
           // cross-slice collapse: a pair seen from both endpoints' slices

@@ -126,17 +126,12 @@ object BandIndex extends PersistedIndex {
     * the index; the append itself is batch-sized. Not atomic like a
     * rewrite — the anti-join IS the repair path (spec-pinned against a
     * simulated torn append).
-    */
-  def appendBatch(wh: Warehouse, batchDocs: DataFrame): Unit =
-    appendBatchBanded(wh, bandedOf(batchDocs))
-
-  /** [[appendBatch]] over an ALREADY-banded batch frame — the shape
-    * [[graft.pipelines.IncrementalCuration.ingest]] uses so the batch is
-    * shingled + minhashed ONCE per ingest (probe and append share the
-    * materialized banding) instead of once per consumer. An
-    * unmaterialized frame is lineage-cut here ([[Frames.cutIfPlain]]),
-    * so legacy [[appendBatch]] callers band once, not once per
-    * reference (threshold probe + anti-join + write).
+    *
+    * The batch arrives ALREADY banded ([[bandedOf]]) — the ingest paths
+    * band it ONCE and share the materialized banding between probe and
+    * append instead of re-shingling per consumer. An unmaterialized
+    * frame is lineage-cut here ([[Frames.cutIfPlain]]), so it is banded
+    * once, not once per reference (threshold probe + anti-join + write).
     *
     * The idempotency anti-join is PARTITION-PRUNED: an existing
     * (doc_id, band) row for this batch necessarily lives in the same
@@ -167,24 +162,23 @@ object BandIndex extends PersistedIndex {
                         checked: Boolean = false): Unit =
     appendRows(wh, batchBanded, maxInline, checked)
 
-  /** Candidate pairs of an ingest batch against the persisted index —
-    * every pair (doc_a < doc_b, est_jaccard ≥ 0.5) with AT LEAST ONE
-    * endpoint in the batch, identical to a full-corpus
-    * [[TextOps.minhashPairsOf]] over (index ∪ batch) restricted to the
-    * batch's neighborhood (spec-pinned, including the bucket cap, which
-    * is applied on the UNION's per-bucket counts). Feed the result to
-    * [[graft.pipelines.ClusterState.advance]].
-    *
-    * Work shape: the batch is banded (batch-sized compute); the index
-    * scan is pruned to the batch's bk_buckets (static partition filter)
-    * and semi-joined to its band keys; the pair join's per-key groups are
-    * bounded by the same cap as the full pipeline. Nothing here is
-    * O(corpus) except the pruned index read, which approaches O(batch ×
-    * avg bucket) as BkBuckets grows.
+  /** This index as a [[PairFamily]] over (doc_id, text) slices at
+    * [[TextOps.MaxBucket]]; pairs are (doc_a, doc_b, est_jaccard).
     */
-  def incrementCandidatePairs(wh: Warehouse, batchDocs: DataFrame,
-                              maxBucket: Int = TextOps.MaxBucket): DataFrame =
-    incrementPairsOf(banded(wh), bandedOf(batchDocs), maxBucket)
+  object Family extends PairFamily {
+    def key: String = "doc"
+    def dials: String = s"bk=$BkBuckets"
+    def codedOf(docs: DataFrame): DataFrame = bandedOf(docs)
+    def selfPairs(docs: DataFrame): DataFrame = TextOps.minhashPairsOf(docs)
+    def seed(wh: Warehouse, docs: DataFrame): Unit = BandIndex.seed(wh, docs)
+    // bk_bucket values are baked into the stored rows: the fan-out rides
+    // the stamp (see [[ensure]])
+    def ensure(wh: Warehouse, docs: => DataFrame, stamp: String): Unit =
+      ensureFor(wh, docs, s"$stamp\nbk=$BkBuckets")
+    def incrementPairs(wh: Warehouse, coded: DataFrame): DataFrame =
+      incrementPairsOf(banded(wh), coded, TextOps.MaxBucket)
+    def append(wh: Warehouse, coded: DataFrame): Unit = appendBatchBanded(wh, coded)
+  }
 
   /** The index rows a batch's probe actually touches: scan pruned to the
     * batch's bk_buckets, semi-joined to its band keys. Split out so the
@@ -202,8 +196,20 @@ object BandIndex extends PersistedIndex {
       .join(batchBanded.select(col("band"), col("band_key")).distinct(),
         Seq("band", "band_key"), "left_semi")
 
-  /** The probe over explicit frames — the spec hook (cap behavior on
-    * synthetic skew, equivalence against the full pipeline).
+  /** Candidate pairs of a banded ingest batch against the index —
+    * every pair (doc_a < doc_b, est_jaccard ≥ 0.5) with AT LEAST ONE
+    * endpoint in the batch, identical to a full-corpus
+    * [[TextOps.minhashPairsOf]] over (index ∪ batch) restricted to the
+    * batch's neighborhood (spec-pinned, including the bucket cap, which
+    * is applied on the UNION's per-bucket counts). [[Family]]'s probe;
+    * explicit frames are the spec hook (cap behavior on synthetic skew).
+    *
+    * Work shape: the batch is banded (batch-sized compute); the index
+    * scan is pruned to the batch's bk_buckets (static partition filter)
+    * and semi-joined to its band keys; the pair join's per-key groups are
+    * bounded by the same cap as the full pipeline. Nothing here is
+    * O(corpus) except the pruned index read, which approaches O(batch ×
+    * avg bucket) as BkBuckets grows.
     */
   private[graft] def incrementPairsOf(index: DataFrame, batchBanded: DataFrame,
                                       maxBucket: Int,
@@ -230,7 +236,7 @@ object BandIndex extends PersistedIndex {
     // |batch keys| × union bucket occupancy — probe-sized, not
     // corpus-sized. The anti-join on doc_id makes the probe REPLAY-EXACT:
     // a batch whose bands already landed in the index (crash after
-    // [[appendBatch]], orchestrator redelivers) would otherwise appear on
+    // [[appendBatchBanded]], orchestrator redelivers) would otherwise appear on
     // BOTH union sides — its rows double-counted into the cap occupancy,
     // flipping a boundary bucket to oversized only on the replay and
     // yielding different pairs than the first run. Excluding the batch's

@@ -113,17 +113,13 @@ object EmbIndex extends PersistedIndex {
     */
   def coded(wh: Warehouse): DataFrame = rows(wh)
 
-  /** Grow the index by an ingest batch — idempotent at vec_id
-    * granularity (one row per vector = one row per file slot, so unlike
-    * the band index there is no sub-row torn-append shape to repair).
-    */
-  def appendBatch(wh: Warehouse, batchEmb: DataFrame, bits: Int = Lsh.Bits): Unit =
-    appendBatchCoded(wh, codedOf(batchEmb, bits))
-
-  /** [[appendBatch]] over an ALREADY-coded batch frame (the ingest path
-    * shares one materialized coding across probe + append; an
-    * unmaterialized frame is lineage-cut here, so legacy [[appendBatch]]
-    * callers code once, not once per reference). The idempotency
+  /** Grow the index by an ALREADY-coded ingest batch ([[codedOf]]) —
+    * idempotent at vec_id granularity (one row per vector = one row per
+    * file slot, so unlike the band index there is no sub-row
+    * torn-append shape to repair). The ingest path shares one
+    * materialized coding across probe + append; an unmaterialized frame
+    * is lineage-cut here, so it is coded once, not once per reference.
+    * The idempotency
     * anti-join is PARTITION-PRUNED to the batch's own sign codes: an
     * existing row for a batch vector necessarily sits in the bucket the
     * deterministic re-coding derives, so the check reads O(batch
@@ -145,6 +141,29 @@ object EmbIndex extends PersistedIndex {
                        checked: Boolean = false): Unit =
     appendRows(wh, batchCoded, maxInline, checked)
 
+  /** This index as a [[PairFamily]] over (vec_id, embedding) slices at
+    * t15's dials; pairs are (vec_a, vec_b, cosine).
+    */
+  final case class Family(bits: Int = Lsh.Bits, radius: Int = Lsh.PolicyRadius,
+                          maxBucket: Int = TextOps.EmbBucketCap) extends PairFamily {
+    /** `radius` with the [[Lsh.PolicyRadius]] sentinel resolved — what
+      * the seed and the probe run at, and what the stamp records, so
+      * sentinel and explicit-equal families share one seeded generation.
+      */
+    val resolvedRadius: Int = Lsh.resolveRadius(bits, radius, TextOps.PairRadius)
+    def key: String = "vec"
+    def dials: String = s"bits=$bits\nradius=$resolvedRadius\ncap=$maxBucket"
+    def codedOf(emb: DataFrame): DataFrame = EmbIndex.codedOf(emb, bits)
+    def selfPairs(emb: DataFrame): DataFrame =
+      TextOps.t15CosineNearDupOf(emb, bits, resolvedRadius, maxBucket = maxBucket)
+    def seed(wh: Warehouse, emb: DataFrame): Unit = EmbIndex.seed(wh, emb, bits)
+    def ensure(wh: Warehouse, emb: => DataFrame, stamp: String): Unit =
+      ensureFor(wh, emb, s"$stamp\nbits=$bits", bits)
+    def incrementPairs(wh: Warehouse, coded: DataFrame): DataFrame =
+      incrementCosinePairsOf(EmbIndex.coded(wh), coded, bits, resolvedRadius, maxBucket)
+    def append(wh: Warehouse, coded: DataFrame): Unit = appendBatchCoded(wh, coded)
+  }
+
   /** The index restricted to a probe frame's bucket set — BOTH levels:
     * the derived pbucket set lands as the PARTITION filter (static IN
     * ≤ [[BucketPrune.MaxInline]] values, broadcast-semi DPP above) and
@@ -160,24 +179,6 @@ object EmbIndex extends PersistedIndex {
       "bucket", b, maxInline)
   }
 
-  /** Cosine near-dup pairs of an ingest batch against the persisted
-    * index — every pair (vec_a < vec_b, cosine ≥ τ) with AT LEAST ONE
-    * endpoint in the batch, identical to [[TextOps.t15CosineNearDupOf]]
-    * over (index ∪ batch) restricted to the batch's neighborhood
-    * (spec-pinned, cap applied on the UNION's per-bucket counts with
-    * t15's keep-the-members semantics).
-    *
-    * Work shape: the batch is coded (batch-sized compute); the probed
-    * bucket set — batch codes × Hamming masks, ≤ 2^bits values — lands
-    * as a static partition filter on the index scan; per-bucket
-    * candidate work is bounded by the cap exactly as in t15.
-    */
-  def incrementCosinePairs(wh: Warehouse, batchEmb: DataFrame,
-                           bits: Int = Lsh.Bits, radius: Int = Lsh.PolicyRadius,
-                           maxBucket: Int = TextOps.EmbBucketCap): DataFrame =
-    incrementCosinePairsOf(coded(wh), codedOf(batchEmb, bits), bits,
-      Lsh.resolveRadius(bits, radius, TextOps.PairRadius), maxBucket)
-
   /** The probed slice — split out (like [[BandIndex.probedSlice]]) so
     * the partition-pruning claim is asserted against the plan that
     * actually reads the table.
@@ -187,6 +188,18 @@ object EmbIndex extends PersistedIndex {
         probeBuckets.map(b => (b % PBuckets).toInt).distinct.toSeq: _*) &&
       col("bucket").isin(probeBuckets.toSeq: _*))
 
+  /** Cosine near-dup pairs of a coded ingest batch against the index —
+    * every pair (vec_a < vec_b, cosine ≥ τ) with AT LEAST ONE endpoint in
+    * the batch, identical to [[TextOps.t15CosineNearDupOf]] over
+    * (index ∪ batch) restricted to the batch's neighborhood (spec-pinned,
+    * cap applied on the UNION's per-bucket counts with t15's
+    * keep-the-members semantics). [[Family]]'s probe.
+    *
+    * Work shape: the batch is coded (batch-sized compute); the probed
+    * bucket set — batch codes × Hamming masks, ≤ 2^bits values — lands
+    * as a static partition filter on the index scan; per-bucket
+    * candidate work is bounded by the cap exactly as in t15.
+    */
   private[graft] def incrementCosinePairsOf(index: DataFrame, batchCoded: DataFrame,
                                             bits: Int, radius: Int,
                                             maxBucket: Int,

@@ -41,14 +41,27 @@ object Frames {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
     else df.localCheckpoint(eager = false)
 
-  /** Unpersist a [[cut]]/[[lazyCut]] frame's blocks (no-op for reliable
-    * checkpoints and plain frames) — release at the owner's boundary
-    * instead of leaking until context GC.
+  /** Unpersist the blocks of every [[cut]]/[[lazyCut]] in each frame's
+    * analyzed tree (no-op for reliable checkpoints and cut-free frames) —
+    * release at the owner's boundary instead of leaking until context GC.
+    * Passing a frame built ON cuts (a probe's pair frame) releases the
+    * cuts inside it too. ONLY for frames nothing evaluates again: a
+    * released localCheckpoint cannot be recomputed (its lineage is
+    * truncated by design).
     */
-  def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
-    case lr: LogicalRDD => lr.rdd.unpersist(false)
-    case _              => ()
+  def release(dfs: DataFrame*): Unit = dfs.foreach(cutsOf(_).foreach(_.unpersist(false)))
+
+  /** [[release]] of the cuts in `df`'s tree that `input`'s tree does not
+    * hold — what one step pinned on top of its caller's frame, leaving
+    * the caller's own cuts pinned.
+    */
+  def releaseBeyond(df: DataFrame, input: DataFrame): Unit = {
+    val callers = cutsOf(input).toSet
+    cutsOf(df).filterNot(callers).foreach(_.unpersist(false))
   }
+
+  private def cutsOf(df: DataFrame) =
+    df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd }
 
   /** Run `write` over the MATERIALIZED `fresh` frame only when it has
     * rows — the replay-append fast path shared by every idempotent index

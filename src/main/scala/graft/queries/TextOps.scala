@@ -2392,9 +2392,14 @@ object TextOps {
         s"for the propagation loop (~${ccPairsPerTask} pairs/task at $nPairs edges)")
       sess.conf.set("spark.sql.shuffle.partitions", ccParts.toString)
     }
+    // the loop's last round is a materialized cut, so the pair cut has no
+    // consumer past it either
     try propagateLoop(participating, edges)
-    finally if (ccParts > prevParts)
-      sess.conf.set("spark.sql.shuffle.partitions", prevParts.toString)
+    finally {
+      if (ccParts > prevParts)
+        sess.conf.set("spark.sql.shuffle.partitions", prevParts.toString)
+      Frames.release(pairs)
+    }
   }
 
   /** Pairs per task for the distributed CC loop's shuffles — measured,
@@ -2599,6 +2604,8 @@ object TextOps {
       .select(coalesce(col("rep_a"), col("doc_a")).as("doc_a"),
         coalesce(col("rep_b"), col("doc_b")).as("doc_b"))
       .filter(col("doc_a") =!= col("doc_b")), eager = true)
+    // every consumer of the pair cut is inside the materialized repped
+    Frames.release(inc)
     val touched = repped.select(col("doc_a").as("doc_id"))
       .unionByName(repped.select(col("doc_b").as("doc_id")))
       .unionByName(newNodes.select(col("doc_id")))
@@ -2722,8 +2729,11 @@ object TextOps {
     // map-side claim physically true instead of leaving the planner to
     // sort-merge two sides whose stats it cannot see through the
     // propagation loop's checkpoints.
-    val mergedMap = propagateLabels(touched, repped)
+    // the propagated map is materialized (driver-built, or the loop's last
+    // cut), so the contracted pairs have no consumer past it
+    val mergedMap = try propagateLabels(touched, repped)
       .select(col("doc_id").as("rep"), col("cluster").as("merged"))
+    finally Frames.release(repped)
     // no-op detection on the increment's own materialized frames: the
     // fresh-node cut is eager and the propagated map is a checkpoint (or
     // driver-built, on the local union-find path), so both probes are
@@ -2733,10 +2743,9 @@ object TextOps {
     if (freshNodes.isEmpty &&
         mergedMap.filter(col("rep") =!= col("merged")).isEmpty) {
       // the no-op branch returns no tree for the caller's release walk —
-      // drop the two cuts we hold (the rest are unreachable and the
-      // context cleaner reclaims them, same as the loop's per-round cuts)
-      Frames.release(freshNodes)
-      Frames.release(mergedMap)
+      // drop the two cuts we still hold (the distributed loop's per-round
+      // cuts are unreachable and left to the context cleaner)
+      Frames.release(freshNodes, mergedMap)
       return None
     }
     val merged = broadcast(mergedMap)

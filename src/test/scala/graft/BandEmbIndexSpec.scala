@@ -32,6 +32,7 @@ class BandEmbIndexSpec extends SparkTestBase {
   private val partA = embAll.filter(TextOps.splitBucket(col("vec_id")) < 50)
   private val partB = embAll.filter(TextOps.splitBucket(col("vec_id")) >= 50)
   private val (tT, tB, tR) = (3, 8, 1)
+  private val banded = BandEmbIndex.Family(tT, tB, tR)
 
   test("selfCosinePairsOf == the direct t54 construction (every seed path rides the slim probe)") {
     // the round-17 seed-path rewrite: the direct t54 shape shuffles the
@@ -56,7 +57,7 @@ class BandEmbIndexSpec extends SparkTestBase {
   test("index-probed banded pairs == full t54 pairs restricted to the batch's neighborhood") {
     val wh = tmpWh()
     BandEmbIndex.seed(wh, partA, tT, tB)
-    val inc = pairSet(BandEmbIndex.incrementCosinePairs(wh, partB, tT, tB, tR))
+    val inc = pairSet(banded.incrementPairs(wh, banded.codedOf(partB)))
     val bIds = partB.select("vec_id").collect().map(_.getLong(0)).toSet
     val full = pairSet(TextOps.t54NearDupBandedOf(embAll, tT, tB, tR))
       .filter { case (a, b, _) => bIds(a) || bIds(b) }
@@ -101,28 +102,28 @@ class BandEmbIndexSpec extends SparkTestBase {
       .filter(col("tbl") === 0))
     assert(BandEmbIndex.coded(wh).count() === nA * tT + nB)
     // the redelivered batch completes precisely the missing tables
-    BandEmbIndex.appendBatch(wh, partB, tT, tB)
+    banded.append(wh, banded.codedOf(partB))
     assert(BandEmbIndex.coded(wh).count() === (nA + nB) * tT)
     // and a full replay adds nothing
-    BandEmbIndex.appendBatch(wh, partB, tT, tB)
+    banded.append(wh, banded.codedOf(partB))
     assert(BandEmbIndex.coded(wh).count() === (nA + nB) * tT)
     val dups = BandEmbIndex.coded(wh).groupBy(col("vec_id"), col("tbl"))
       .agg(count(lit(1)).as("n")).filter(col("n") > 1).count()
     assert(dups === 0L, "append left a duplicated (vec_id, tbl) row")
     // the grown index probes like a reseeded one (empty batch sanity)
-    assert(BandEmbIndex.incrementCosinePairs(wh,
-      embAll.filter(lit(false)), tT, tB, tR).isEmpty)
+    assert(banded.incrementPairs(wh,
+      banded.codedOf(embAll.filter(lit(false)))).isEmpty)
   }
 
   test("a fully-replayed append commits NO files (the empty-fresh write skip)") {
     val wh = tmpWh()
     BandEmbIndex.seed(wh, partA, tT, tB)
-    BandEmbIndex.appendBatch(wh, partB, tT, tB)
+    banded.append(wh, banded.codedOf(partB))
     val files = BandEmbIndex.coded(wh).inputFiles.toSet
     // replay: the anti-join leaves zero fresh rows — the partitioned
     // write machinery must not run at all (Frames.writeNonEmpty), so the
     // live generation's file set is bit-identical, not merely row-equal
-    BandEmbIndex.appendBatch(wh, partB, tT, tB)
+    banded.append(wh, banded.codedOf(partB))
     assert(BandEmbIndex.coded(wh).inputFiles.toSet === files,
       "replayed append touched the live file set")
   }
@@ -289,8 +290,8 @@ class BandEmbIndexSpec extends SparkTestBase {
 
   test("seedBandedEmbeddings + ingestBandedEmbeddingBatch == full banded recluster; replay no-op") {
     val wh = tmpWh()
-    ClusterState.seedBandedEmbeddings(wh, partA, tT, tB, tR)
-    ClusterState.ingestBandedEmbeddingBatch(wh, partB, tT, tB, tR)
+    ClusterState.seedCorpus(wh, banded, partA)
+    ClusterState.ingestBatch(wh, banded, partB)
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq
     val expect = rows(TextOps.dedupClustersOf(
       embAll.select(col("vec_id").as("doc_id")).distinct(),
@@ -300,21 +301,21 @@ class BandEmbIndexSpec extends SparkTestBase {
     assert(expect.nonEmpty, "clustered fixture produced no clusters — the claim checked nothing")
     val idxN = BandEmbIndex.coded(wh).count()
     assert(idxN === embAll.count() * tT)
-    ClusterState.ingestBandedEmbeddingBatch(wh, partB, tT, tB, tR) // crash-replay
+    ClusterState.ingestBatch(wh, banded, partB) // crash-replay
     assert(rows(ClusterState.clusters(wh)) === expect)
     assert(BandEmbIndex.coded(wh).count() === idxN)
   }
 
   test("streamed banded maintenance == full banded recluster (micro-batches)") {
     val wh = tmpWh()
-    ClusterState.seedBandedEmbeddings(wh, partA, tT, tB, tR)
+    ClusterState.seedCorpus(wh, banded, partA)
     // part B as TWO micro-batches, each one local frame through the
     // banded ingest
     val bRows = partB.select("vec_id", "embedding").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
     val (b1, b2) = bRows.splitAt(bRows.length / 2)
     for (b <- Seq(b1, b2))
-      ClusterState.ingestBandedEmbeddingBatch(wh, b.toDF("vec_id", "embedding"), tT, tB, tR)
+      ClusterState.ingestBatch(wh, banded, b.toDF("vec_id", "embedding"))
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq
     assert(rows(ClusterState.clusters(wh)) ===
       rows(TextOps.dedupClustersOf(

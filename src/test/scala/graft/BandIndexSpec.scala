@@ -25,11 +25,12 @@ class BandIndexSpec extends SparkTestBase {
   private val docsAll = graft.core.Tables.documents(spark, sf())
   private val partA = docsAll.filter(TextOps.splitBucket(col("doc_id")) < 50)
   private val partB = docsAll.filter(TextOps.splitBucket(col("doc_id")) >= 50)
+  private val text = BandIndex.Family
 
   test("index-probed increment pairs == full-corpus pairs restricted to the batch's neighborhood") {
     val wh = tmpWh()
     BandIndex.seed(wh, partA)
-    val inc = pairSet(BandIndex.incrementCandidatePairs(wh, partB))
+    val inc = pairSet(text.incrementPairs(wh, text.codedOf(partB)))
     val bIds = partB.select("doc_id").collect().map(_.getLong(0)).toSet
     val full = pairSet(TextOps.minhashPairsOf(docsAll))
       .filter { case (a, b, _) => bIds(a) || bIds(b) }
@@ -132,8 +133,8 @@ class BandIndexSpec extends SparkTestBase {
 
   test("seedCorpus + ingestBatch == full recluster; replayed batch is a no-op; append idempotent") {
     val wh = tmpWh()
-    ClusterState.seedCorpus(wh, partA)
-    ClusterState.ingestBatch(wh, partB)
+    ClusterState.seedCorpus(wh, text, partA)
+    ClusterState.ingestBatch(wh, text, partB)
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq
     val expect = rows(TextOps.dedupClustersOf(
       docsAll.select(col("doc_id")).distinct(), TextOps.minhashPairsOf(docsAll)))
@@ -144,7 +145,7 @@ class BandIndexSpec extends SparkTestBase {
     assert(BandIndex.banded(wh).select("doc_id").distinct().count() === docsAll.count())
     // a crashed orchestrator replays the whole batch: state unchanged,
     // no duplicate index rows, presentation identical
-    ClusterState.ingestBatch(wh, partB)
+    ClusterState.ingestBatch(wh, text, partB)
     assert(rows(ClusterState.clusters(wh)) === expect)
     assert(BandIndex.banded(wh).count() === idxRows)
   }
@@ -155,13 +156,13 @@ class BandIndexSpec extends SparkTestBase {
     // two separate appends: every touched bk_bucket dir accrues one file
     // per batch on top of the seed's — the small-files growth compact
     // exists to reverse
-    BandIndex.appendBatch(wh, partB.filter(col("doc_id") % 2 === 0))
-    BandIndex.appendBatch(wh, partB.filter(col("doc_id") % 2 === 1))
+    text.append(wh, text.codedOf(partB.filter(col("doc_id") % 2 === 0)))
+    text.append(wh, text.codedOf(partB.filter(col("doc_id") % 2 === 1)))
     def raw() = wh.read(BandIndex.TableName, BandIndex.Schema)
     def rowSet() = raw().collect().map(_.toSeq).toSet
     val (rowsBefore, nBefore) = (rowSet(), raw().count())
     val filesBefore = raw().inputFiles.length
-    val pairsBefore = pairSet(BandIndex.incrementCandidatePairs(wh, partB))
+    val pairsBefore = pairSet(text.incrementPairs(wh, text.codedOf(partB)))
     BandIndex.compact(wh)
     assert(raw().count() === nBefore)
     assert(rowSet() === rowsBefore, "compact changed row content")
@@ -170,16 +171,16 @@ class BandIndexSpec extends SparkTestBase {
       s"compact did not reduce files ($filesBefore -> $filesAfter)")
     // one file per partition directory
     assert(filesAfter === raw().select("bk_bucket").distinct().count().toInt)
-    assert(pairSet(BandIndex.incrementCandidatePairs(wh, partB)) === pairsBefore)
+    assert(pairSet(text.incrementPairs(wh, text.codedOf(partB))) === pairsBefore)
   }
 
   test("reconcile after an honest ingest reports zero drift and leaves full-recluster state") {
     val wh = tmpWh()
-    ClusterState.seedCorpus(wh, partA)
-    ClusterState.ingestBatch(wh, partB)
+    ClusterState.seedCorpus(wh, text, partA)
+    ClusterState.ingestBatch(wh, text, partB)
     // no bucket crosses the cap at this scale: increment == full, so the
     // full rebuild changes nothing and the measured drift is exactly 0
-    assert(ClusterState.reconcile(wh, docsAll) === 0L)
+    assert(ClusterState.reconcile(wh, text, docsAll) === 0L)
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq
     assert(rows(ClusterState.clusters(wh)) === rows(TextOps.dedupClustersOf(
       docsAll.select(col("doc_id")).distinct(), TextOps.minhashPairsOf(docsAll))))
@@ -225,7 +226,7 @@ class BandIndexSpec extends SparkTestBase {
         .withColumn("corpus_stamp", lit("append")),
       partitionBy = Seq("bk_bucket"))
     // the orchestrator replays the batch
-    BandIndex.appendBatch(wh, partB)
+    text.append(wh, text.codedOf(partB))
     val got = BandIndex.banded(wh)
     val expect = BandIndex.bandedOf(docsAll)
     assert(got.count() === expect.count(), "replay did not complete the missing bands, or duplicated rows")
@@ -236,13 +237,13 @@ class BandIndexSpec extends SparkTestBase {
 
   test("streamed cluster maintenance == full recluster (micro-batches through ingestBatch)") {
     val wh = tmpWh()
-    ClusterState.seedCorpus(wh, partA)
+    ClusterState.seedCorpus(wh, text, partA)
     // part B arrives as TWO micro-batches of (doc_id, text), each one
     // local frame through ingestBatch
     val bRows = partB.select("doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq
     val (b1, b2) = bRows.splitAt(bRows.length / 2)
-    for (b <- Seq(b1, b2)) ClusterState.ingestBatch(wh, b.toDF("doc_id", "text"))
+    for (b <- Seq(b1, b2)) ClusterState.ingestBatch(wh, text, b.toDF("doc_id", "text"))
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq
     assert(rows(ClusterState.clusters(wh)) ===
       rows(TextOps.dedupClustersOf(
@@ -253,13 +254,13 @@ class BandIndexSpec extends SparkTestBase {
 
   test("maintain: compacts append litter, bounds generations, probe results unchanged") {
     val wh = tmpWh()
-    ClusterState.seedCorpus(wh, partA)
+    ClusterState.seedCorpus(wh, text, partA)
     // several small batches → per-batch file litter + state generations
     val bRows = partB.select("doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq
     import spark.implicits._
     bRows.grouped(math.max(1, bRows.length / 3)).foreach { g =>
-      ClusterState.ingestBatch(wh, g.toDF("doc_id", "text"))
+      ClusterState.ingestBatch(wh, text, g.toDF("doc_id", "text"))
     }
     val before = ClusterState.clusters(wh).collect().map(_.toSeq).toSeq
     val filesBefore = BandIndex.banded(wh).inputFiles.length
@@ -275,7 +276,8 @@ class BandIndexSpec extends SparkTestBase {
     // results byte-identical through the maintenance pass
     assert(ClusterState.clusters(wh).collect().map(_.toSeq).toSeq === before)
     // ...and the NEXT increment still works against the compacted index
-    ClusterState.ingestBatch(wh, Seq((999999L, "maintenance pass sanity row")).toDF("doc_id", "text"))
+    ClusterState.ingestBatch(wh, text,
+      Seq((999999L, "maintenance pass sanity row")).toDF("doc_id", "text"))
     assert(ClusterState.read(wh).filter(col("doc_id") === 999999L).count() === 1)
   }
 

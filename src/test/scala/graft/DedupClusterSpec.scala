@@ -87,13 +87,15 @@ class DedupClusterSpec extends SparkTestBase {
     val viaLocal = result() // no checkpoint dir: localCheckpoint path
     val ckDir = java.nio.file.Files.createTempDirectory("graft_ck_").toString
     spark.sparkContext.setCheckpointDir(ckDir)
-    val viaReliable = result()
-    assert(viaReliable === viaLocal)
-    // the reliable path actually wrote checkpoint state (executor-loss
-    // durable at scale, unlike localCheckpoint's executor memory)
-    def count(dir: java.io.File): Int =
-      Option(dir.listFiles()).map(_.map(f => if (f.isDirectory) count(f) else 1).sum).getOrElse(0)
-    assert(count(new java.io.File(ckDir)) > 0, "no reliable checkpoint files written")
+    try {
+      val viaReliable = result()
+      assert(viaReliable === viaLocal)
+      // the reliable path actually wrote checkpoint state (executor-loss
+      // durable at scale, unlike localCheckpoint's executor memory)
+      def count(dir: java.io.File): Int =
+        Option(dir.listFiles()).map(_.map(f => if (f.isDirectory) count(f) else 1).sum).getOrElse(0)
+      assert(count(new java.io.File(ckDir)) > 0, "no reliable checkpoint files written")
+    } finally org.apache.spark.CheckpointDirs.clear(spark.sparkContext)
   }
 
   test("local union-find fallback == distributed loop, incl. foreign-endpoint exclusion") {

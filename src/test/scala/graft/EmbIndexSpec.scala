@@ -25,11 +25,12 @@ class EmbIndexSpec extends SparkTestBase {
   private val embAll = graft.core.Tables.embeddings(spark, sf())
   private val partA = embAll.filter(TextOps.splitBucket(col("vec_id")) < 50)
   private val partB = embAll.filter(TextOps.splitBucket(col("vec_id")) >= 50)
+  private val single = EmbIndex.Family()
 
   test("index-probed cosine pairs == full t15 pairs restricted to the batch's neighborhood") {
     val wh = tmpWh()
     EmbIndex.seed(wh, partA)
-    val inc = pairSet(EmbIndex.incrementCosinePairs(wh, partB))
+    val inc = pairSet(single.incrementPairs(wh, single.codedOf(partB)))
     val bIds = partB.select("vec_id").collect().map(_.getLong(0)).toSet
     val full = pairSet(TextOps.t15CosineNearDupOf(embAll))
       .filter { case (a, b, _) => bIds(a) || bIds(b) }
@@ -106,15 +107,15 @@ class EmbIndexSpec extends SparkTestBase {
     val wh = tmpWh()
     val v = Array.fill(Lsh.Dim)(0.25f)
     def frame(ids: Long*) = ids.map(i => (i, v)).toDF("vec_id", "embedding")
-    ClusterState.seedEmbeddings(wh, frame(1L, 2L), maxBucket = 3)
-    ClusterState.ingestEmbeddingBatch(wh, frame(3L, 4L), maxBucket = 3)
+    ClusterState.seedCorpus(wh, EmbIndex.Family(maxBucket = 3), frame(1L, 2L))
+    ClusterState.ingestBatch(wh, EmbIndex.Family(maxBucket = 3), frame(3L, 4L))
     // one cluster of size 2 presents one row per member
     assert(ClusterState.clusters(wh).count() === 2L, "seed did not cluster (1,2)")
     assert(TextOps.t15CosineNearDupOf(frame(1L, 2L, 3L, 4L), maxBucket = 3).count() === 0L,
       "fixture broken: the full pipeline at cap 3 should emit no pairs")
     // rebuild measures exactly the one stale label (doc 2 reverts 1 → 2)
     // and leaves the state equal to the full recluster: all singletons
-    assert(ClusterState.reconcileEmbeddings(wh, frame(1L, 2L, 3L, 4L), maxBucket = 3) === 1L)
+    assert(ClusterState.reconcile(wh, EmbIndex.Family(maxBucket = 3), frame(1L, 2L, 3L, 4L)) === 1L)
     assert(ClusterState.clusters(wh).count() === 0L)
   }
 
@@ -149,17 +150,17 @@ class EmbIndexSpec extends SparkTestBase {
     val wh = tmpWh()
     val v = Array.fill(Lsh.Dim)(0.25f)
     def frame(ids: Long*) = ids.map(i => (i, v)).toDF("vec_id", "embedding")
-    ClusterState.seedEmbeddings(wh, frame(1L, 2L), maxBucket = 3)
-    ClusterState.ingestEmbeddingBatch(wh, frame(3L, 4L), maxBucket = 3)
+    ClusterState.seedCorpus(wh, EmbIndex.Family(maxBucket = 3), frame(1L, 2L))
+    ClusterState.ingestBatch(wh, EmbIndex.Family(maxBucket = 3), frame(3L, 4L))
     assert(ClusterState.clusters(wh).count() === 2L, "fixture: seed did not cluster (1,2)")
     val rep = ClusterState.maintain(wh,
-      reconcileEmb = Some(frame(1L, 2L, 3L, 4L)), embMaxBucket = 3)
+      reconcileWith = Seq(EmbIndex.Family(maxBucket = 3) -> frame(1L, 2L, 3L, 4L)))
     assert(rep.drift === Some(1L), s"expected the one stale label, got ${rep.drift}")
     assert(rep.driftAlerted, "drift above the threshold did not alert")
     assert(ClusterState.clusters(wh).count() === 0L, "maintain did not repair the state")
     // a second pass over the repaired state measures zero drift, no alert
     val rep2 = ClusterState.maintain(wh,
-      reconcileEmb = Some(frame(1L, 2L, 3L, 4L)), embMaxBucket = 3)
+      reconcileWith = Seq(EmbIndex.Family(maxBucket = 3) -> frame(1L, 2L, 3L, 4L)))
     assert(rep2.drift === Some(0L) && !rep2.driftAlerted)
     // maintenance without a reconcile corpus stays measurement-free
     assert(ClusterState.maintain(wh).drift.isEmpty)
@@ -168,21 +169,21 @@ class EmbIndexSpec extends SparkTestBase {
   test("appendBatch is replay-idempotent; grown index probes like a reseeded one") {
     val wh = tmpWh()
     EmbIndex.seed(wh, partA)
-    EmbIndex.appendBatch(wh, partB)
+    single.append(wh, single.codedOf(partB))
     val n = EmbIndex.coded(wh).count()
     assert(n === embAll.count())
-    EmbIndex.appendBatch(wh, partB) // replay
+    single.append(wh, single.codedOf(partB)) // replay
     assert(EmbIndex.coded(wh).count() === n)
     // the grown index serves a LATER batch exactly like a fresh seed of
     // the union would (empty batch here — sanity no-pair path)
-    assert(EmbIndex.incrementCosinePairs(wh,
-      embAll.filter(lit(false))).isEmpty)
+    assert(single.incrementPairs(wh,
+      single.codedOf(embAll.filter(lit(false)))).isEmpty)
   }
 
   test("seedEmbeddings + ingestEmbeddingBatch == full t34-style recluster; replay no-op") {
     val wh = tmpWh()
-    ClusterState.seedEmbeddings(wh, partA)
-    ClusterState.ingestEmbeddingBatch(wh, partB)
+    ClusterState.seedCorpus(wh, single, partA)
+    ClusterState.ingestBatch(wh, single, partB)
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq
     val expect = rows(TextOps.dedupClustersOf(
       embAll.select(col("vec_id").as("doc_id")).distinct(),
@@ -191,7 +192,7 @@ class EmbIndexSpec extends SparkTestBase {
     assert(rows(ClusterState.clusters(wh)) === expect)
     val idxN = EmbIndex.coded(wh).count()
     assert(idxN === embAll.count())
-    ClusterState.ingestEmbeddingBatch(wh, partB) // crash-replay
+    ClusterState.ingestBatch(wh, single, partB) // crash-replay
     assert(rows(ClusterState.clusters(wh)) === expect)
     assert(EmbIndex.coded(wh).count() === idxN)
   }

@@ -106,7 +106,8 @@ class IncrementalCurationSpec extends SparkTestBase {
       val (c2, a2) = IncrementalCuration.ingest(wh, partB, emb = Some(EmbeddingSignal(embB)))
       assert(ids(c2) === ids(curB))
       assert(a2.collect().head.toSeq === audit.toSeq)
-      assert(BandEmbIndex.coded(wh).count() === embAll.count() * sigAll.resolvedTables,
+      assert(BandEmbIndex.coded(wh).count() ===
+        embAll.count() * BandEmbIndex.Family().resolvedTables,
         "vector index grew on replay")
     } finally run.close()
   }

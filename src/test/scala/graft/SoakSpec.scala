@@ -119,6 +119,7 @@ class SoakSpec extends SparkTestBase {
     import graft.queries.{BandEmbIndex, TextOps}
     import graft.tools.ScaleData
     val (tT, tB, tR) = (3, 8, 1)
+    val banded = BandEmbIndex.Family(tT, tB, tR)
     // clustered geometry (the corpus shape the banded family exists
     // for), md5-split into the lifecycle's seed + 20 batches
     val embAll = ScaleData.clusteredEmbeddings(spark, 600, nCenters = 20, noise = 0.04)
@@ -128,12 +129,12 @@ class SoakSpec extends SparkTestBase {
     def bound(b: Int): Int = 50 + b * 50 / 20
     val wh = graft.etl.Warehouse(spark,
       java.nio.file.Files.createTempDirectory("graft_soak_band_").toString)
-    ClusterState.seedBandedEmbeddings(wh, slice(0, 50), tT, tB, tR)
+    ClusterState.seedCorpus(wh, banded, slice(0, 50))
 
     def indexFiles: Int = BandEmbIndex.coded(wh).inputFiles.length
     val drifts = scala.collection.mutable.Map.empty[Int, Long]
     for (b <- 1 to 20) {
-      ClusterState.ingestBandedEmbeddingBatch(wh, slice(bound(b - 1), bound(b)), tT, tB, tR)
+      ClusterState.ingestBatch(wh, banded, slice(bound(b - 1), bound(b)))
       if (b % 5 == 0) {
         // inject a wrong label right before the batch-10 maintenance:
         // the reconcile must measure it as drift and repair it
@@ -149,12 +150,11 @@ class SoakSpec extends SparkTestBase {
         // probe (replay-exact by contract) must see identical pairs
         // before and after the maintenance pass
         val probe = slice(bound(b - 1), bound(b))
-        def probePairs = BandEmbIndex.incrementCosinePairs(wh, probe, tT, tB, tR)
+        def probePairs = banded.incrementPairs(wh, banded.codedOf(probe))
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
         val before = probePairs
         val preFiles = indexFiles
-        drifts(b) = ClusterState.reconcileBandedEmbeddings(
-          wh, slice(0, bound(b)), tT, tB, tR)
+        drifts(b) = ClusterState.reconcile(wh, banded, slice(0, bound(b)))
         val rep = ClusterState.maintain(wh, retainLast = 3)
         assert(rep.duplicateIds.values.forall(_ == 0L))
         assert(probePairs === before,
@@ -180,7 +180,7 @@ class SoakSpec extends SparkTestBase {
     // final cluster state == a from-scratch banded recluster of the corpus
     val fresh = graft.etl.Warehouse(spark,
       java.nio.file.Files.createTempDirectory("graft_soak_band_fresh_").toString)
-    ClusterState.seedBandedEmbeddings(fresh, embAll, tT, tB, tR)
+    ClusterState.seedCorpus(fresh, banded, embAll)
     def clusterSets(w: graft.etl.Warehouse) = ClusterState.clusters(w)
       .groupBy(col("cluster")).agg(sort_array(collect_list(col("doc_id"))).as("m"))
       .select(col("m")).collect().map(_.getSeq[Long](0)).toSet
